@@ -75,7 +75,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .text import (
-    _read_search_store,
+    _resolve_search_store,
     analyze_store_terms,
     expand_fuzzy_terms,
     expand_wildcard_terms,
@@ -346,9 +346,11 @@ class _Ctx:
         # "title" etc. each carry their own index + analyzer); the
         # main store serves the default "text" field
         self.field_stores = dict(field_stores or {})
-        self.postings, self.docstats = _read_search_store(
-            spark, store_path
-        )
+        view = _resolve_search_store(spark, store_path)
+        self.postings, self.docstats = view.postings, view.docstats
+        # corpus statistics of a snapshotted mutated store (else None:
+        # build_weights aggregates docstats)
+        self.n_docs, self.avgdl = view.n_docs, view.avgdl
         self.wtok = None  # (doc, token, w), checkpointed
 
     def analyze(self, text) -> list:
@@ -367,29 +369,35 @@ class _Ctx:
         n_t = tf.groupBy("token").agg(
             F.countDistinct("doc").alias("df_t")
         )
-        stats = self.docstats.agg(
-            F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl")
+        rows = tf.join(F.broadcast(n_t), "token").join(
+            self.docstats.select("doc", "dl"), "doc"
         )
+        if self.n_docs is None:
+            rows = rows.crossJoin(
+                F.broadcast(
+                    self.docstats.agg(
+                        F.count("*").alias("n_docs"),
+                        F.avg("dl").alias("avgdl"),
+                    )
+                )
+            )
+            n_docs, avgdl = F.col("n_docs"), F.col("avgdl")
+        else:
+            n_docs = F.lit(self.n_docs).cast("long")
+            avgdl = F.lit(self.avgdl).cast("double")
         idf = F.log(
-            (F.col("n_docs") - F.col("df_t") + 0.5)
-            / (F.col("df_t") + 0.5)
-            + 1.0
+            (n_docs - F.col("df_t") + 0.5) / (F.col("df_t") + 0.5) + 1.0
         )
         w = idf * (
             F.col("tf") * (self.k1 + 1)
             / (
                 F.col("tf")
-                + self.k1
-                * (1 - self.b + self.b * F.col("dl") / F.col("avgdl"))
+                + self.k1 * (1 - self.b + self.b * F.col("dl") / avgdl)
             )
         )
-        self.wtok = (
-            tf.join(F.broadcast(n_t), "token")
-            .join(self.docstats.select("doc", "dl"), "doc")
-            .crossJoin(F.broadcast(stats))
-            .select("doc", "token", w.alias("w"))
-            .localCheckpoint(eager=True)
-        )
+        self.wtok = rows.select(
+            "doc", "token", w.alias("w")
+        ).localCheckpoint(eager=True)
 
     def zero(self) -> DataFrame:
         return self.spark.createDataFrame([], "doc long, score double")

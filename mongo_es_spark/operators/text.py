@@ -10,7 +10,8 @@ from __future__ import annotations
 
 import os
 import re
-from typing import Mapping, Sequence
+import threading
+from typing import Mapping, NamedTuple, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -1520,42 +1521,130 @@ def _bm_live_docstats(docstats: DataFrame) -> DataFrame:
     )
 
 
+def _listing_key(*dirs: str):
+    """The exact file listing ``(name, size, mtime_ns)`` of each
+    directory, or ``None`` when one cannot be listed (missing, or a
+    non-local path without ``os.scandir``).  Every store write lands
+    new UUID part-filenames, so a fold or compaction changes the
+    listing: a cache keyed on it never serves stale content."""
+    try:
+        return tuple(
+            (
+                os.path.abspath(d),
+                tuple(
+                    sorted(
+                        (e.name, e.stat().st_size, e.stat().st_mtime_ns)
+                        for e in os.scandir(d)
+                        if e.is_file()
+                    )
+                ),
+            )
+            for d in dirs
+        )
+    except OSError:
+        return None
+
+
 _PARAMS_ROW_CACHE: dict = {}
 
 
 def _store_params_row(spark, store_path: str):
     """The store's one-row ``_bm_params`` as a dict, cached on the
-    params directory's exact file listing (name, size, mtime_ns):
-    every rewrite lands new UUID part-filenames, so any fold /
-    compaction invalidates the entry and a hit never serves stale
-    params.  Serving queries consult params twice (analyzer + mutated
-    flag); without the cache each consult is a full parquet
-    open-footer-read job.  Non-local paths (no ``os.scandir``) fall
-    back to an uncached read."""
-    from ..storeio import read_parquet_if_exists
+    params directory's file listing (:func:`_listing_key`).  Serving
+    queries consult params twice (analyzer + mutated flag); without
+    the cache each consult is a full parquet open-footer-read job.
+    Non-local paths fall back to an uncached read."""
+    from ..storeio import read_params_dir
 
     path = _bm_params_path(store_path)
-    key = None
-    try:
-        entries = tuple(
-            sorted(
-                (e.name, e.stat().st_size, e.stat().st_mtime_ns)
-                for e in os.scandir(path)
-                if e.is_file()
-            )
-        )
-        key = (os.path.abspath(path), entries)
-    except OSError:
-        key = None
+    key = _listing_key(path)
     if key is not None and key in _PARAMS_ROW_CACHE:
         return _PARAMS_ROW_CACHE[key]
-    params = read_parquet_if_exists(spark, path)
+    params = read_params_dir(spark, path)
     row = params.head().asDict() if params is not None else None
     if key is not None:
         if len(_PARAMS_ROW_CACHE) > 64:
             _PARAMS_ROW_CACHE.clear()
         _PARAMS_ROW_CACHE[key] = row
     return row
+
+
+class _StoreView(NamedTuple):
+    """A store resolved to its live rows (:func:`_resolve_search_store`).
+    ``n_docs``/``avgdl`` are the corpus statistics of a snapshotted
+    mutated store, ``None`` where the caller aggregates ``docstats``
+    itself."""
+
+    postings: DataFrame | None
+    docstats: DataFrame | None
+    n_docs: int | None = None
+    avgdl: float | None = None
+
+
+# Reader snapshots of mutated stores, one per store path, least
+# recently used first: abspath -> (key, live docstats frame (local
+# checkpoint, with ``gen``), n_docs, avgdl).  The key is the docstats +
+# params file listings plus the Spark application id, so any fold or
+# compaction and any session restart misses.  A replaced or evicted
+# entry's blocks are released at once (entries of a stopped
+# application are only dropped — their blocks died with it), so a
+# frame built on a superseded snapshot must be collected before the
+# store's next generation is resolved.
+_SNAPSHOTS: dict = {}
+_SNAPSHOT_MAX = 8
+_SNAPSHOT_LOCK = threading.Lock()
+
+
+def _drop_snapshot(spark, ent) -> None:
+    from ..sparkutil import release_checkpoint
+
+    if ent[0][0] == spark.sparkContext.applicationId:
+        release_checkpoint(ent[1])
+
+
+def _live_snapshot(spark, store_path: str, docstats: DataFrame):
+    """``(live docstats with gen, n_docs, avgdl)`` of a mutated store,
+    resolved once per store generation: the live window runs once into
+    a local checkpoint and the corpus statistics are aggregated from
+    it; requests then semi-join the postings against the checkpointed
+    ``(doc, gen)`` set.  A store whose listing cannot be read is
+    resolved per call (``n_docs`` None)."""
+    listing = _listing_key(
+        _bm_docstats_path(store_path), _bm_params_path(store_path)
+    )
+    if listing is None:
+        return _bm_live_docstats(docstats).drop("sig", "deleted"), None, None
+    key = (spark.sparkContext.applicationId, listing)
+    path = os.path.abspath(store_path)
+    with _SNAPSHOT_LOCK:
+        ent = _SNAPSHOTS.pop(path, None)
+        if ent is not None and ent[0] == key:
+            _SNAPSHOTS[path] = ent
+            return ent[1:]
+        if ent is not None:
+            _drop_snapshot(spark, ent)
+        live = (
+            _bm_live_docstats(docstats)
+            .drop("sig", "deleted")
+            .localCheckpoint(eager=True)
+        )
+        row = live.agg(
+            F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl")
+        ).head()
+        ent = (key, live, int(row["n_docs"]), row["avgdl"])
+        _SNAPSHOTS[path] = ent
+        while len(_SNAPSHOTS) > _SNAPSHOT_MAX:
+            _drop_snapshot(spark, _SNAPSHOTS.pop(next(iter(_SNAPSHOTS))))
+    return ent[1:]
+
+
+def _forget_snapshot(spark, store_path: str) -> None:
+    """Drop the store's reader snapshot, if any (it left the mutated
+    state, or its files are gone)."""
+    with _SNAPSHOT_LOCK:
+        ent = _SNAPSHOTS.pop(os.path.abspath(store_path), None)
+        if ent is not None:
+            _drop_snapshot(spark, ent)
 
 
 def store_analyzer(spark, store_path: str):
@@ -1587,7 +1676,7 @@ def analyze_store_terms(
     return an.analyze_terms(terms)
 
 
-def _read_search_store(spark, store_path: str):
+def _resolve_search_store(spark, store_path: str) -> _StoreView:
     """Resolve the store to its LIVE rows with the legacy reader
     shape: ``postings (token, doc, tf, pos)`` and ``docstats (doc, dl,
     fields…)``.  Three store states:
@@ -1596,11 +1685,21 @@ def _read_search_store(spark, store_path: str):
     * scheme-3, never mutated (params flag) — bookkeeping columns
       dropped, zero extra cost;
     * mutated — docstats resolve to latest-generation non-tombstone
-      rows (one docstats-sized window), postings semi-join the live
-      ``(doc, gen)`` pairs (token pushdown still reaches the scan —
-      the filter sits below the join on the postings side).
+      rows, postings semi-join the live ``(doc, gen)`` pairs (token
+      pushdown still reaches the scan — the filter sits below the
+      join on the postings side).
 
-    Returns ``(None, None)`` when either store is missing.
+    A mutated store is served from a reader snapshot pinned to its
+    generation, as a search engine pins a searcher until the next
+    refresh (:func:`_live_snapshot`): the live-docstats window and the
+    ``n_docs``/``avgdl`` aggregate run once, not per request, and the
+    view carries those statistics for the scorers.  The snapshot is
+    keyed on the docstats and params file listings plus the Spark
+    application id, so the next fold or compaction, or a new session,
+    resolves afresh; a store that returns to ``mutated=false`` (or
+    disappears) drops its snapshot.
+
+    Returns ``_StoreView(None, None)`` when either store is missing.
     """
     from ..storeio import read_parquet_if_exists
 
@@ -1611,21 +1710,28 @@ def _read_search_store(spark, store_path: str):
         spark, _bm_docstats_path(store_path)
     )
     if postings is None or docstats is None:
-        return None, None
-    if "gen" not in docstats.columns:
-        return postings, docstats
-    p_row = _store_params_row(spark, store_path)
-    mutated = bool(p_row.get("mutated")) if p_row is not None else False
-    if not mutated:
-        return (
-            postings.drop("gen"),
-            docstats.drop("sig", "gen", "deleted"),
+        view = _StoreView(None, None)
+    elif "gen" not in docstats.columns:
+        view = _StoreView(postings, docstats)
+    elif not (_store_params_row(spark, store_path) or {}).get("mutated"):
+        view = _StoreView(
+            postings.drop("gen"), docstats.drop("sig", "gen", "deleted")
         )
-    live = _bm_live_docstats(docstats)
-    live_postings = postings.join(
-        live.select("doc", "gen"), ["doc", "gen"], "left_semi"
-    ).drop("gen")
-    return live_postings, live.drop("sig", "gen", "deleted")
+    else:
+        live, n_docs, avgdl = _live_snapshot(spark, store_path, docstats)
+        live_postings = postings.join(
+            live.select("doc", "gen"), ["doc", "gen"], "left_semi"
+        ).drop("gen")
+        return _StoreView(live_postings, live.drop("gen"), n_docs, avgdl)
+    _forget_snapshot(spark, store_path)
+    return view
+
+
+def _read_search_store(spark, store_path: str):
+    """``(postings, docstats)`` of :func:`_resolve_search_store` — the
+    live frames every ``*_over_store`` helper serves from."""
+    view = _resolve_search_store(spark, store_path)
+    return view.postings, view.docstats
 
 
 def bm25_over_store(
@@ -4437,15 +4543,11 @@ def compact_bm25_store(
     (:func:`mongo_es_spark.storeio.rewrite_store`): single-writer
     maintenance op, re-runs self-heal.  Returns per-store file counts.
     """
-    from ..storeio import (
-        list_data_files,
-        read_parquet_if_exists,
-        rewrite_store,
-    )
+    from ..storeio import list_data_files, read_params_dir, rewrite_store
 
     p = _bm_postings_path(store_path)
     d = _bm_docstats_path(store_path)
-    params = read_parquet_if_exists(spark, _bm_params_path(store_path))
+    params = read_params_dir(spark, _bm_params_path(store_path))
     prow = params.head() if params is not None else None
     mutated = (
         prow is not None

@@ -73,6 +73,16 @@ def get_spark(app_name: str = "mongo-es-spark", shuffle_partitions: int | None =
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
+        # Tungsten page size.  Spark derives it from heap and cores
+        # (16 MB for a 2g driver on 4 cores), and every broadcast hash
+        # relation on a non-long key takes one whole page when an
+        # executor deserializes it, however few rows it holds.  Search requests
+        # broadcast small relations (query tokens, the live (doc, gen)
+        # set), and each page stays in the block manager until the
+        # ContextCleaner drops its broadcast after some later GC.
+        # 1 MB is Spark's own floor; larger inputs get more pages
+        # (records bigger than a page still get a page of their own).
+        .config("spark.buffer.pageSize", "1m")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
     # opt-in event log for offline profiling (tools/profile_query.py)

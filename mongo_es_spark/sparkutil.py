@@ -24,23 +24,34 @@ end), and the count comes back for free.
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 
-__all__ = ["sever_count"]
+__all__ = ["release_checkpoint", "sever_count"]
 
 
 def sever_count(df: DataFrame) -> tuple[DataFrame, int]:
     """Local-checkpoint ``df`` and return ``(severed_df, row_count)``
     in ONE Spark job (vs three for eager-checkpoint + DataFrame
-    count).  Falls back to the public two-job path if the internal
-    RDD handle is unavailable (e.g. Spark Connect)."""
+    count).  Falls back to the public two-job path only when the
+    internal RDD handle is unavailable (e.g. Spark Connect: no
+    ``_jdf``, or a JVM without the method); an error raised while the
+    count runs propagates instead of re-running the plan."""
     out = df.localCheckpoint(eager=False)
     try:
-        # JVM-side count over the checkpoint-marked internal RDD:
-        # single stage, no Python row traffic, materializes the
-        # checkpoint as a side effect.
-        n = out._jdf.queryExecution().toRdd().count()
-    except Exception:
+        rdd = out._jdf.queryExecution().toRdd()
+    except (AttributeError, Py4JError):
         out = df.localCheckpoint(eager=True)
-        n = out.count()
-    return out, int(n)
+        return out, int(out.count())
+    # JVM-side count over the checkpoint-marked internal RDD: single
+    # stage, no Python row traffic, materializes the checkpoint as a
+    # side effect.
+    return out, int(rdd.count())
+
+
+def release_checkpoint(df: DataFrame) -> None:
+    """Drop the blocks behind a ``localCheckpoint``-ed frame now
+    instead of whenever the JVM garbage-collects it.
+    ``DataFrame.unpersist`` does not reach them: they belong to the
+    checkpointed RDD under the frame's ``LogicalRDD`` plan."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 __all__ = [
     "read_parquet_if_exists",
+    "read_params_dir",
     "list_data_files",
     "rewrite_store",
     "write_params_row",
@@ -142,7 +143,7 @@ def read_params_rows(spark: SparkSession, path: str):
             except OSError:
                 pass
             del _ROWS_CACHE[key]
-    df = read_parquet_if_exists(spark, path)
+    df = read_params_dir(spark, path)
     if df is None:
         return None
     rows = df.collect()
@@ -178,38 +179,55 @@ def write_params_row(path: str, schema, row: dict) -> None:
     params every fold).  ``schema`` is a ``pyarrow.Schema`` chosen to
     round-trip to the exact Spark types the old writer produced
     (int32/int64/bool/string/list<string>), so cold-session reads
-    infer the same schema as before.
-
-    Crash window: the replacement directory is fully written BEFORE
-    the live one is dropped, so the missing-sidecar window is two
-    renames wide — strictly narrower than Spark's own
-    ``mode("overwrite")`` (delete, then an entire write job).  A
-    leftover ``__new`` from a crash is invisible to readers (the
-    params basename starts with ``_``) and is clobbered by the next
-    write."""
-    import shutil
-    import uuid
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
+    infer the same schema as before.  Crash-safe: see
+    :func:`write_params_table`."""
     write_params_table(path, schema, [row])
+
+
+def _complete(d: str) -> bool:
+    # ``_SUCCESS`` is the last file a params write creates
+    return os.path.isfile(os.path.join(d, "_SUCCESS"))
+
+
+def read_params_dir(spark: SparkSession, path: str) -> Optional[DataFrame]:
+    """:func:`read_parquet_if_exists` of a params sidecar.  After a
+    crash between the two renames of :func:`write_params_table` the
+    live directory is missing but its complete ``__new`` replacement
+    holds the current content: read that, never "store not created".
+    Read-only — the next write finishes the swap."""
+    new = path + "__new"
+    if not os.path.isdir(path) and _complete(new):
+        path = new
+    return read_parquet_if_exists(spark, path)
 
 
 def write_params_table(path: str, schema, rows: list[dict]) -> None:
     """Driver-side overwrite of a SMALL sidecar parquet directory with
     driver-known rows (the multi-row generalization of
     :func:`write_params_row` — e.g. a trained quantizer's centroid
-    table).  Same crash window: replacement fully written before the
-    live directory drops."""
+    table).
+
+    Sequence: write the complete replacement to ``path__new`` (marker
+    ``_SUCCESS`` last), rename the live directory aside to
+    ``path__old``, rename the replacement in, drop the old copy.  At
+    every crash point a complete copy exists: the live directory, or —
+    between the two renames — the complete ``__new``, which readers
+    use (:func:`read_params_dir`) and this function's next call renames
+    into place before it writes.  A leftover ``__new`` without
+    ``_SUCCESS`` is a crashed first step and is discarded; the
+    ``__new``/``__old`` basenames keep the params name's ``_`` prefix,
+    so store readers never see them."""
     import shutil
     import uuid
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    new = path + "__new"
+    new, old = path + "__new", path + "__old"
+    if not os.path.isdir(path) and _complete(new):
+        os.rename(new, path)  # finish a crashed swap
     shutil.rmtree(new, ignore_errors=True)
+    shutil.rmtree(old, ignore_errors=True)
     os.makedirs(new)
     table = pa.Table.from_pylist(rows, schema=schema)
     pq.write_table(
@@ -219,8 +237,10 @@ def write_params_table(path: str, schema, rows: list[dict]) -> None:
     )
     with open(os.path.join(new, "_SUCCESS"), "w"):
         pass
-    shutil.rmtree(path, ignore_errors=True)
+    if os.path.isdir(path):
+        os.rename(path, old)
     os.rename(new, path)
+    shutil.rmtree(old, ignore_errors=True)
 
 
 def read_store(spark: SparkSession, path: str) -> DataFrame:

@@ -3,8 +3,10 @@ from __future__ import annotations
 import json
 import os
 import shlex
+import shutil
 import subprocess
 import sys
+import tempfile
 import threading
 
 import pytest
@@ -24,8 +26,9 @@ def spark():
 # streaming trigger machinery), so a single process leaves most cores
 # idle and the run outgrows the CI verify window.  When the suite is
 # invoked as one process, the run loop below splits the collected tests
-# BY FILE (module-scoped fixtures stay together) into N subprocesses and
-# streams their output.  Each shard is a plain `pytest <node ids>` run in
+# BY FILE (module-scoped fixtures stay together) into N subprocesses,
+# streams their output and replays their test reports, so the parent's
+# summary and exit status count every test.  Each shard is a plain `pytest <node ids>` run in
 # a smaller `local[N]` session, so any subset reproduces by copying the
 # printed command.  SPARK_GRAFT_TEST_WORKERS=1 disables sharding.
 # ---------------------------------------------------------------------------
@@ -58,6 +61,18 @@ def _measured_costs() -> dict[str, float]:
 
 _SHARD_DURATIONS: dict[str, float] = {}
 
+# Each shard also writes every test report, serialized with pytest's own
+# report hooks, one JSON line per report to the file named here; the
+# parent replays them into its session so its summary line, exit status
+# and failure tracebacks cover the whole suite (it runs no test itself).
+_REPORTS_ENV = "_SPARK_GRAFT_TEST_REPORTS"
+_CONFIG: list[pytest.Config] = []
+_REPORTS_FH: list = []
+
+
+def pytest_configure(config):
+    _CONFIG[:] = [config]
+
 
 def pytest_runtest_logreport(report):
     # inside a shard: accumulate wall seconds by file for the balance
@@ -68,6 +83,17 @@ def pytest_runtest_logreport(report):
     _SHARD_DURATIONS[fname] = (
         _SHARD_DURATIONS.get(fname, 0.0) + report.duration
     )
+    path = os.environ.get(_REPORTS_ENV)
+    if path and _CONFIG:
+        if not _REPORTS_FH:
+            _REPORTS_FH.append(open(path, "a"))
+        data = _CONFIG[0].hook.pytest_report_to_serializable(
+            config=_CONFIG[0], report=report
+        )
+        # flushed per line: a shard that dies mid-run still leaves the
+        # reports of every test it finished
+        _REPORTS_FH[0].write(json.dumps(data, default=str) + "\n")
+        _REPORTS_FH[0].flush()
 
 
 def pytest_sessionfinish(session, exitstatus):
@@ -93,6 +119,7 @@ _FILE_COST = {
     "test_extensions.py": 480,
     "test_curate_stream.py": 290,
     "test_search_cdc.py": 260,
+    "test_search_snapshot.py": 150,
     "test_ivf_cdc.py": 150,
     "test_searchapi.py": 130,
     "test_aggs.py": 120,
@@ -106,6 +133,61 @@ _FILE_COST = {
     "test_sink.py": 50,
     "test_tail_e2e.py": 50,
 }
+
+
+def _child_driver_memory(n_shards: int) -> str | None:
+    """Heap cap for each shard's JVM when ``SPARK_DRIVER_MEMORY`` is
+    unset: the host's ``MemAvailable`` split evenly across the shards,
+    of which the heap takes 3/4 — the rest of each share covers the
+    JVM's off-heap memory and the Python workers.  Without it every
+    shard inherits the session default of 8g, and N concurrent JVMs
+    can outgrow a host without swap (a shard JVM died mid-run on a
+    4-core / 16 GB host).  ``None`` (keep the default) when the
+    variable is set or ``/proc/meminfo`` cannot be read."""
+    if os.environ.get("SPARK_DRIVER_MEMORY"):
+        return None
+    try:
+        with open("/proc/meminfo") as fh:
+            kb = next(
+                int(line.split()[1])
+                for line in fh
+                if line.startswith("MemAvailable:")
+            )
+    except (OSError, StopIteration, ValueError):
+        return None
+    return f"{max(1024, kb * 3 // 4 // 1024 // max(1, n_shards))}m"
+
+
+def _replay_reports(session, path: str) -> set[str]:
+    """Feed one shard's serialized reports to the parent's hooks, test
+    by test with the same logstart / logreport / logfinish sequence a
+    local run makes; returns the node ids whose teardown reported (a
+    test the shard died inside has reported its setup at most)."""
+    hook = session.config.hook
+    by_node: dict[str, list] = {}
+    try:
+        with open(path) as fh:
+            for line in fh:
+                try:
+                    data = json.loads(line)
+                except ValueError:
+                    continue  # a line torn by a shard killed mid-write
+                rep = hook.pytest_report_from_serializable(
+                    config=session.config, data=data
+                )
+                if rep is not None:
+                    by_node.setdefault(rep.nodeid, []).append(rep)
+    except OSError:
+        pass
+    for nodeid, reps in by_node.items():
+        hook.pytest_runtest_logstart(nodeid=nodeid, location=reps[0].location)
+        for rep in reps:
+            hook.pytest_runtest_logreport(report=rep)
+        hook.pytest_runtest_logfinish(nodeid=nodeid, location=reps[0].location)
+    return {
+        nid for nid, reps in by_node.items()
+        if any(rep.when == "teardown" for rep in reps)
+    }
 
 
 def pytest_runtestloop(session):
@@ -161,7 +243,13 @@ def pytest_runtestloop(session):
     # partitioning themselves and never read the core count
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     child_cpus = str(max(4, cpus // max(1, len(shards))))
+    child_mem = _child_driver_memory(len(shards))
     failfast = bool(session.config.getoption("maxfail"))
+
+    report_dir = tempfile.mkdtemp(prefix="spark-graft-reports-")
+    report_paths = [
+        os.path.join(report_dir, f"shard{i}.jsonl") for i in range(len(shards))
+    ]
 
     procs: list[subprocess.Popen] = []
     results: dict[int, int] = {}
@@ -199,12 +287,16 @@ def pytest_runtestloop(session):
         env = dict(os.environ)
         env["_SPARK_GRAFT_TEST_SHARD"] = str(i)
         env["SPARK_GRAFT_CPUS"] = child_cpus
+        env[_REPORTS_ENV] = report_paths[i]
+        if child_mem is not None:
+            env["SPARK_DRIVER_MEMORY"] = child_mem
         cmd = [sys.executable, "-m", "pytest", "-q", "--no-header"]
         if failfast:
             cmd.append("-x")
         cmd += ids
         print(
-            f"[shard {i}] {len(ids)} tests, local[{child_cpus}]: "
+            f"[shard {i}] {len(ids)} tests, local[{child_cpus}], "
+            f"driver memory {env.get('SPARK_DRIVER_MEMORY', '8g')}: "
             f"{shlex.join(cmd[:6])} ...",
             flush=True,
         )
@@ -234,19 +326,42 @@ def pytest_runtestloop(session):
         for t in threads:
             t.join(timeout=10)
 
-    failed = [i for i, rc in sorted(results.items()) if rc != 0]
+    reported: set[str] = set()
+    try:
+        for path in report_paths:
+            reported |= _replay_reports(session, path)
+    finally:
+        shutil.rmtree(report_dir, ignore_errors=True)
+
+    # a shard that exited non-zero, or that never reported some of its
+    # tests (killed mid-run), fails the run even when every report that
+    # did arrive passed
+    failed = [i for i in range(len(shards)) if results.get(i) != 0]
+    unreported = [
+        nid for ids in shards for nid in ids if nid not in reported
+    ]
     n = len(session.items)
-    if failed:
-        session.testsfailed = len(failed)
-        print(
-            f"\nSHARDED RUN FAILED: shards {failed} exited non-zero "
-            f"({n} tests total across {len(shards)} shards)",
-            flush=True,
+    if failed or unreported:
+        session.testsfailed = max(
+            session.testsfailed, len(failed) + len(unreported)
         )
+        _SHARD_SUMMARY.append(
+            f"SHARDED RUN FAILED: shards {failed} exited non-zero, "
+            f"{len(unreported)} tests never reported "
+            f"({n} tests total across {len(shards)} shards)"
+        )
+        _SHARD_SUMMARY.extend(f"  not reported: {nid}" for nid in unreported[:20])
     else:
-        print(
-            f"\nSHARDED RUN OK: {n} tests passed across "
-            f"{len(shards)} shards",
-            flush=True,
+        _SHARD_SUMMARY.append(
+            f"SHARDED RUN OK: {n} tests reported across {len(shards)} shards"
         )
     return True
+
+
+_SHARD_SUMMARY: list[str] = []
+
+
+def pytest_terminal_summary(terminalreporter):
+    # after the replayed reports' progress line, before the stats line
+    for line in _SHARD_SUMMARY:
+        terminalreporter.write_line(line)
