@@ -13,8 +13,10 @@ Layout:
                     joins, dedup, similarity, text analysis, multimodal
 * ``sources``     — batch/streaming sources (parquet fixtures, CDC feed,
                     optional MongoDB connector)
-* ``streaming``   — the tail phase: Structured Streaming query,
-                    foreachBatch sink plumbing, checkpoint hooks
+* ``streaming``   — the tail phase (Structured Streaming query,
+                    foreachBatch sinks, checkpoint hooks) and the
+                    fold-stream runtime that drains a feed through
+                    any incremental store (``streaming.fold``)
 * ``functions``   — reusable column-expression helpers
 """
 

@@ -676,6 +676,44 @@ def append_to_ivf_index(
     return n
 
 
+def fold_into_ivf_index(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    path: str,
+    n_cells: int = 16,
+    seed: int = 7,
+    train_sample: int = 100_000,
+) -> None:
+    """Streaming ingest of an IVF index, one batch at a time: the
+    first batch TRAINS (:func:`materialize_ivf_index` — k-means on the
+    batch, vectors written partitioned by cell), every later batch
+    APPENDS to the existing centroids (:func:`append_to_ivf_index` —
+    no retrain, work ∝ the batch).  Assignment quality degrades only
+    as the distribution drifts from the first batch, which a periodic
+    re-materialize repairs.
+
+    Replay-safe: appends anti-join the index's id set, so a replayed
+    batch appends nothing.  A replay of the TRAINING batch either
+    finds the centroids written (append path, every id skipped) or,
+    after a crash before the centroid write, re-runs the
+    overwrite-mode materialize — idempotent either way."""
+    from ..storeio import read_parquet_if_exists
+
+    if read_parquet_if_exists(df.sparkSession, f"{path}/centroids") is None:
+        materialize_ivf_index(
+            df,
+            id_col,
+            vec_col,
+            path,
+            n_cells=n_cells,
+            seed=seed,
+            train_sample=train_sample,
+        )
+    else:
+        append_to_ivf_index(df, id_col, vec_col, path)
+
+
 def apply_cdc_to_ivf_index(
     batch: DataFrame,
     path: str,

@@ -1447,12 +1447,14 @@ def streaming_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     into the label + merge stores, and the final
     ``components_over_store`` view must equal the one-shot
     ``dedup_components`` clustering row for row."""
-    import glob
     import shutil
     import tempfile
 
-    from .operators.dedup import components_over_store
-    from .streaming.components import run_streaming_components
+    from .operators.dedup import (
+        components_over_store,
+        incremental_components,
+    )
+    from .streaming.fold import drain, run_fold_stream
 
     docs = load_table(spark, sf_dir, "documents")
     # materialize once: each of the 3 feed-slice writes below would
@@ -1463,32 +1465,23 @@ def streaming_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = tempfile.mkdtemp(prefix="cc_stream_")
     try:
         feed = os.path.join(base, "feed")
+        store = os.path.join(base, "store")
         split = F.pmod(F.xxhash64("i", "j"), F.lit(3))
-        for b in range(3):
-            pairs.filter(split == b).coalesce(1).write.mode(
-                "append"
-            ).parquet(feed)
-            for f in glob.glob(os.path.join(feed, "*.parquet")):
-                if os.path.getmtime(f) > 1_700_000_000:
-                    os.utime(f, (1_600_000_000 + b * 60,) * 2)
+        _write_ordered_feed(feed, [pairs.filter(split == b) for b in range(3)])
         stream = (
             spark.readStream.schema("i long, j long, jaccard double")
             .option("maxFilesPerTrigger", 1)
             .parquet(feed)
         )
-        q = run_streaming_components(
-            spark,
-            stream,
-            os.path.join(base, "store"),
-            os.path.join(base, "out"),
-            os.path.join(base, "ckpt"),
+        drain(
+            run_fold_stream(
+                stream,
+                lambda b, _: incremental_components(spark, b, store),
+                checkpoint=os.path.join(base, "ckpt"),
+                out=os.path.join(base, "out"),
+            )
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("streaming components drain exceeded 300 s")
-        rows = components_over_store(
-            spark, os.path.join(base, "store")
-        ).collect()
+        rows = components_over_store(spark, store).collect()
     finally:
         shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(rows, "doc long, component long")
@@ -1692,7 +1685,7 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The cell-partitioned embedding near-dup store maintained
-    through Structured Streaming (streaming/embedding_pairs.py) —
+    through Structured Streaming (``run_fold_stream``) —
     the last incremental store to gain a streaming edition.  Vectors
     replay as a 3-file feed (first trigger trains the quantizer,
     later triggers probe + append through the id anti-join), and the
@@ -1715,52 +1708,45 @@ def streaming_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     * ``replay_ok``: a post-drain redelivery of the training slice
       emits 0 pairs and appends 0 vectors.
     """
-    import glob
     import shutil
     import tempfile
 
     from .operators.similarity import incremental_embedding_pairs
-    from .streaming.embedding_pairs import run_streaming_embedding_pairs
+    from .streaming.fold import drain, run_fold_stream
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
     n_total = emb.count()
+
     def build_feed(feed: str) -> None:
-        for i in range(3):
-            emb.filter(
-                F.pmod(F.col("vec_id"), F.lit(3)) == i
-            ).coalesce(1).write.mode("append").parquet(feed)
-            for f in glob.glob(os.path.join(feed, "*.parquet")):
-                if os.path.getmtime(f) > 1_700_000_000:
-                    os.utime(f, (1_600_000_000 + i * 60,) * 2)
+        _write_ordered_feed(
+            feed,
+            [
+                emb.filter(F.pmod(F.col("vec_id"), F.lit(3)) == i)
+                for i in range(3)
+            ],
+        )
 
     base = tempfile.mkdtemp(prefix="embp_stream_")
     try:
-        feed = _shared_stream_feed(
-            spark, sf_dir, "embp_feed", build_feed
-        )
+        feed = _shared_store("embp_feed", sf_dir, build_feed)
         stream = (
             spark.readStream.schema(spark.read.parquet(feed).schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(feed)
         )
         store = os.path.join(base, "store")
-        q = run_streaming_embedding_pairs(
-            spark,
-            stream,
-            "vec_id",
-            "embedding",
-            store,
-            os.path.join(base, "out"),
-            os.path.join(base, "ckpt"),
-            threshold=0.45,
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming embedding-pairs drain exceeded 300 s"
+        drain(
+            run_fold_stream(
+                stream,
+                lambda b, _: incremental_embedding_pairs(
+                    spark, b, "vec_id", "embedding", store, threshold=0.45
+                ),
+                checkpoint=os.path.join(base, "ckpt"),
+                out=os.path.join(base, "out"),
             )
+        )
         inc = {
             (r["i"], r["j"]): r["cosine"]
             for r in spark.read.parquet(os.path.join(base, "out"))
@@ -2858,49 +2844,39 @@ def streaming_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     the postings + docstats stores, and query-time
     ``bm25_over_store`` must equal the one-shot ``bm25_search``
     top-10 row for row."""
-    import glob
     import shutil
     import tempfile
 
-    from .operators.text import bm25_over_store
-    from .streaming.bm25_index import run_streaming_bm25_index
+    from .operators.text import bm25_over_store, incremental_bm25_index
+    from .streaming.fold import drain, run_fold_stream
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
+
     def build_feed(feed: str) -> None:
         split = F.pmod(F.xxhash64("doc_id"), F.lit(3))
-        for b in range(3):
-            docs.filter(split == b).coalesce(1).write.mode(
-                "append"
-            ).parquet(feed)
-            for f in glob.glob(os.path.join(feed, "*.parquet")):
-                if os.path.getmtime(f) > 1_700_000_000:
-                    os.utime(f, (1_600_000_000 + b * 60,) * 2)
+        _write_ordered_feed(feed, [docs.filter(split == b) for b in range(3)])
 
     base = tempfile.mkdtemp(prefix="bm_stream_")
     try:
-        feed = _shared_stream_feed(
-            spark, sf_dir, "bm_hash_feed", build_feed
-        )
+        feed = _shared_store("bm_hash_feed", sf_dir, build_feed)
         stream = (
             spark.readStream.schema("doc_id long, text string")
             .option("maxFilesPerTrigger", 1)
             .parquet(feed)
         )
-        q = run_streaming_bm25_index(
-            spark,
-            stream,
-            os.path.join(base, "bm"),
-            os.path.join(base, "out"),
-            os.path.join(base, "ckpt"),
+        store = os.path.join(base, "bm")
+        drain(
+            run_fold_stream(
+                stream,
+                lambda b, _: incremental_bm25_index(spark, b, store),
+                checkpoint=os.path.join(base, "ckpt"),
+                out=os.path.join(base, "out"),
+            )
         )
-        q.awaitTermination()
         rows = bm25_over_store(
-            spark,
-            os.path.join(base, "bm"),
-            ["spark", "table", "stream"],
-            top_k=10,
+            spark, store, ["spark", "table", "stream"], top_k=10
         ).collect()
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -3211,16 +3187,30 @@ def _shared_knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(_shared_store("knn5", sf_dir, build))
 
 
-def _shared_stream_feed(
-    spark: SparkSession, sf_dir: str, kind: str, build
-) -> str:
-    """A deterministic streaming FEED directory (one file per trigger,
-    strictly-increasing mtimes pinned by ``build`` itself, batch by
-    batch) shared across queries and bench repeats.  The feed is
-    read-only input — every run still drains it through a FRESH
-    checkpoint, so the streaming work under test is untouched; only
-    the repeated feed construction drops out of the harness cost."""
-    return _shared_store(kind, sf_dir, build)
+def _write_ordered_feed(feed: str, frames) -> None:
+    """Write a streaming FEED: one file per frame under ``feed``, with
+    strictly increasing mtimes pinned on exactly the files each write
+    created, so a ``maxFilesPerTrigger=1`` file stream takes frame
+    ``i`` as trigger ``i`` (the file source orders by mtime; unpinned,
+    files written within one clock tick drain in arbitrary order).  A
+    frame is a DataFrame (one parquet file) or a list of records (one
+    JSON-lines file, the oplog feed shape).  Feeds shared across
+    queries and bench repeats are built once with ``_shared_store``;
+    each run still drains through a FRESH checkpoint."""
+    import json
+
+    os.makedirs(feed, exist_ok=True)
+    for i, frame in enumerate(frames):
+        before = set(os.listdir(feed))
+        if isinstance(frame, DataFrame):
+            frame.coalesce(1).write.mode("append").parquet(feed)
+        else:
+            with open(os.path.join(feed, f"b{i}.json"), "w") as fh:
+                fh.writelines(json.dumps(r) + "\n" for r in frame)
+        for name in set(os.listdir(feed)) - before:
+            os.utime(
+                os.path.join(feed, name), (1_600_000_000 + i * 60,) * 2
+            )
 
 
 def _shared_derived_store(kind: str, sf_dir: str, src: str, post) -> str:
@@ -4221,6 +4211,7 @@ def streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from .operators.text import tokens_col
+    from .streaming.fold import drain
     from .streaming.heavy import (
         heavy_hitters_snapshot,
         run_streaming_heavy_hitters,
@@ -4246,24 +4237,17 @@ def streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
             stream = reader.option(
                 "pathGlobFilter", "documents.parquet"
             ).parquet(sf_dir)
-        q = run_streaming_heavy_hitters(
-            spark,
-            stream,
-            "text",
-            f"{base}/sink",
-            f"{base}/ckpt",
-            k=k,
-            n_shards=8,
-        )
-        # awaitTermination(timeout) returns False while the query is
-        # still running; reading the sink then would race a live
-        # writer (and the finally-rmtree would pull the directory out
-        # from under it).  Stop and fail loudly instead.
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming heavy-hitters drain exceeded 300 s"
+        drain(
+            run_streaming_heavy_hitters(
+                spark,
+                stream,
+                "text",
+                f"{base}/sink",
+                f"{base}/ckpt",
+                k=k,
+                n_shards=8,
             )
+        )
         sk = heavy_hitters_snapshot(spark, f"{base}/sink", top=None)
 
         exact = (
@@ -4984,12 +4968,14 @@ def streaming_seed_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     folds into the edge + distance stores, and the final
     ``seed_distance_over_store`` view must equal the one-shot
     ``seed_distance`` row for row."""
-    import glob
     import shutil
     import tempfile
 
-    from .operators.similarity import seed_distance_over_store
-    from .streaming.seed_distance import run_streaming_seed_distance
+    from .operators.similarity import (
+        incremental_seed_distance,
+        seed_distance_over_store,
+    )
+    from .streaming.fold import drain, run_fold_stream
 
     emb = load_table(spark, sf_dir, "embeddings")
     edges = _shared_knn_edges(spark, sf_dir)
@@ -4999,35 +4985,34 @@ def streaming_seed_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build_feed(feed: str) -> None:
         split = F.pmod(F.xxhash64("i", "j"), F.lit(3))
-        for b in range(3):
-            edges.filter(split == b).coalesce(1).write.mode(
-                "append"
-            ).parquet(feed)
-            for f in glob.glob(os.path.join(feed, "*.parquet")):
-                if os.path.getmtime(f) > 1_700_000_000:
-                    os.utime(f, (1_600_000_000 + b * 60,) * 2)
+        _write_ordered_feed(feed, [edges.filter(split == b) for b in range(3)])
 
     base = tempfile.mkdtemp(prefix="sd_stream_")
     try:
-        feed = _shared_stream_feed(spark, sf_dir, "sd_feed", build_feed)
+        feed = _shared_store("sd_feed", sf_dir, build_feed)
         stream = (
             spark.readStream.schema("i long, j long")
             .option("maxFilesPerTrigger", 1)
             .parquet(feed)
         )
-        q = run_streaming_seed_distance(
-            spark,
-            stream,
-            seeds,
-            os.path.join(base, "sd"),
-            os.path.join(base, "out"),
-            os.path.join(base, "ckpt"),
-            max_depth=4,
+        store = os.path.join(base, "sd")
+        # the static seed set folds with the FIRST trigger; a replay
+        # of batch 0 re-folds it as no strict improvement
+        drain(
+            run_fold_stream(
+                stream,
+                lambda b, batch_id: incremental_seed_distance(
+                    spark,
+                    store,
+                    edges_batch=b,
+                    seeds_batch=seeds if batch_id == 0 else None,
+                    max_depth=4,
+                ),
+                checkpoint=os.path.join(base, "ckpt"),
+                out=os.path.join(base, "out"),
+            )
         )
-        q.awaitTermination()
-        rows = seed_distance_over_store(
-            spark, os.path.join(base, "sd")
-        ).collect()
+        rows = seed_distance_over_store(spark, store).collect()
     finally:
         shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(rows, "doc long, dist long")
@@ -5689,6 +5674,7 @@ def streaming_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
+    from .streaming.fold import drain
     from .streaming.transitions import (
         run_streaming_transitions,
         transitions_snapshot,
@@ -5730,14 +5716,11 @@ def streaming_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
             ts_ms.alias("ts_ms"),
             "event_type",
         )
-        q = run_streaming_transitions(
-            spark, ev, f"{base}/sink", f"{base}/ckpt"
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming transitions drain exceeded 300 s"
+        drain(
+            run_streaming_transitions(
+                spark, ev, f"{base}/sink", f"{base}/ckpt"
             )
+        )
         out = transitions_snapshot(spark, f"{base}/sink")
         # materialize before the tempdir vanishes
         rows = out.collect()
@@ -7220,10 +7203,10 @@ def streaming_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     events arrive in ts order), per-user funnel state advances in
     applyInPandasWithState, and the latest-wins snapshot must equal
     the one-shot batch operator row for row."""
-    import glob
     import shutil
     import tempfile
 
+    from .streaming.fold import drain
     from .streaming.funnel import funnel_snapshot, run_streaming_funnel
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -7236,16 +7219,14 @@ def streaming_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = tempfile.mkdtemp(prefix="funnel_stream_")
     try:
         feed = os.path.join(base, "feed")
-        slices = [
-            ev.filter(F.col("ts_ms") <= t1),
-            ev.filter((F.col("ts_ms") > t1) & (F.col("ts_ms") <= t2)),
-            ev.filter(F.col("ts_ms") > t2),
-        ]
-        for i, sl in enumerate(slices):
-            sl.coalesce(1).write.mode("append").parquet(feed)
-            for f in glob.glob(os.path.join(feed, "*.parquet")):
-                if os.path.getmtime(f) > 1_700_000_000:
-                    os.utime(f, (1_600_000_000 + i * 60,) * 2)
+        _write_ordered_feed(
+            feed,
+            [
+                ev.filter(F.col("ts_ms") <= t1),
+                ev.filter((F.col("ts_ms") > t1) & (F.col("ts_ms") <= t2)),
+                ev.filter(F.col("ts_ms") > t2),
+            ],
+        )
         stream = (
             spark.readStream.schema(
                 "user_id long, event_id long, ts_ms long, "
@@ -7254,16 +7235,15 @@ def streaming_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", 1)
             .parquet(feed)
         )
-        q = run_streaming_funnel(
-            spark,
-            stream,
-            ("signup", "click", "purchase"),
-            os.path.join(base, "sink"),
-            os.path.join(base, "ckpt"),
+        drain(
+            run_streaming_funnel(
+                spark,
+                stream,
+                ("signup", "click", "purchase"),
+                os.path.join(base, "sink"),
+                os.path.join(base, "ckpt"),
+            )
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("streaming funnel drain exceeded 300 s")
         rows = funnel_snapshot(
             spark, os.path.join(base, "sink"), 3
         ).collect()
@@ -7530,10 +7510,11 @@ def similarity_ann_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The IVF index maintained through Structured Streaming
-    (streaming/ivf.py) — completes the every-store-has-a-streaming-
-    edition symmetry: embeddings replay as a 3-file feed, the first
-    trigger TRAINS (materializes centroids + cell partitions), later
-    triggers APPEND through the idempotent id anti-join.  The oracle
+    (``fold_into_ivf_index`` under ``run_fold_stream``): embeddings
+    replay as a 3-file feed in pinned order, the first trigger (the
+    ``vec_id % 3 == 0`` slice) TRAINS (materializes centroids + cell
+    partitions), later triggers APPEND through the idempotent id
+    anti-join.  The oracle
     pins: every vector indexed exactly once (count == table, ids
     unique), a post-drain re-append of the training slice appends 0
     (replay_ok), and an index search returns exact cosine scores with
@@ -7547,8 +7528,9 @@ def streaming_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.similarity import (
         ann_ivf_search,
         append_to_ivf_index,
+        fold_into_ivf_index,
     )
-    from .streaming.ivf import run_streaming_ivf
+    from .streaming.fold import drain, run_fold_stream
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
@@ -7556,10 +7538,14 @@ def streaming_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = tempfile.mkdtemp(prefix="ivf_stream_")
     try:
         feed = os.path.join(base, "feed")
-        for i in range(3):
-            emb.filter(
-                F.pmod(F.col("vec_id"), F.lit(3)) == i
-            ).coalesce(1).write.mode("append").parquet(feed)
+        # pinned order: slice 0 is the first trigger, so it trains
+        _write_ordered_feed(
+            feed,
+            [
+                emb.filter(F.pmod(F.col("vec_id"), F.lit(3)) == i)
+                for i in range(3)
+            ],
+        )
         stream = (
             spark.readStream.schema(
                 spark.read.parquet(feed).schema
@@ -7568,13 +7554,15 @@ def streaming_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(feed)
         )
         index = os.path.join(base, "index")
-        q = run_streaming_ivf(
-            spark, stream, "vec_id", "embedding", index,
-            os.path.join(base, "ckpt"),
+        drain(
+            run_fold_stream(
+                stream,
+                lambda b, _: fold_into_ivf_index(
+                    b, "vec_id", "embedding", index
+                ),
+                checkpoint=os.path.join(base, "ckpt"),
+            )
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("streaming IVF drain exceeded 300 s")
         # replay probe: re-feeding the training slice appends nothing
         n_replay = append_to_ivf_index(
             emb.filter(F.pmod(F.col("vec_id"), F.lit(3)) == 0),
@@ -8048,46 +8036,42 @@ def streaming_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     appends its newly-kept segment hashes through the digest-guarded
     incremental store, and the concatenated per-batch outputs must
     equal the one-shot batch operator row for row."""
-    import glob
     import shutil
     import tempfile
 
-    from .streaming.line_dedup import run_streaming_line_dedup
+    from .operators.text import incremental_line_dedup
+    from .streaming.fold import drain, run_fold_stream
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     t1, t2 = docs.approxQuantile("doc_id", [0.33, 0.66], 0.001)
     base = tempfile.mkdtemp(prefix="ld_stream_")
     try:
         feed = os.path.join(base, "feed")
-        slices = [
-            docs.filter(F.col("doc_id") <= t1),
-            docs.filter((F.col("doc_id") > t1) & (F.col("doc_id") <= t2)),
-            docs.filter(F.col("doc_id") > t2),
-        ]
-        for i, sl in enumerate(slices):
-            sl.coalesce(1).write.mode("append").parquet(feed)
-            # strictly increasing mtimes pin trigger order = id order
-            for f in glob.glob(os.path.join(feed, "*.parquet")):
-                if os.path.getmtime(f) > 1_700_000_000:
-                    os.utime(f, (1_600_000_000 + i * 60,) * 2)
+        store = os.path.join(base, "store")
+        # trigger order = id order
+        _write_ordered_feed(
+            feed,
+            [
+                docs.filter(F.col("doc_id") <= t1),
+                docs.filter((F.col("doc_id") > t1) & (F.col("doc_id") <= t2)),
+                docs.filter(F.col("doc_id") > t2),
+            ],
+        )
         stream = (
             spark.readStream.schema("doc_id long, text string")
             .option("maxFilesPerTrigger", 1)
             .parquet(feed)
         )
-        q = run_streaming_line_dedup(
-            spark,
-            stream,
-            "doc_id",
-            "text",
-            os.path.join(base, "store"),
-            os.path.join(base, "out"),
-            os.path.join(base, "ckpt"),
-            chunk_words=4,
+        drain(
+            run_fold_stream(
+                stream,
+                lambda b, _: incremental_line_dedup(
+                    spark, b, "doc_id", "text", store, chunk_words=4
+                ),
+                checkpoint=os.path.join(base, "ckpt"),
+                out=os.path.join(base, "out"),
+            )
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("streaming line-dedup drain exceeded 300 s")
         rows = (
             spark.read.parquet(os.path.join(base, "out"))
             .select("doc_id", "clean_text", "n_chunks", "n_kept")
@@ -8111,48 +8095,42 @@ def streaming_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch appends its first-seen window hashes through the
     digest-guarded incremental store, and the concatenated per-batch
     outputs must equal the one-shot batch operator row for row."""
-    import glob
     import shutil
     import tempfile
 
-    from .streaming.substring_dedup import run_streaming_substring_dedup
+    from .operators.text import incremental_substring_dedup
+    from .streaming.fold import drain, run_fold_stream
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     t1, t2 = docs.approxQuantile("doc_id", [0.33, 0.66], 0.001)
     base = tempfile.mkdtemp(prefix="sub_stream_")
     try:
         feed = os.path.join(base, "feed")
-        slices = [
-            docs.filter(F.col("doc_id") <= t1),
-            docs.filter((F.col("doc_id") > t1) & (F.col("doc_id") <= t2)),
-            docs.filter(F.col("doc_id") > t2),
-        ]
-        for i, sl in enumerate(slices):
-            sl.coalesce(1).write.mode("append").parquet(feed)
-            # strictly increasing mtimes pin trigger order = id order
-            for f in glob.glob(os.path.join(feed, "*.parquet")):
-                if os.path.getmtime(f) > 1_700_000_000:
-                    os.utime(f, (1_600_000_000 + i * 60,) * 2)
+        store = os.path.join(base, "store")
+        # trigger order = id order
+        _write_ordered_feed(
+            feed,
+            [
+                docs.filter(F.col("doc_id") <= t1),
+                docs.filter((F.col("doc_id") > t1) & (F.col("doc_id") <= t2)),
+                docs.filter(F.col("doc_id") > t2),
+            ],
+        )
         stream = (
             spark.readStream.schema("doc_id long, text string")
             .option("maxFilesPerTrigger", 1)
             .parquet(feed)
         )
-        q = run_streaming_substring_dedup(
-            spark,
-            stream,
-            "doc_id",
-            "text",
-            os.path.join(base, "store"),
-            os.path.join(base, "out"),
-            os.path.join(base, "ckpt"),
-            window_tokens=8,
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming substring-dedup drain exceeded 300 s"
+        drain(
+            run_fold_stream(
+                stream,
+                lambda b, _: incremental_substring_dedup(
+                    spark, b, "doc_id", "text", store, window_tokens=8
+                ),
+                checkpoint=os.path.join(base, "ckpt"),
+                out=os.path.join(base, "out"),
             )
+        )
         rows = (
             spark.read.parquet(os.path.join(base, "out"))
             .select(
@@ -8182,42 +8160,44 @@ def streaming_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from .operators.text import boilerplate_clean_over_store
-    from .streaming.boilerplate import run_streaming_boilerplate
+    from .operators.text import (
+        boilerplate_clean_over_store,
+        incremental_boilerplate,
+    )
+    from .streaming.fold import drain, run_fold_stream
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
+
     def build_feed(feed: str) -> None:
         # three disjoint slices -> three files -> three triggers
-        for i in range(3):
-            docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == i).coalesce(
-                1
-            ).write.mode("append").parquet(feed)
+        _write_ordered_feed(
+            feed,
+            [
+                docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == i)
+                for i in range(3)
+            ],
+        )
 
     base = tempfile.mkdtemp(prefix="bp_stream_")
     try:
-        feed = _shared_stream_feed(spark, sf_dir, "bp_feed", build_feed)
+        feed = _shared_store("bp_feed", sf_dir, build_feed)
         stream = spark.readStream.schema(
             "doc_id long, text string"
         ).option("maxFilesPerTrigger", 1).parquet(feed)
         store = os.path.join(base, "store")
-        q = run_streaming_boilerplate(
-            spark,
-            stream,
-            "doc_id",
-            "text",
-            store,
-            os.path.join(base, "out"),
-            os.path.join(base, "ckpt"),
-            chunk_words=4,
-            min_df=2,
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming boilerplate drain exceeded 300 s"
+        drain(
+            run_fold_stream(
+                stream,
+                lambda b, _: incremental_boilerplate(
+                    spark, b, "doc_id", "text", store,
+                    chunk_words=4, min_df=2,
+                ),
+                checkpoint=os.path.join(base, "ckpt"),
+                out=os.path.join(base, "out"),
             )
+        )
         out = boilerplate_clean_over_store(
             spark, docs, "doc_id", "text", store,
             chunk_words=4, min_df=2,
@@ -8687,49 +8667,41 @@ def streaming_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     members), each micro-batch probes + appends through the
     id-anti-joined incremental store, and the concatenated per-batch
     outputs must equal the one-shot batch operator row for row."""
-    import glob
     import shutil
     import tempfile
 
-    from .streaming.winnow import run_streaming_winnow_pairs
+    from .operators.dedup import incremental_winnow_pairs
+    from .streaming.fold import drain, run_fold_stream
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
     def build_feed(feed: str) -> None:
-        slices = [
-            docs.filter(F.col("doc_id") % 3 == s) for s in (2, 0, 1)
-        ]
-        for i, sl in enumerate(slices):
-            sl.coalesce(1).write.mode("append").parquet(feed)
-            # strictly increasing mtimes pin a deterministic trigger
-            # order (any order is correct; determinism aids replay)
-            for f in glob.glob(os.path.join(feed, "*.parquet")):
-                if os.path.getmtime(f) > 1_700_000_000:
-                    os.utime(f, (1_600_000_000 + i * 60,) * 2)
+        # a deterministic trigger order (any order is correct;
+        # determinism aids replay)
+        _write_ordered_feed(
+            feed, [docs.filter(F.col("doc_id") % 3 == s) for s in (2, 0, 1)]
+        )
 
     base = tempfile.mkdtemp(prefix="wn_stream_")
     try:
-        feed = _shared_stream_feed(spark, sf_dir, "wn_feed", build_feed)
+        feed = _shared_store("wn_feed", sf_dir, build_feed)
         stream = (
             spark.readStream.schema("doc_id long, text string")
             .option("maxFilesPerTrigger", 1)
             .parquet(feed)
         )
-        q = run_streaming_winnow_pairs(
-            spark,
-            stream,
-            "doc_id",
-            "text",
-            os.path.join(base, "store"),
-            os.path.join(base, "out"),
-            os.path.join(base, "ckpt"),
-            k=5,
-            w=4,
-            threshold=0.5,
+        store = os.path.join(base, "store")
+        drain(
+            run_fold_stream(
+                stream,
+                lambda b, _: incremental_winnow_pairs(
+                    spark, b, "doc_id", "text", store,
+                    k=5, w=4, threshold=0.5,
+                ),
+                checkpoint=os.path.join(base, "ckpt"),
+                out=os.path.join(base, "out"),
+            )
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("streaming winnow drain exceeded 300 s")
         rows = (
             spark.read.parquet(os.path.join(base, "out"))
             .select("i", "j", "containment")
@@ -9491,6 +9463,7 @@ def streaming_search_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch no-ops on the content digest.  Same oracle as
     ``search_cdc_upsert`` — the fold arriving via micro-batches with
     at-least-once redelivery must change NOTHING."""
+    import itertools
     import json as _json
     import shutil
     import tempfile
@@ -9499,6 +9472,7 @@ def streaming_search_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .core import make_ts
     from .operators.text import bm25_over_store
     from .sources.cdc import file_oplog_stream
+    from .streaming.fold import drain
     from .streaming.sink import ParquetIndexSink, SearchIndexedSink
     from .streaming.tail import run_tail
 
@@ -9522,28 +9496,25 @@ def streaming_search_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         # batch 3 = deletes + a REPLAY of the whole update batch: the
         # content digest must no-op it (at-least-once -> exactly-once)
         batches = [ins, upd, dels + upd]
-        os.makedirs(feed, exist_ok=True)
-        seq = 0
-        for i, batch in enumerate(batches):
-            path = os.path.join(feed, f"b{i}.json")
-            with open(path, "w") as fh:
-                for op, did, doc in batch:
-                    seq += 1
-                    fh.write(
-                        _json.dumps(
-                            {
-                                "ts": make_ts(seq),
-                                "ns": "lib.docs",
-                                "op": op,
-                                "id": str(did),
-                                "doc": _json.dumps(doc),
-                            }
-                        )
-                        + "\n"
-                    )
-            os.utime(path, (1_600_000_000 + i * 60,) * 2)
+        seq = itertools.count(1)
+        _write_ordered_feed(
+            feed,
+            [
+                [
+                    {
+                        "ts": make_ts(next(seq)),
+                        "ns": "lib.docs",
+                        "op": op,
+                        "id": str(did),
+                        "doc": _json.dumps(doc),
+                    }
+                    for op, did, doc in batch
+                ]
+                for batch in batches
+            ],
+        )
 
-    feed = _shared_stream_feed(spark, sf_dir, "cdc_oplog_feed", build_feed)
+    feed = _shared_store("cdc_oplog_feed", sf_dir, build_feed)
     task = Task(
         {
             "from": {"phase": "tail"},
@@ -9573,7 +9544,7 @@ def streaming_search_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
             checkpoint_dir=os.path.join(base, "ckpt"),
             available_now=True,
         )
-        q.awaitTermination()
+        drain(q)
         rows = bm25_over_store(
             spark, store, ["updated", "spark", "table"], top_k=10
         ).collect()
@@ -9986,6 +9957,7 @@ def streaming_dense_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute-force cosine over the final collection state (the shared
     ``_DENSE_CDC_ORACLE``).  Same oracle as ``search_dense_cdc``:
     arrival via micro-batches must change nothing."""
+    import itertools
     import json as _json
     import shutil
     import tempfile
@@ -9997,6 +9969,7 @@ def streaming_dense_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         materialize_ivf_index,
     )
     from .sources.cdc import file_oplog_stream
+    from .streaming.fold import drain
     from .streaming.sink import DenseIndexedSink, ParquetIndexSink
     from .streaming.tail import run_tail
 
@@ -10021,28 +9994,25 @@ def streaming_dense_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
             if r["vec_id"] % 5 == 2
         ]
         batches = [ins, upd, dels + upd]  # b2 redelivers the updates
-        os.makedirs(feed, exist_ok=True)
-        seq = 0
-        for i, batch in enumerate(batches):
-            path = os.path.join(feed, f"b{i}.json")
-            with open(path, "w") as fh:
-                for op, vid, doc in batch:
-                    seq += 1
-                    fh.write(
-                        _json.dumps(
-                            {
-                                "ts": make_ts(seq),
-                                "ns": "lib.vecs",
-                                "op": op,
-                                "id": str(vid),
-                                "doc": _json.dumps(doc),
-                            }
-                        )
-                        + "\n"
-                    )
-            os.utime(path, (1_600_000_000 + i * 60,) * 2)
+        seq = itertools.count(1)
+        _write_ordered_feed(
+            feed,
+            [
+                [
+                    {
+                        "ts": make_ts(next(seq)),
+                        "ns": "lib.vecs",
+                        "op": op,
+                        "id": str(vid),
+                        "doc": _json.dumps(doc),
+                    }
+                    for op, vid, doc in batch
+                ]
+                for batch in batches
+            ],
+        )
 
-    feed = _shared_stream_feed(spark, sf_dir, "dense_oplog_feed", build_feed)
+    feed = _shared_store("dense_oplog_feed", sf_dir, build_feed)
     task = Task(
         {
             "from": {"phase": "tail"},
@@ -10087,7 +10057,7 @@ def streaming_dense_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
             checkpoint_dir=os.path.join(base, "ckpt"),
             available_now=True,
         )
-        q.awaitTermination()
+        drain(q)
         qv = (
             load_table(spark, sf_dir, "embeddings")
             .filter(F.col("vec_id") == 0)

@@ -1,2 +1,4 @@
-"""The tail phase: Structured Streaming query, per-batch dispatch
-plan, sinks, checkpointing."""
+"""Structured Streaming: the CDC tail phase (``tail``, ``sink``), the
+fold-stream runtime every incremental store drains through
+(``fold``), streaming curation, and the stateful sketch / funnel /
+session maintainers."""

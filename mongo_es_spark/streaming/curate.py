@@ -32,6 +32,14 @@ Restart/replay safety: every store append is anti-joined on content
 hash or doc id, so re-processing a delivered-twice micro-batch is a
 no-op — at-least-once delivery composes into exactly-once state, the
 same idempotence story as the CDC sink (SURVEY §7 hard part c).
+
+Streamed, :func:`curate_batch` is the fold of
+:func:`~mongo_es_spark.streaming.fold.run_fold_stream`::
+
+    run_fold_stream(
+        stream, lambda b, _: curate_batch(spark, b, state_dir),
+        checkpoint=ckpt,
+    )
 """
 
 from __future__ import annotations
@@ -49,7 +57,7 @@ from ..operators.text import (
     temperature_sample,
 )
 
-__all__ = ["curate_batch", "run_incremental_curation", "rebalance"]
+__all__ = ["curate_batch", "rebalance"]
 
 
 def _hash_store(state_dir: str) -> str:
@@ -220,53 +228,6 @@ def curate_batch(
         "fresh": n_fresh,
         "kept": n_kept,
     }
-
-
-def run_incremental_curation(
-    spark: SparkSession,
-    stream_df: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    quality_threshold: float = 0.52,
-    jaccard_threshold: float = 0.8,
-    scrub_blocklist: tuple[str, ...] | None = None,
-    available_now: bool = True,
-    processing_time: str = "5 seconds",
-):
-    """Wire :func:`curate_batch` under a Structured Streaming query.
-
-    ``available_now=True`` drains the current backlog then stops (the
-    batch-backfill shape); otherwise runs continuously at
-    ``processing_time`` triggers, mirroring the reference's scan-then-
-    tail phasing (SURVEY §3) for the curation pipeline.
-    ``scrub_blocklist`` enables the stateless redaction stage ahead of
-    quality/dedup, exactly as in :func:`curate_batch`.
-    """
-
-    def _process(batch_df: DataFrame, _batch_id: int) -> None:
-        curate_batch(
-            spark,
-            batch_df,
-            state_dir,
-            id_col=id_col,
-            text_col=text_col,
-            quality_threshold=quality_threshold,
-            jaccard_threshold=jaccard_threshold,
-            scrub_blocklist=scrub_blocklist,
-        )
-
-    writer = (
-        stream_df.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
 
 
 def rebalance(

@@ -97,12 +97,11 @@ def run_streaming_funnel(
     steps: tuple[str, ...],
     sink_path: str,
     checkpoint_dir: str,
-    available_now: bool = True,
-    processing_time: str = "5 seconds",
 ):
     """Maintain per-user funnel state over an event stream and append
     latest-wins funnel rows to a parquet changelog.  ``stream_df``
-    needs ``user_id, event_id, ts_ms, event_type`` columns."""
+    needs ``user_id, event_id, ts_ms, event_type`` columns.  The query
+    drains the current backlog (``availableNow``) and stops."""
     step_cols = ", ".join(
         f"step{i + 1}_ms long" for i in range(len(steps))
     )
@@ -117,17 +116,14 @@ def run_streaming_funnel(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    writer = (
+    return (
         rows.writeStream.format("parquet")
         .option("path", sink_path)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
 
 
 def funnel_snapshot(

@@ -110,12 +110,11 @@ def run_streaming_heavy_hitters(
     checkpoint_dir: str,
     k: int = 64,
     n_shards: int = 8,
-    available_now: bool = True,
-    processing_time: str = "5 seconds",
 ):
     """Maintain sharded MG summaries over a text stream; emit each
     shard's current summary per trigger to an append-only parquet
-    changelog at ``sink_path``."""
+    changelog at ``sink_path``.  The query drains the current backlog
+    (``availableNow``) and stops."""
     toks = stream_df.select(
         F.explode(tokens_col(F.col(text_col))).alias("t")
     ).filter(F.length("t") > 0)
@@ -129,17 +128,14 @@ def run_streaming_heavy_hitters(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    writer = (
+    return (
         summaries.writeStream.format("parquet")
         .option("path", sink_path)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
 
 
 def heavy_hitters_snapshot(

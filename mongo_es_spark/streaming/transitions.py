@@ -114,13 +114,12 @@ def run_streaming_transitions(
     stream_df: DataFrame,
     sink_path: str,
     checkpoint_dir: str,
-    available_now: bool = True,
-    processing_time: str = "5 seconds",
 ):
     """Maintain per-user last-event state over an event stream and
     append ``(prev, next)`` transition increments to a parquet
     changelog.  ``stream_df`` needs ``user_id, event_id, ts_ms,
-    event_type`` columns."""
+    event_type`` columns.  The query drains the current backlog
+    (``availableNow``) and stops."""
     ev = stream_df.select("user_id", "event_id", "ts_ms", "event_type")
     inc = ev.groupBy("user_id").applyInPandasWithState(
         _fold(),
@@ -129,17 +128,14 @@ def run_streaming_transitions(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    writer = (
+    return (
         inc.writeStream.format("parquet")
         .option("path", sink_path)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
 
 
 def transitions_snapshot(

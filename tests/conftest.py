@@ -33,34 +33,6 @@ def spark():
 # printed command.  SPARK_GRAFT_TEST_WORKERS=1 disables sharding.
 # ---------------------------------------------------------------------------
 
-# Measured per-file wall seconds: each shard records its files' test
-# durations (pytest_runtest_logreport) and appends them to
-# tests/.file_costs.jsonl at exit; the parent folds them into the next
-# run's balance.  Greedy LPT with stale costs measured 28 min wall on a
-# 72 min shard-time total (shards 10-28 min); accurate costs bound the
-# wall by max(biggest file, total/N).
-_COSTS_PATH = os.path.join(os.path.dirname(__file__), ".file_costs.jsonl")
-
-
-def _measured_costs() -> dict[str, float]:
-    costs: dict[str, float] = {}
-    try:
-        with open(_COSTS_PATH) as fh:
-            for line in fh:
-                try:
-                    rec = json.loads(line)
-                except ValueError:
-                    continue
-                for k, v in rec.items():
-                    # newest record wins (file appends chronologically)
-                    costs[k] = float(v)
-    except OSError:
-        pass
-    return costs
-
-
-_SHARD_DURATIONS: dict[str, float] = {}
-
 # Each shard also writes every test report, serialized with pytest's own
 # report hooks, one JSON line per report to the file named here; the
 # parent replays them into its session so its summary line, exit status
@@ -75,14 +47,8 @@ def pytest_configure(config):
 
 
 def pytest_runtest_logreport(report):
-    # inside a shard: accumulate wall seconds by file for the balance
-    # cache (setup+call+teardown all count — they all cost wall time)
     if os.environ.get("_SPARK_GRAFT_TEST_SHARD") is None:
         return
-    fname = os.path.basename(report.nodeid.split("::", 1)[0])
-    _SHARD_DURATIONS[fname] = (
-        _SHARD_DURATIONS.get(fname, 0.0) + report.duration
-    )
     path = os.environ.get(_REPORTS_ENV)
     if path and _CONFIG:
         if not _REPORTS_FH:
@@ -96,42 +62,51 @@ def pytest_runtest_logreport(report):
         _REPORTS_FH[0].flush()
 
 
-def pytest_sessionfinish(session, exitstatus):
-    if os.environ.get("_SPARK_GRAFT_TEST_SHARD") is None:
-        return
-    if not _SHARD_DURATIONS:
-        return
-    try:
-        with open(_COSTS_PATH, "a") as fh:
-            fh.write(
-                json.dumps(
-                    {k: round(v, 1) for k, v in _SHARD_DURATIONS.items()}
-                )
-                + "\n"
-            )
-    except OSError:
-        pass
-
-
-# fallback estimates for files with no measured record yet (from a full
-# single-process run; only used to balance the shards)
+# Per-file wall seconds (setup + call + teardown of every test in the
+# file) from sharded runs on a 4-vCPU host, used only to balance the
+# shards: greedy LPT bounds the wall by max(biggest file, total/N) when
+# these are close.  A file missing here is costed at 2 s per test;
+# re-measure (`pytest --durations=0`, summed per file) when a shard's
+# wall time drifts far from the others.
 _FILE_COST = {
-    "test_extensions.py": 480,
-    "test_curate_stream.py": 290,
-    "test_search_cdc.py": 260,
-    "test_search_snapshot.py": 150,
-    "test_ivf_cdc.py": 150,
-    "test_searchapi.py": 130,
-    "test_aggs.py": 120,
-    "test_analysis.py": 110,
-    "test_runner_cli.py": 100,
-    "test_maintenance.py": 100,
-    "test_ivf_exact.py": 90,
-    "test_tokenstats.py": 80,
-    "test_indexops.py": 70,
-    "test_store_compaction.py": 60,
-    "test_sink.py": 50,
-    "test_tail_e2e.py": 50,
+    "test_extensions.py": 773,
+    "test_search_cdc.py": 555,
+    "test_search_store.py": 345,
+    "test_curate_stream.py": 232,
+    "test_search_snapshot.py": 230,
+    "test_ivf_cdc.py": 210,
+    "test_plan_contracts.py": 200,
+    "test_ivf_exact.py": 179,
+    "test_geo.py": 127,
+    "test_searchapi.py": 109,
+    "test_maintenance.py": 108,
+    "test_indexops.py": 104,
+    "test_store_compaction.py": 89,
+    "test_analysis.py": 87,
+    "test_sessions_stream.py": 79,
+    "test_runner_cli.py": 66,
+    "test_tokenstats.py": 64,
+    "test_es_sink.py": 55,
+    "test_compaction_spark.py": 48,
+    "test_aggs.py": 45,
+    "test_searchapi_serving.py": 43,
+    "test_nested.py": 41,
+    "test_sink.py": 34,
+    "test_fold_stream.py": 30,
+    "test_scan_resume.py": 26,
+    "test_tail_e2e.py": 18,
+    "test_transitions_stream.py": 14,
+    "test_windows.py": 12,
+    "test_temporal.py": 11,
+    "test_heavy_stream.py": 11,
+    "test_dedup_state.py": 10,
+    "test_property.py": 5,
+    "test_ratelimit.py": 5,
+    "test_query_string.py": 4,
+    "test_cdc_resume.py": 4,
+    "test_sparkutil.py": 2,
+    "test_kafka_parse.py": 1,
+    "test_core.py": 0,
 }
 
 
@@ -207,13 +182,8 @@ def pytest_runtestloop(session):
         by_file.setdefault(fname, []).append(item.nodeid)
 
     # greedy longest-processing-time assignment to the emptiest shard
-    measured = _measured_costs()
-
     def cost(fname: str, ids: list[str]) -> float:
-        base = os.path.basename(fname)
-        if base in measured:
-            return measured[base]
-        return _FILE_COST.get(base, 2 * len(ids))
+        return _FILE_COST.get(os.path.basename(fname), 2 * len(ids))
 
     shard_files: list[list[tuple[str, list[str]]]] = [
         [] for _ in range(workers)

@@ -17,7 +17,7 @@ from mongo_es_spark.sources.cdc import (
     ms_to_bson_ts,
     oplog_filters,
 )
-from streamutil import drain
+from mongo_es_spark.streaming.fold import drain
 
 
 def _task() -> Task:

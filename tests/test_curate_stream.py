@@ -9,7 +9,7 @@ import json
 import os
 
 from pyspark.sql import functions as F
-from streamutil import drain
+from mongo_es_spark.streaming.fold import drain
 
 
 SCHEMA = "doc_id long, text string, lang string"
@@ -106,7 +106,8 @@ def _expected_kept(spark, batches, threshold=0.8, q_threshold=0.52):
 
 
 def test_streaming_curation_first_arrival_contract(spark, tmp_path):
-    from mongo_es_spark.streaming.curate import run_incremental_curation
+    from mongo_es_spark.streaming.curate import curate_batch
+    from mongo_es_spark.streaming.fold import run_fold_stream
 
     batches = _rows_batches()
     feed = tmp_path / "feed"
@@ -119,7 +120,9 @@ def test_streaming_curation_first_arrival_contract(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .json(str(feed))
     )
-    q = run_incremental_curation(spark, stream, state, ckpt)
+    q = run_fold_stream(
+        stream, lambda b, _: curate_batch(spark, b, state), checkpoint=ckpt
+    )
     drain(q)
 
     got = {
@@ -223,10 +226,11 @@ def test_curate_to_shards_example(spark, tmp_path):
 
 
 def test_streaming_curation_scrub_passthrough(spark, tmp_path):
-    """scrub_blocklist wired through run_incremental_curation: docs
+    """scrub_blocklist through the curation fold stream: docs
     identical after redaction deduplicate as one, and the curated
     store holds redacted text only."""
-    from mongo_es_spark.streaming.curate import run_incremental_curation
+    from mongo_es_spark.streaming.curate import curate_batch
+    from mongo_es_spark.streaming.fold import run_fold_stream
 
     long_tail = " ".join(f"w{i}" for i in range(40))
     batches = [
@@ -247,8 +251,10 @@ def test_streaming_curation_scrub_passthrough(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .json(str(feed))
     )
-    q = run_incremental_curation(
-        spark, stream, state, ckpt, scrub_blocklist=()
+    q = run_fold_stream(
+        stream,
+        lambda b, _: curate_batch(spark, b, state, scrub_blocklist=()),
+        checkpoint=ckpt,
     )
     drain(q)
 
@@ -268,10 +274,9 @@ def test_streaming_boilerplate_store_matches_batch(spark, tmp_path):
     from mongo_es_spark.operators.text import (
         boilerplate_clean_over_store,
         boilerplate_removal,
+        incremental_boilerplate,
     )
-    from mongo_es_spark.streaming.boilerplate import (
-        run_streaming_boilerplate,
-    )
+    from mongo_es_spark.streaming.fold import run_fold_stream
 
     rows = [
         (1, "c1 c2 u1 u2"),
@@ -299,16 +304,13 @@ def test_streaming_boilerplate_store_matches_batch(spark, tmp_path):
         "maxFilesPerTrigger", 1
     ).parquet(feed)
     store = str(tmp_path / "store")
-    q = run_streaming_boilerplate(
-        spark,
+    q = run_fold_stream(
         stream,
-        "doc_id",
-        "text",
-        store,
-        str(tmp_path / "out"),
-        str(tmp_path / "ckpt"),
-        chunk_words=2,
-        min_df=2,
+        lambda b, _: incremental_boilerplate(
+            spark, b, "doc_id", "text", store, chunk_words=2, min_df=2
+        ),
+        checkpoint=str(tmp_path / "ckpt"),
+        out=str(tmp_path / "out"),
     )
     drain(q)
 

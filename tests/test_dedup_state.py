@@ -13,7 +13,7 @@ from mongo_es_spark.streaming.dedup_state import suppress_redelivered
 
 
 import pytest
-from streamutil import drain
+from mongo_es_spark.streaming.fold import drain
 
 
 

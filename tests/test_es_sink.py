@@ -13,7 +13,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 import pytest
 
 from mongo_es_spark.streaming.sink import BulkItemError, EsBulkSink
-from streamutil import drain
+from mongo_es_spark.streaming.fold import drain
 
 
 

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
-from streamutil import drain
+from mongo_es_spark.streaming.fold import drain
 
 
 SF = "/root/testdata/sf0.001"
@@ -2456,7 +2456,7 @@ def test_streaming_boilerplate_output_replay_idempotent(
 ):
     # ADVICE r4: a foreachBatch replay must not duplicate the cleaned
     # rows under out_path — same batch id overwrites its own partition
-    from mongo_es_spark.streaming.boilerplate import write_batch_output
+    from mongo_es_spark.streaming.fold import write_batch_output
 
     out_path = str(tmp_path / "bp_out")
     batch = spark.createDataFrame(
@@ -2600,17 +2600,20 @@ def test_decode_audio_stereo_resample(spark):
 
 
 def test_streaming_ivf_maintenance(spark, tmp_path):
-    # streaming edition of the IVF store (streaming/ivf.py): first
-    # trigger trains, later triggers append idempotently; the final
-    # index holds every vector exactly once
+    # streaming edition of the IVF store (fold_into_ivf_index under
+    # run_fold_stream): first trigger trains, later triggers append
+    # idempotently; the final index holds every vector exactly once
     import os
     import time
 
     from pyspark.sql import functions as F
 
-    from mongo_es_spark.operators.similarity import append_to_ivf_index
+    from mongo_es_spark.operators.similarity import (
+        append_to_ivf_index,
+        fold_into_ivf_index,
+    )
     from mongo_es_spark.sources.tables import load_table
-    from mongo_es_spark.streaming.ivf import run_streaming_ivf
+    from mongo_es_spark.streaming.fold import run_fold_stream
 
     emb = load_table(
         spark, "/root/testdata/sf0.001", "embeddings"
@@ -2633,9 +2636,10 @@ def test_streaming_ivf_maintenance(spark, tmp_path):
         .parquet(feed)
     )
     index = str(tmp_path / "index")
-    q = run_streaming_ivf(
-        spark, stream, "vec_id", "embedding", index,
-        str(tmp_path / "ckpt"),
+    q = run_fold_stream(
+        stream,
+        lambda b, _: fold_into_ivf_index(b, "vec_id", "embedding", index),
+        checkpoint=str(tmp_path / "ckpt"),
     )
     drain(q)
     idx = spark.read.parquet(f"{index}/vectors")
@@ -3209,8 +3213,11 @@ def test_incremental_profile_merge_and_replay(spark, tmp_path):
 def test_streaming_profile_drain(spark, tmp_path):
     import os as _os
 
-    from mongo_es_spark.operators.profile import profile_over_store
-    from mongo_es_spark.streaming.profile import run_streaming_profile
+    from mongo_es_spark.operators.profile import (
+        incremental_profile,
+        profile_over_store,
+    )
+    from mongo_es_spark.streaming.fold import run_fold_stream
 
     feed = tmp_path / "feed"
     feed.mkdir()
@@ -3226,8 +3233,10 @@ def test_streaming_profile_drain(spark, tmp_path):
         "maxFilesPerTrigger", 1
     ).json(str(feed))
     store = str(tmp_path / "store")
-    q = run_streaming_profile(
-        spark, stream, store, str(tmp_path / "ckpt"), ["id", "s"]
+    q = run_fold_stream(
+        stream,
+        lambda b, _: incremental_profile(spark, b, store, ["id", "s"]),
+        checkpoint=str(tmp_path / "ckpt"),
     )
     drain(q)
     got = {
@@ -3903,15 +3912,13 @@ def test_streaming_embedding_pairs_equals_sequential_batches(spark, tmp_path):
     store: identical pair set (id pair + round-6 cosine) and
     identical indexed-vector set — foreachBatch adds delivery
     mechanics, never semantics."""
-    import glob
     import os
 
     from mongo_es_spark.operators.similarity import (
         incremental_embedding_pairs,
     )
-    from mongo_es_spark.streaming.embedding_pairs import (
-        run_streaming_embedding_pairs,
-    )
+    from mongo_es_spark.queries import _write_ordered_feed
+    from mongo_es_spark.streaming.fold import run_fold_stream
 
     emb = (
         spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -3934,20 +3941,20 @@ def test_streaming_embedding_pairs_equals_sequential_batches(spark, tmp_path):
         }
 
     feed = str(tmp_path / "feed")
-    for i, sl in enumerate(slices):
-        sl.coalesce(1).write.mode("append").parquet(feed)
-        for f in glob.glob(os.path.join(feed, "*.parquet")):
-            if os.path.getmtime(f) > 1_700_000_000:
-                os.utime(f, (1_600_000_000 + i * 60,) * 2)
+    _write_ordered_feed(feed, slices)
     stream = (
         spark.readStream.schema(spark.read.parquet(feed).schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(feed)
     )
     stream_store = str(tmp_path / "stream_store")
-    q = run_streaming_embedding_pairs(
-        spark, stream, "vec_id", "embedding", stream_store,
-        str(tmp_path / "out"), str(tmp_path / "ckpt"), threshold=0.45,
+    q = run_fold_stream(
+        stream,
+        lambda b, _: incremental_embedding_pairs(
+            spark, b, "vec_id", "embedding", stream_store, threshold=0.45
+        ),
+        checkpoint=str(tmp_path / "ckpt"),
+        out=str(tmp_path / "out"),
     )
     drain(q)
     stream_pairs = {

@@ -10,7 +10,7 @@ import os
 from collections import Counter
 
 from pyspark.sql import functions as F
-from streamutil import drain
+from mongo_es_spark.streaming.fold import drain
 
 
 SCHEMA = "doc_id long, text string"

@@ -21,7 +21,7 @@ import shutil
 import pytest
 
 from pyspark.sql import functions as F
-from streamutil import drain
+from mongo_es_spark.streaming.fold import drain
 
 
 

@@ -9,7 +9,7 @@ import os
 from pyspark.sql import functions as F
 
 from mongo_es_spark.streaming.sessions import sessionize_stream
-from streamutil import drain
+from mongo_es_spark.streaming.fold import drain
 
 
 SCHEMA = "user_id long, event_id long, ts_ms long"

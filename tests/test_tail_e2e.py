@@ -18,7 +18,7 @@ from mongo_es_spark.core import dispatch_oplog, make_ts, merge_oplogs, transform
 from mongo_es_spark.sources.cdc import file_oplog_stream
 from mongo_es_spark.streaming.sink import ParquetIndexSink
 from mongo_es_spark.streaming.tail import run_scan, run_tail
-from streamutil import drain
+from mongo_es_spark.streaming.fold import drain
 
 
 HINTS = {"name": "string", "shareCount.all": "long", "deleted": "boolean"}

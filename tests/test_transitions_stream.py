@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import json
 import os
-from streamutil import drain
+from mongo_es_spark.streaming.fold import drain
 
 
 SCHEMA = "user_id long, event_id long, ts_ms long, event_type string"

@@ -9,7 +9,7 @@ import os
 from mongo_es_spark.core import make_ts
 from mongo_es_spark.sources.cdc import OPLOG_SCHEMA
 from mongo_es_spark.streaming.windows import windowed_op_counts
-from streamutil import drain
+from mongo_es_spark.streaming.fold import drain
 
 
 
