@@ -204,11 +204,6 @@ class Controls:
     # Spark-specific companion to the docs/s bucket: a per-trigger
     # source cap bounding each micro-batch's file count
     max_files_per_trigger: Optional[int] = None
-    # Spark-specific: the parquet sink's write shape when no ES host
-    # is configured — "rewrite" (versioned full-state rewrite, small
-    # tests) or "merge" (merge-on-read append log, per-trigger cost
-    # flat in state size — the scale-honest emulation)
-    parquet_sink_mode: str = "rewrite"
 
     @classmethod
     def from_dict(cls, d: dict) -> "Controls":
@@ -219,7 +214,6 @@ class Controls:
             elasticsearch_bulk_size=d.get("elasticsearchBulkSize", 5000),
             index_name_suffix=d.get("indexNameSuffix", ""),
             max_files_per_trigger=d.get("maxFilesPerTrigger"),
-            parquet_sink_mode=d.get("parquetSinkMode", "rewrite"),
         )
 
 

@@ -28,7 +28,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 METADATA_SCHEMA = (
     "doc_id long, n_bytes long, media_type string, width int, height int, "
@@ -763,156 +762,3 @@ def content_defined_chunks(
         )
         .select("doc_id", "chunk_idx", "offset", "length", "digest")
     )
-
-
-def _cdc_params_path(store_path: str) -> str:
-    # underscore prefix: invisible to spark.read.parquet(store_path)
-    return store_path.rstrip("/") + "/_cdc_params"
-
-
-def incremental_payload_dedup(
-    spark,
-    batch_df: DataFrame,
-    store_path: str,
-    window: int = 4,
-    mask_bits: int = 5,
-    min_len: int = 16,
-    max_len: int = 64,
-) -> DataFrame:
-    """Chunk-level storage dedup across ingest batches — the
-    content-defined-chunking store: chunk a NEW batch of payloads
-    (:func:`content_defined_chunks`), split each payload's chunks into
-    FIRST-SEEN (novel bytes to store) vs already-known (seen in the
-    persisted digest store or earlier in this batch), append the
-    first-seen digests, and report per-payload dedup accounting —
-    work ∝ the new batch, the same incremental contract as the
-    minhash / substring / boilerplate stores.
-
-    "First seen within the batch" uses the same lexicographic
-    ``(doc_id, chunk_idx)`` rule as the substring-dedup winner, so a
-    batch replayed in any split reproduces identical accounting.
-    Chunking parameters are pinned in a ``_cdc_params`` sidecar
-    (a mismatch re-segments everything and silently zeroes dedup);
-    an XOR (doc_id, payload) digest makes replays append nothing
-    while re-submissions with changed bytes count as new batches.
-
-    Output per payload: ``(doc_id, n_chunks, dup_chunks, n_bytes,
-    dup_bytes)`` — ``dup_bytes / n_bytes`` is the storage saving the
-    chunk store delivers for this batch.
-    """
-    from ..storeio import read_params_rows, read_parquet_if_exists
-
-    params_path = _cdc_params_path(store_path)
-    # cached-row sidecar read (storeio): the params guard costs zero
-    # jobs after the first trigger
-    params_rows = read_params_rows(spark, params_path)
-    sig = f"{window},{mask_bits},{min_len},{max_len}"
-    if params_rows:
-        stored = params_rows[0]["sig"]
-        if stored != sig:
-            raise ValueError(
-                f"payload-chunk store at {store_path} was written "
-                f"with params [{stored}], called with [{sig}]"
-            )
-    store = read_parquet_if_exists(spark, store_path)
-
-    # content folded into the digest alongside the id: a batch
-    # re-submitted with the same doc_ids but different payload bytes
-    # is a NEW batch, not a replay
-    tag = int(
-        batch_df.agg(
-            F.coalesce(
-                F.bit_xor(
-                    F.xxhash64(
-                        F.col("doc_id"),
-                        F.coalesce(
-                            F.col("payload"),
-                            F.lit(b""),
-                        ),
-                    )
-                ),
-                F.lit(0),
-            ).alias("t")
-        ).head()["t"]
-    )
-    replay = store is not None and (
-        store.filter(F.col("__batch") == tag).limit(1).count() > 0
-    )
-
-    chunks = content_defined_chunks(
-        batch_df,
-        window=window,
-        mask_bits=mask_bits,
-        min_len=min_len,
-        max_len=max_len,
-    )
-    first_in_batch = Window.partitionBy("digest")
-    marked = chunks.withColumn(
-        "__min",
-        F.min(F.struct(F.col("doc_id"), F.col("chunk_idx"))).over(
-            first_in_batch
-        ),
-    ).withColumn(
-        "__first",
-        (F.col("__min.doc_id") == F.col("doc_id"))
-        & (F.col("__min.chunk_idx") == F.col("chunk_idx")),
-    )
-    if store is not None:
-        prior = store.select("digest").distinct()
-        if replay:
-            # a replayed batch must classify against the store state
-            # BEFORE its own append, or every chunk reads as known
-            prior = (
-                store.filter(F.col("__batch") != tag)
-                .select("digest")
-                .distinct()
-            )
-        known = marked.join(prior, "digest", "left_semi").select(
-            "doc_id", "chunk_idx"
-        )
-        hit = F.lit(True)
-        marked = marked.join(
-            known.withColumn("__known", hit), ["doc_id", "chunk_idx"], "left"
-        )
-        is_dup = F.col("__known").isNotNull() | ~F.col("__first")
-        fresh = (
-            marked.filter(F.col("__first") & F.col("__known").isNull())
-            .select("digest", "length")
-        )
-    else:
-        is_dup = ~F.col("__first")
-        fresh = marked.filter(F.col("__first")).select(
-            "digest", "length"
-        )
-    out = (
-        marked.groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_chunks"),
-            F.sum(is_dup.cast("long")).alias("dup_chunks"),
-            F.sum("length").cast("long").alias("n_bytes"),
-            F.sum(F.when(is_dup, F.col("length")).otherwise(0))
-            .cast("long")
-            .alias("dup_bytes"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    if not replay:
-        fresh.dropDuplicates(["digest"]).withColumn(
-            "__batch", F.lit(tag)
-        ).write.mode("append").parquet(store_path)
-        if not params_rows:
-            # driver-side one-row sidecar write; string field
-            # round-trips the old Spark writer's lit() exactly
-            import pyarrow as pa
-
-            from pyspark.sql import Row as _Row
-
-            from ..storeio import prime_params_cache, write_params_row
-
-            write_params_row(
-                params_path,
-                pa.schema([("sig", pa.string())]),
-                {"sig": sig},
-            )
-            prime_params_cache(params_path, [_Row(sig=sig)])
-    return out

@@ -564,6 +564,8 @@ def _eval(ctx: _Ctx, node: Mapping, scoring: bool) -> DataFrame:
         if not children:
             raise ValueError("dis_max needs at least one sub-query")
         tb = float(body.get("tie_breaker", 0.0))
+        if not 0.0 <= tb <= 1.0:
+            raise ValueError("dis_max tie_breaker must be in [0, 1]")
         u = children[0]
         for c in children[1:]:
             u = u.unionByName(c)

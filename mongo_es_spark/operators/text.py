@@ -1828,66 +1828,6 @@ def _bm25_scored(
     )
 
 
-def multi_match_over_stores(
-    spark,
-    stores: "Mapping[str, str]",
-    terms: Sequence[str],
-    boosts: "Mapping[str, float] | None" = None,
-    match_type: str = "best_fields",
-    tie_breaker: float = 0.0,
-    top_k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
-    """ES ``multi_match``: one query scored against SEVERAL analyzed
-    fields, each field backed by its own postings store (``stores``
-    maps field name → store path — per-field indexes are the
-    multi-field layout this engine uses instead of a fielded postings
-    column; each store may declare its own analyzer).  Per-field
-    boosts (``title^2``) multiply that field's BM25.  ``best_fields``
-    takes the best field's score plus ``tie_breaker`` times the rest
-    (the Lucene dis_max rewrite); ``most_fields`` sums all fields.
-
-    Scale shape: one token-pruned scored frame per field (each its
-    own pushed-filter scan), a union of matched-sized frames, one
-    doc-keyed aggregate.  Output: ``(doc, score)`` top-k, score desc
-    / doc asc."""
-    if match_type not in ("best_fields", "most_fields"):
-        raise ValueError(
-            "match_type must be 'best_fields' or 'most_fields'"
-        )
-    boosts = dict(boosts or {})
-    per = []
-    for fname, path in stores.items():
-        s = _bm25_scored(spark, path, terms, k1, b)
-        if s is None:
-            continue
-        w = float(boosts.get(fname, 1.0))
-        per.append(
-            s.select(
-                "doc", (F.col("score") * F.lit(w)).alias("score")
-            )
-        )
-    if not per:
-        return spark.createDataFrame([], "doc long, score double")
-    u = per[0]
-    for p in per[1:]:
-        u = u.unionByName(p)
-    if match_type == "most_fields":
-        combined = F.sum("score")
-    else:
-        tb = float(tie_breaker)
-        combined = F.max("score") + F.lit(tb) * (
-            F.sum("score") - F.max("score")
-        )
-    return (
-        u.groupBy("doc")
-        .agg(F.round(combined, 6).alias("score"))
-        .orderBy(F.col("score").desc(), F.col("doc").asc())
-        .limit(int(top_k))
-    )
-
-
 def match_over_store(
     spark,
     store_path: str,
@@ -3682,54 +3622,6 @@ def boosting_over_store(
                 6,
             ).alias("score"),
         )
-        .orderBy(F.col("score").desc(), F.col("doc").asc())
-        .limit(top_k)
-    )
-
-
-def dis_max_over_store(
-    spark,
-    store_path: str,
-    queries: Sequence[Sequence[str]],
-    tie_breaker: float = 0.0,
-    k1: float = 1.2,
-    b: float = 0.75,
-    top_k: int = 10,
-) -> DataFrame:
-    """ES ``dis_max``: each subquery scores independently; a doc's
-    final score is its BEST subquery score plus ``tie_breaker`` times
-    the rest — the "don't double-count synonyms" combinator (at
-    ``tie_breaker=0`` strictly the max; at 1 it degenerates to the
-    bool-should sum).
-
-    Scale shape: one token-pruned scored frame per subquery (the
-    per-leg scans prune independently; a shared-scan msearch form is
-    the amortization if legs grow — ``bm25_batch_over_store``), one
-    union + doc-keyed aggregate.  Each leg's score is the leg's OWN
-    rounded BM25 (identical to ``bm25_over_store`` on its terms), so
-    the combination is value-pinnable.  Output: ``(doc, score)``
-    top-k."""
-    if not queries:
-        raise ValueError("dis_max needs at least one subquery")
-    if not (0.0 <= tie_breaker <= 1.0):
-        raise ValueError("tie_breaker must be in [0, 1]")
-    legs = []
-    for i, terms in enumerate(queries):
-        leg = _bm25_scored(spark, store_path, list(terms), k1, b)
-        if leg is None:
-            return spark.createDataFrame([], "doc long, score double")
-        legs.append(leg.select("doc", F.col("score").alias("__s")))
-    allscores = legs[0]
-    for leg in legs[1:]:
-        allscores = allscores.unionByName(leg)
-    combined = F.round(
-        F.max("__s")
-        + F.lit(float(tie_breaker)) * (F.sum("__s") - F.max("__s")),
-        6,
-    )
-    return (
-        allscores.groupBy("doc")
-        .agg(combined.alias("score"))
         .orderBy(F.col("score").desc(), F.col("doc").asc())
         .limit(top_k)
     )

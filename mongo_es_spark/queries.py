@@ -1454,7 +1454,7 @@ def streaming_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         components_over_store,
         incremental_components,
     )
-    from .streaming.fold import drain, run_fold_stream
+    from .streaming.fold import drain, run_fold_stream, write_ordered_feed
 
     docs = load_table(spark, sf_dir, "documents")
     # materialize once: each of the 3 feed-slice writes below would
@@ -1467,7 +1467,7 @@ def streaming_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         feed = os.path.join(base, "feed")
         store = os.path.join(base, "store")
         split = F.pmod(F.xxhash64("i", "j"), F.lit(3))
-        _write_ordered_feed(feed, [pairs.filter(split == b) for b in range(3)])
+        write_ordered_feed(feed, [pairs.filter(split == b) for b in range(3)])
         stream = (
             spark.readStream.schema("i long, j long, jaccard double")
             .option("maxFilesPerTrigger", 1)
@@ -1712,7 +1712,7 @@ def streaming_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from .operators.similarity import incremental_embedding_pairs
-    from .streaming.fold import drain, run_fold_stream
+    from .streaming.fold import drain, run_fold_stream, write_ordered_feed
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
@@ -1720,7 +1720,7 @@ def streaming_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_total = emb.count()
 
     def build_feed(feed: str) -> None:
-        _write_ordered_feed(
+        write_ordered_feed(
             feed,
             [
                 emb.filter(F.pmod(F.col("vec_id"), F.lit(3)) == i)
@@ -2848,7 +2848,7 @@ def streaming_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from .operators.text import bm25_over_store, incremental_bm25_index
-    from .streaming.fold import drain, run_fold_stream
+    from .streaming.fold import drain, run_fold_stream, write_ordered_feed
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
@@ -2856,7 +2856,7 @@ def streaming_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build_feed(feed: str) -> None:
         split = F.pmod(F.xxhash64("doc_id"), F.lit(3))
-        _write_ordered_feed(feed, [docs.filter(split == b) for b in range(3)])
+        write_ordered_feed(feed, [docs.filter(split == b) for b in range(3)])
 
     base = tempfile.mkdtemp(prefix="bm_stream_")
     try:
@@ -3185,32 +3185,6 @@ def _shared_knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).hint("rebalance").write.mode("overwrite").parquet(path)
 
     return spark.read.parquet(_shared_store("knn5", sf_dir, build))
-
-
-def _write_ordered_feed(feed: str, frames) -> None:
-    """Write a streaming FEED: one file per frame under ``feed``, with
-    strictly increasing mtimes pinned on exactly the files each write
-    created, so a ``maxFilesPerTrigger=1`` file stream takes frame
-    ``i`` as trigger ``i`` (the file source orders by mtime; unpinned,
-    files written within one clock tick drain in arbitrary order).  A
-    frame is a DataFrame (one parquet file) or a list of records (one
-    JSON-lines file, the oplog feed shape).  Feeds shared across
-    queries and bench repeats are built once with ``_shared_store``;
-    each run still drains through a FRESH checkpoint."""
-    import json
-
-    os.makedirs(feed, exist_ok=True)
-    for i, frame in enumerate(frames):
-        before = set(os.listdir(feed))
-        if isinstance(frame, DataFrame):
-            frame.coalesce(1).write.mode("append").parquet(feed)
-        else:
-            with open(os.path.join(feed, f"b{i}.json"), "w") as fh:
-                fh.writelines(json.dumps(r) + "\n" for r in frame)
-        for name in set(os.listdir(feed)) - before:
-            os.utime(
-                os.path.join(feed, name), (1_600_000_000 + i * 60,) * 2
-            )
 
 
 def _shared_derived_store(kind: str, sf_dir: str, src: str, post) -> str:
@@ -4975,7 +4949,7 @@ def streaming_seed_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         incremental_seed_distance,
         seed_distance_over_store,
     )
-    from .streaming.fold import drain, run_fold_stream
+    from .streaming.fold import drain, run_fold_stream, write_ordered_feed
 
     emb = load_table(spark, sf_dir, "embeddings")
     edges = _shared_knn_edges(spark, sf_dir)
@@ -4985,7 +4959,7 @@ def streaming_seed_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build_feed(feed: str) -> None:
         split = F.pmod(F.xxhash64("i", "j"), F.lit(3))
-        _write_ordered_feed(feed, [edges.filter(split == b) for b in range(3)])
+        write_ordered_feed(feed, [edges.filter(split == b) for b in range(3)])
 
     base = tempfile.mkdtemp(prefix="sd_stream_")
     try:
@@ -7206,7 +7180,7 @@ def streaming_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from .streaming.fold import drain
+    from .streaming.fold import drain, write_ordered_feed
     from .streaming.funnel import funnel_snapshot, run_streaming_funnel
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -7219,7 +7193,7 @@ def streaming_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = tempfile.mkdtemp(prefix="funnel_stream_")
     try:
         feed = os.path.join(base, "feed")
-        _write_ordered_feed(
+        write_ordered_feed(
             feed,
             [
                 ev.filter(F.col("ts_ms") <= t1),
@@ -7530,7 +7504,7 @@ def streaming_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         append_to_ivf_index,
         fold_into_ivf_index,
     )
-    from .streaming.fold import drain, run_fold_stream
+    from .streaming.fold import drain, run_fold_stream, write_ordered_feed
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
@@ -7539,7 +7513,7 @@ def streaming_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         feed = os.path.join(base, "feed")
         # pinned order: slice 0 is the first trigger, so it trains
-        _write_ordered_feed(
+        write_ordered_feed(
             feed,
             [
                 emb.filter(F.pmod(F.col("vec_id"), F.lit(3)) == i)
@@ -8040,7 +8014,7 @@ def streaming_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from .operators.text import incremental_line_dedup
-    from .streaming.fold import drain, run_fold_stream
+    from .streaming.fold import drain, run_fold_stream, write_ordered_feed
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     t1, t2 = docs.approxQuantile("doc_id", [0.33, 0.66], 0.001)
@@ -8049,7 +8023,7 @@ def streaming_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         feed = os.path.join(base, "feed")
         store = os.path.join(base, "store")
         # trigger order = id order
-        _write_ordered_feed(
+        write_ordered_feed(
             feed,
             [
                 docs.filter(F.col("doc_id") <= t1),
@@ -8099,7 +8073,7 @@ def streaming_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from .operators.text import incremental_substring_dedup
-    from .streaming.fold import drain, run_fold_stream
+    from .streaming.fold import drain, run_fold_stream, write_ordered_feed
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     t1, t2 = docs.approxQuantile("doc_id", [0.33, 0.66], 0.001)
@@ -8108,7 +8082,7 @@ def streaming_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         feed = os.path.join(base, "feed")
         store = os.path.join(base, "store")
         # trigger order = id order
-        _write_ordered_feed(
+        write_ordered_feed(
             feed,
             [
                 docs.filter(F.col("doc_id") <= t1),
@@ -8164,7 +8138,7 @@ def streaming_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
         boilerplate_clean_over_store,
         incremental_boilerplate,
     )
-    from .streaming.fold import drain, run_fold_stream
+    from .streaming.fold import drain, run_fold_stream, write_ordered_feed
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
@@ -8172,7 +8146,7 @@ def streaming_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build_feed(feed: str) -> None:
         # three disjoint slices -> three files -> three triggers
-        _write_ordered_feed(
+        write_ordered_feed(
             feed,
             [
                 docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == i)
@@ -8671,14 +8645,14 @@ def streaming_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from .operators.dedup import incremental_winnow_pairs
-    from .streaming.fold import drain, run_fold_stream
+    from .streaming.fold import drain, run_fold_stream, write_ordered_feed
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
     def build_feed(feed: str) -> None:
         # a deterministic trigger order (any order is correct;
         # determinism aids replay)
-        _write_ordered_feed(
+        write_ordered_feed(
             feed, [docs.filter(F.col("doc_id") % 3 == s) for s in (2, 0, 1)]
         )
 
@@ -9472,7 +9446,7 @@ def streaming_search_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .core import make_ts
     from .operators.text import bm25_over_store
     from .sources.cdc import file_oplog_stream
-    from .streaming.fold import drain
+    from .streaming.fold import drain, write_ordered_feed
     from .streaming.sink import ParquetIndexSink, SearchIndexedSink
     from .streaming.tail import run_tail
 
@@ -9497,7 +9471,7 @@ def streaming_search_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         # content digest must no-op it (at-least-once -> exactly-once)
         batches = [ins, upd, dels + upd]
         seq = itertools.count(1)
-        _write_ordered_feed(
+        write_ordered_feed(
             feed,
             [
                 [
@@ -9527,7 +9501,7 @@ def streaming_search_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         store = os.path.join(base, "bm")
         sink = SearchIndexedSink(
-            ParquetIndexSink(os.path.join(base, "sink"), mode="merge"),
+            ParquetIndexSink(os.path.join(base, "sink")),
             store,
             text_field="text",
         )
@@ -9815,21 +9789,23 @@ def search_boosting(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def search_dismax(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ES dis_max (operators/text.py:dis_max_over_store): two
-    subqueries score independently (each leg identical to its own
-    bm25_over_store), a doc takes its best leg plus 0.3x the rest —
-    the don't-double-count-synonyms combinator; per-leg token-pruned
-    scans + one doc-keyed aggregate."""
-    from .operators.text import dis_max_over_store
+    """ES dis_max through the _search executor: two match legs score
+    independently off the shared weight frame, a doc takes its best
+    leg plus 0.3x the rest — the don't-double-count-synonyms
+    combinator; one union + doc-keyed aggregate."""
+    from .operators.searchapi import search
 
     store = _shared_bm25_store(spark, sf_dir)
-    return dis_max_over_store(
-        spark,
-        store,
-        [["spark", "table"], ["stream", "value"]],
-        tie_breaker=0.3,
-        top_k=10,
-    ).select(F.col("doc").alias("doc_id"), "score")
+    return search(spark, store, {
+        "query": {"dis_max": {
+            "queries": [
+                {"match": {"text": "spark table"}},
+                {"match": {"text": "stream value"}},
+            ],
+            "tie_breaker": 0.3,
+        }},
+        "size": 10,
+    }).select(F.col("doc").alias("doc_id"), "score")
 
 
 @register(
@@ -9969,7 +9945,7 @@ def streaming_dense_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         materialize_ivf_index,
     )
     from .sources.cdc import file_oplog_stream
-    from .streaming.fold import drain
+    from .streaming.fold import drain, write_ordered_feed
     from .streaming.sink import DenseIndexedSink, ParquetIndexSink
     from .streaming.tail import run_tail
 
@@ -9995,7 +9971,7 @@ def streaming_dense_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
         batches = [ins, upd, dels + upd]  # b2 redelivers the updates
         seq = itertools.count(1)
-        _write_ordered_feed(
+        write_ordered_feed(
             feed,
             [
                 [
@@ -10040,7 +10016,7 @@ def streaming_dense_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         store = os.path.join(base, "ivf")
         shutil.copytree(pristine, store)
         sink = DenseIndexedSink(
-            ParquetIndexSink(os.path.join(base, "sink"), mode="merge"),
+            ParquetIndexSink(os.path.join(base, "sink")),
             store,
             vec_field="embedding",
         )
@@ -11816,26 +11792,28 @@ def search_api_function_score(
     """,
 )
 def search_multi_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ES multi_match best_fields (operators/text.py:
-    multi_match_over_stores): one query scored against TWO analyzed
-    fields — "title" (the first five tokens, its own postings store
-    and its own df/avgdl statistics) boosted 2x, and the body — best
-    field's score plus tie_breaker 0.3 times the rest, the Lucene
-    dis_max rewrite.  Per-field stores are the engine's multi-field
+    """ES multi_match best_fields through the _search executor: one
+    query scored against TWO analyzed fields — "title" (the first
+    five tokens, its own postings store and its own df/avgdl
+    statistics) boosted 2x, and the body — best field's score plus
+    tie_breaker 0.3 times the rest, the Lucene dis_max rewrite.  Per-field stores are the engine's multi-field
     layout (each may declare its own analyzer).  The oracle
     re-derives both fields' BM25 and the combination."""
-    from .operators.text import multi_match_over_stores
+    from .operators.searchapi import search
 
     body = _shared_bm25_store(spark, sf_dir)
     title = _shared_title_store(spark, sf_dir)
-    return multi_match_over_stores(
-        spark, {"title": title, "body": body},
-        ["value", "spark"],
-        boosts={"title": 2.0},
-        match_type="best_fields",
-        tie_breaker=0.3,
-        top_k=10,
-    ).select(F.col("doc").alias("doc_id"), "score")
+    return search(spark, body, {
+        "query": {"multi_match": {
+            "query": "value spark",
+            "fields": ["title^2", "body"],
+            "type": "best_fields",
+            "tie_breaker": 0.3,
+        }},
+        "size": 10,
+    }, field_stores={"title": title, "body": body}).select(
+        F.col("doc").alias("doc_id"), "score"
+    )
 
 
 @register(

@@ -117,8 +117,7 @@ def run(
             )
         else:
             sink = ParquetIndexSink(
-                os.path.join(work_dir, "index", task.name()),
-                mode=config.controls.parquet_sink_mode,
+                os.path.join(work_dir, "index", task.name())
             )
         si = task.load.search_index
         if si:

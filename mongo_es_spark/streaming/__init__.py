@@ -1,4 +1,4 @@
 """Structured Streaming: the CDC tail phase (``tail``, ``sink``), the
 fold-stream runtime every incremental store drains through
 (``fold``), streaming curation, and the stateful sketch / funnel /
-session maintainers."""
+transition maintainers."""

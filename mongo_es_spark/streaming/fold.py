@@ -24,11 +24,14 @@ Feed ORDER is the fold's business, not the runtime's: the causal
 first-arrival stores (line / substring dedup, curation) reproduce
 their batch operators only over an id-ordered feed, while the
 order-free ones (DF sums, min-composing labels and distances, id
-identity) take any batching.
+identity) take any batching.  :func:`write_ordered_feed` builds a feed
+whose file order is the frame order.
 """
 
 from __future__ import annotations
 
+import json
+import os
 import time
 from typing import Callable, Optional
 
@@ -58,6 +61,28 @@ def write_batch_output(
         .partitionBy("__batch_id")
         .parquet(out_path)
     )
+
+
+def write_ordered_feed(feed: str, frames) -> None:
+    """Write a streaming FEED: one file per frame under ``feed``, with
+    strictly increasing mtimes pinned on exactly the files each write
+    created, so a ``maxFilesPerTrigger=1`` file stream takes frame
+    ``i`` as trigger ``i`` (the file source orders by mtime; unpinned,
+    files written within one clock tick drain in arbitrary order).  A
+    frame is a DataFrame (one parquet file) or a list of records (one
+    JSON-lines file ``b<i>.json``, the oplog feed shape)."""
+    os.makedirs(feed, exist_ok=True)
+    for i, frame in enumerate(frames):
+        before = set(os.listdir(feed))
+        if isinstance(frame, DataFrame):
+            frame.coalesce(1).write.mode("append").parquet(feed)
+        else:
+            with open(os.path.join(feed, f"b{i}.json"), "w") as fh:
+                fh.writelines(json.dumps(r) + "\n" for r in frame)
+        for name in set(os.listdir(feed)) - before:
+            os.utime(
+                os.path.join(feed, name), (1_600_000_000 + i * 60,) * 2
+            )
 
 
 def run_fold_stream(

@@ -7,11 +7,12 @@ overwrite-by-key — the at-least-once contract (SURVEY §7 hard part (c)).
 
 Two implementations:
 
-* :class:`ParquetIndexSink` — a versioned parquet directory emulating
-  the keyed index for tests/benchmarks: per batch, the new state is
-  ``(old state anti-join batch keys) union upserts``.  Versioned dirs +
-  a ``_CURRENT`` pointer make replays idempotent (same batch id
-  rewrites the same version), mirroring how Spark's offset log plus an
+* :class:`ParquetIndexSink` — a merge-on-read parquet log emulating
+  the keyed index when no cluster is configured: each batch appends
+  its upserts and delete tombstones stamped with the batch id, and
+  readers resolve latest-batch-wins per key.  A replayed batch
+  re-appends identical rows under the same id, so replays are
+  idempotent by content, mirroring how Spark's offset log plus an
   idempotent sink gives effectively-once.
 * :class:`EsBulkSink` — the real thing: per-partition HTTP ``_bulk``
   bodies (executor-side, connection per partition — the distributed
@@ -26,52 +27,62 @@ import json
 import os
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 IR_COLUMNS = ("action", "id", "parent", "data", "timestamp")
 
 
+def _latest_live(log: DataFrame) -> DataFrame:
+    """Latest-batch-wins row per ``_id`` of a sink log, tombstones
+    dropped."""
+    w = Window.partitionBy("_id").orderBy(F.col("__batch").desc())
+    return (
+        log.withColumn("__rn", F.row_number().over(w))
+        .filter((F.col("__rn") == 1) & (~F.col("__del")))
+        .drop("__rn")
+    )
+
+
 class ParquetIndexSink:
-    """Keyed upsert/delete state over parquet, in one of two modes:
+    """Keyed upsert/delete state over parquet as a merge-on-read log,
+    the same MVCC pattern as the BM25/IVF search stores: each batch
+    APPENDS its IR rows (upserts and delete tombstones) stamped with
+    the batch id to ``log/``; readers resolve latest-batch-wins per key
+    and drop tombstones.  Per-trigger cost is proportional to the batch
+    size and flat in state size — the scale-honest emulation of
+    Elasticsearch's upsert-by-key.  Replays are idempotent by CONTENT:
+    a replayed batch re-appends byte-identical rows at the same batch
+    id, and latest-wins resolution is indifferent to which copy it
+    picks.  :meth:`compact` folds the log back to one row per live key
+    (crash-aware directory swap), bounding read-time resolution.
 
-    * ``mode="rewrite"`` (default) — versioned full-state rewrite per
-      batch: new state is ``(old state anti-join batch keys) union
-      upserts`` under a fresh ``v{batch_id}`` directory + ``_CURRENT``
-      pointer flip.  Exact and simple, but per-trigger cost grows with
-      STATE size — keep it for small tests.
-    * ``mode="merge"`` — merge-on-read, the same MVCC pattern as the
-      BM25/IVF search stores: each batch APPENDS its IR rows (upserts
-      and delete tombstones) stamped with the batch id to ``log/``;
-      readers resolve latest-batch-wins per key and drop tombstones.
-      Per-trigger cost ∝ batch size, flat in state size — the
-      scale-honest emulation of Elasticsearch's upsert-by-key.
-      Replays are idempotent by CONTENT: a replayed batch re-appends
-      byte-identical rows at the same batch id, and latest-wins
-      resolution is indifferent to which copy it picks.
-      :meth:`compact` folds the log back to one row per live key
-      (crash-aware directory swap), bounding read-time resolution.
-    """
+    ``mode`` has one legal value, ``"merge"``.  A directory holding the
+    retired versioned layout (a ``_CURRENT`` pointer and no ``log/``)
+    is refused: read as a log it would look empty, and every sink-state
+    lookup against it would silently miss."""
 
-    def __init__(self, path: str, mode: str = "rewrite"):
-        if mode not in ("rewrite", "merge"):
-            raise ValueError(f"unknown ParquetIndexSink mode {mode!r}")
+    def __init__(self, path: str, mode: str = "merge"):
+        if mode != "merge":
+            raise ValueError(
+                f"unknown ParquetIndexSink mode {mode!r}; the only "
+                "layout is 'merge'"
+            )
+        pointer = os.path.join(path, "_CURRENT")
+        if os.path.exists(pointer) and not os.path.exists(
+            os.path.join(path, "log")
+        ):
+            raise ValueError(
+                f"{path} holds the retired versioned sink layout "
+                "(_CURRENT pointer, no log/); re-run the scan into a "
+                "fresh directory"
+            )
         self.path = path
         self.mode = mode
         os.makedirs(path, exist_ok=True)
 
-    def _pointer(self) -> str:
-        return os.path.join(self.path, "_CURRENT")
-
     def _log(self) -> str:
         return os.path.join(self.path, "log")
-
-    def current_version(self) -> Optional[str]:
-        try:
-            with open(self._pointer(), "r", encoding="utf-8") as fh:
-                return fh.read().strip() or None
-        except FileNotFoundError:
-            return None
 
     def read_state(
         self, spark: SparkSession, ids: Optional[DataFrame] = None
@@ -79,106 +90,55 @@ class ParquetIndexSink:
         """Current index state: ``(_id, _parent, data)`` or None.
 
         ``ids`` (a one-column ``id`` frame of the batch's keys) prunes
-        the merge-mode resolution to the batch's keys (a broadcast
-        semi-join below the window — the point-lookup shape); rewrite
-        mode serves the state whole and the downstream join prunes."""
-        if self.mode == "merge":
-            from ..storeio import read_parquet_if_exists
+        the resolution to the batch's keys (a broadcast semi-join below
+        the window — the point-lookup shape)."""
+        from ..storeio import read_parquet_if_exists
 
-            log = read_parquet_if_exists(spark, self._log())
-            if log is None:
-                return None
-            if ids is not None:
-                log = log.join(
-                    F.broadcast(
-                        ids.select(F.col("id").cast("string").alias("_id"))
-                    ),
-                    "_id",
-                    "left_semi",
-                )
-            from pyspark.sql import Window
-
-            w = Window.partitionBy("_id").orderBy(F.col("__batch").desc())
-            return (
-                log.withColumn("__rn", F.row_number().over(w))
-                .filter((F.col("__rn") == 1) & (~F.col("__del")))
-                .select("_id", "_parent", "data")
-            )
-        version = self.current_version()
-        if version is None:
+        log = read_parquet_if_exists(spark, self._log())
+        if log is None:
             return None
-        state = spark.read.parquet(os.path.join(self.path, version))
-        # one sink-state contract across modes: _id is STRING (merge
-        # mode canonicalizes on write; pre-contract rewrite versions
-        # may hold native-typed ids — cast on read so consumers never
-        # depend on implicit cross-type join casts)
-        return state.withColumn("_id", F.col("_id").cast("string"))
+        if ids is not None:
+            log = log.join(
+                F.broadcast(
+                    ids.select(F.col("id").cast("string").alias("_id"))
+                ),
+                "_id",
+                "left_semi",
+            )
+        return _latest_live(log).select("_id", "_parent", "data")
 
     def apply(self, spark: SparkSession, irs: DataFrame, batch_id: int) -> None:
-        """L1: apply one compacted IR batch. Compaction guarantees at
+        """L1: append one compacted IR batch. Compaction guarantees at
         most one IR per id, so ordering within the batch is moot —
-        the invariant that makes this safe across partitions (and
-        makes the merge log's batch id a total order per key)."""
-        if self.mode == "merge":
-            (
-                irs.select(
-                    F.col("id").cast("string").alias("_id"),
-                    F.col("parent").alias("_parent"),
-                    F.col("data"),
-                    (F.col("action") == "delete").alias("__del"),
-                )
-                .withColumn("__batch", F.lit(int(batch_id)).cast("long"))
-                .write.mode("append")
-                .parquet(self._log())
+        the invariant that makes this safe across partitions and makes
+        the batch id a total order per key."""
+        (
+            irs.select(
+                F.col("id").cast("string").alias("_id"),
+                F.col("parent").alias("_parent"),
+                F.col("data"),
+                (F.col("action") == "delete").alias("__del"),
             )
-            return
-        upserts = irs.filter(F.col("action") == "upsert").select(
-            F.col("id").cast("string").alias("_id"),
-            F.col("parent").alias("_parent"),
-            F.col("data"),
+            .withColumn("__batch", F.lit(int(batch_id)).cast("long"))
+            .write.mode("append")
+            .parquet(self._log())
         )
-        keys = irs.select(
-            F.col("id").cast("string").alias("_id")
-        ).distinct()
-        state = self.read_state(spark)
-        if state is None:
-            new_state = upserts
-        else:
-            kept = state.join(keys, "_id", "left_anti")
-            new_state = kept.unionByName(upserts)
-        version = f"v{batch_id}"
-        out = os.path.join(self.path, version)
-        new_state.write.mode("overwrite").parquet(out)
-        tmp = self._pointer() + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as fh:
-            fh.write(version)
-        os.replace(tmp, self._pointer())
 
     def compact(self, spark: SparkSession) -> None:
-        """Merge mode's vacuum: fold the append log to one latest-wins
-        row per LIVE key (tombstones and superseded rows reclaimed),
-        keeping each survivor's batch stamp so later batches still
-        order above it.  Crash-aware directory swap; replays converge.
+        """The log's vacuum: fold it to one latest-wins row per LIVE
+        key (tombstones and superseded rows reclaimed), keeping each
+        survivor's batch stamp so later batches still order above it.
+        Crash-aware directory swap; replays converge.
         """
-        if self.mode != "merge":
-            return
         from ..storeio import read_parquet_if_exists, rewrite_store
 
         if read_parquet_if_exists(spark, self._log()) is None:
             return
 
         def write_new(new: str) -> None:
-            from pyspark.sql import Window
-
-            log = spark.read.parquet(self._log())
-            w = Window.partitionBy("_id").orderBy(F.col("__batch").desc())
-            (
-                log.withColumn("__rn", F.row_number().over(w))
-                .filter((F.col("__rn") == 1) & (~F.col("__del")))
-                .drop("__rn")
-                .write.mode("overwrite")
-                .parquet(new)
-            )
+            _latest_live(spark.read.parquet(self._log())).write.mode(
+                "overwrite"
+            ).parquet(new)
 
         rewrite_store(self._log(), write_new)
         # survivor count = live keys right now: the cheap maintenance
@@ -198,16 +158,13 @@ class ParquetIndexSink:
             return None
 
     def describe(self, spark: SparkSession, full: bool = True) -> dict:
-        """Merge-mode counters (the ``describe_*_store`` shape).
+        """Log counters (the ``describe_*_store`` shape).
         ``log_rows``/``log_files`` are parquet-footer metadata;
         ``live_keys``/``tombstones`` (``full=True`` only) run the
         latest-wins window / a log scan — STATE-sized, exactly the
-        per-batch cost merge mode exists to avoid, so the per-trigger
+        per-batch cost the log exists to avoid, so the per-trigger
         policy path never asks for them (r10 ADVICE)."""
         out: dict = {"path": self.path, "mode": self.mode}
-        if self.mode != "merge":
-            out["exists"] = self.current_version() is not None
-            return out
         from ..storeio import read_parquet_if_exists
 
         log = read_parquet_if_exists(spark, self._log())
@@ -247,8 +204,6 @@ class ParquetIndexSink:
         exact confirm sees the true smaller live count and compacts.
         A fully-deleted state compares against ONE key, so such a log
         still reclaims instead of growing unbounded."""
-        if self.mode != "merge":
-            return {"action": "none", "describe": {"mode": self.mode}}
         d = self.describe(spark, full=False)
         if not d.get("exists"):
             return {"action": "none", "describe": d}
@@ -293,9 +248,9 @@ class SearchIndexedSink:
     ``text_field`` / ``field_cols`` name fields INSIDE the IR ``data``
     struct (the task's mapped target paths).  Both writes happen in
     the foreachBatch scope: a crash between them replays the batch,
-    the versioned sink rewrites its version, the index fold skips
-    already-applied docs — the same idempotence argument as each sink
-    alone."""
+    the doc sink re-appends identical rows under the same batch id,
+    the index fold skips already-applied docs — the same idempotence
+    argument as each sink alone."""
 
     def __init__(
         self,

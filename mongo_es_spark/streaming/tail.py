@@ -261,9 +261,9 @@ def run_tail(
             need_state = bool(has_patch)
         if need_state:
             # J1/J2: the batch's distinct keys drive the lookup —
-            # ParquetIndexSink ignores them (whole-state join),
-            # EsBulkSink turns them into executor-side _mget/terms
-            # calls against the live index
+            # ParquetIndexSink semi-joins its log to them before the
+            # latest-wins window, EsBulkSink turns them into
+            # executor-side _mget/terms calls against the live index
             batch_ids = compacted.select("id").distinct()
             state = sink.read_state(spark, ids=batch_ids)
             if state is not None and "data_json" in state.columns:

@@ -83,7 +83,6 @@ _FILE_COST = {
     "test_indexops.py": 104,
     "test_store_compaction.py": 89,
     "test_analysis.py": 87,
-    "test_sessions_stream.py": 79,
     "test_runner_cli.py": 66,
     "test_tokenstats.py": 64,
     "test_es_sink.py": 55,

@@ -5,11 +5,10 @@ over the batch operator's pair graph."""
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import functions as F
-from mongo_es_spark.streaming.fold import drain
+from mongo_es_spark.streaming.fold import drain, write_ordered_feed
 
 
 SCHEMA = "doc_id long, text string, lang string"
@@ -48,15 +47,13 @@ def _rows_batches():
 
 
 def _write_feed(feed, batches):
-    feed.mkdir()
-    for ix, rows in enumerate(batches):
-        fname = feed / f"b{ix}.json"
-        with open(fname, "w") as fh:
-            for d, t, g in rows:
-                fh.write(
-                    json.dumps({"doc_id": d, "text": t, "lang": g}) + "\n"
-                )
-        os.utime(fname, (1_700_000_000 + ix * 60,) * 2)
+    write_ordered_feed(
+        str(feed),
+        [
+            [{"doc_id": d, "text": t, "lang": g} for d, t, g in rows]
+            for rows in batches
+        ],
+    )
 
 
 def _expected_kept(spark, batches, threshold=0.8, q_threshold=0.52):
@@ -268,9 +265,6 @@ def test_streaming_curation_scrub_passthrough(spark, tmp_path):
 
 
 def test_streaming_boilerplate_store_matches_batch(spark, tmp_path):
-    import os
-    import time
-
     from mongo_es_spark.operators.text import (
         boilerplate_clean_over_store,
         boilerplate_removal,
@@ -287,18 +281,13 @@ def test_streaming_boilerplate_store_matches_batch(spark, tmp_path):
     schema = "doc_id long, text string"
     full = spark.createDataFrame(rows, schema)
     feed = str(tmp_path / "feed")
-    # two feed files with pinned increasing mtimes (file-source
-    # batching is mtime-ordered)
-    spark.createDataFrame(rows[:2], schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(feed)
-    time.sleep(0.01)
-    spark.createDataFrame(rows[2:], schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(feed)
-    now = time.time()
-    for i, f in enumerate(sorted(os.listdir(feed))):
-        os.utime(os.path.join(feed, f), (now + i, now + i))
+    write_ordered_feed(
+        feed,
+        [
+            spark.createDataFrame(rows[:2], schema),
+            spark.createDataFrame(rows[2:], schema),
+        ],
+    )
 
     stream = spark.readStream.schema(schema).option(
         "maxFilesPerTrigger", 1

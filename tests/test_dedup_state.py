@@ -5,7 +5,6 @@ reference's 10 s checkpoint overlap makes necessary."""
 from __future__ import annotations
 
 import json
-import os
 
 from mongo_es_spark.core import make_ts
 from mongo_es_spark.sources.cdc import OPLOG_SCHEMA
@@ -13,7 +12,7 @@ from mongo_es_spark.streaming.dedup_state import suppress_redelivered
 
 
 import pytest
-from mongo_es_spark.streaming.fold import drain
+from mongo_es_spark.streaming.fold import drain, write_ordered_feed
 
 
 
@@ -41,7 +40,6 @@ def test_redelivered_events_suppressed_across_batches(
     spark, tmp_path, state_store
 ):
     feed = tmp_path / "feed"
-    feed.mkdir()
     a1 = {"ts": make_ts(100), "ns": "db.c", "op": "i", "id": "A",
           "doc": json.dumps({"x": 1})}
     b1 = {"ts": make_ts(101), "ns": "db.c", "op": "i", "id": "B",
@@ -57,13 +55,7 @@ def test_redelivered_events_suppressed_across_batches(
         # genuinely new events
         [a1, c1, b1, b2],
     ]
-    base = 1_700_000_000
-    for i, batch in enumerate(batches):
-        fname = feed / f"b{i}.json"
-        with open(fname, "w") as fh:
-            for ev in batch:
-                fh.write(json.dumps(ev) + "\n")
-        os.utime(fname, (base + i * 60, base + i * 60))
+    write_ordered_feed(str(feed), batches)
 
     stream = (
         spark.readStream.schema(OPLOG_SCHEMA)

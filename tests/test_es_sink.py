@@ -13,7 +13,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 import pytest
 
 from mongo_es_spark.streaming.sink import BulkItemError, EsBulkSink
-from mongo_es_spark.streaming.fold import drain
+from mongo_es_spark.streaming.fold import drain, write_ordered_feed
 
 
 
@@ -333,8 +333,6 @@ def test_scan_then_tail_es_mode_matches_oracle(spark, tmp_path, stub_es):
     updates must hit the sink copy served over _mget, not a local
     parquet state (the round-1 gap: core tail semantics silently
     degraded outside the test sink)."""
-    import os
-
     from test_tail_e2e import (
         HINTS,
         OPLOG_BATCHES,
@@ -369,16 +367,10 @@ def test_scan_then_tail_es_mode_matches_oracle(spark, tmp_path, stub_es):
     assert stub_es.state  # backfill landed in the live index
 
     oplog_dir = tmp_path / "oplog"
-    oplog_dir.mkdir()
-    base = 1_700_000_000
-    for i, batch in enumerate(OPLOG_BATCHES):
-        fname = oplog_dir / f"batch{i}.json"
-        with open(fname, "w") as fh:
-            for ev in batch:
-                fh.write(
-                    json.dumps({**ev, "doc": json.dumps(ev["doc"])}) + "\n"
-                )
-        os.utime(fname, (base + i * 60, base + i * 60))
+    write_ordered_feed(str(oplog_dir), [
+        [{**ev, "doc": json.dumps(ev["doc"])} for ev in batch]
+        for batch in OPLOG_BATCHES
+    ])
 
     stream = file_oplog_stream(
         spark, str(oplog_dir), task, max_files_per_trigger=1

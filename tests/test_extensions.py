@@ -2269,64 +2269,6 @@ def test_boilerplate_null_scope_survives(spark):
     assert got == {1: 1, 2: 1, 3: 0}
 
 
-def test_incremental_payload_dedup_accounting(spark, tmp_path):
-    import hashlib
-
-    from mongo_es_spark.operators.multimodal import (
-        incremental_payload_dedup,
-    )
-
-    blob = bytes(
-        hashlib.md5(bytes([i % 256, i // 256])).digest()[0]
-        for i in range(400)
-    )
-    other = bytes(
-        hashlib.md5(bytes([i % 256, i // 256, 7])).digest()[0]
-        for i in range(400)
-    )
-    store = str(tmp_path / "cdc_store")
-    schema = "doc_id long, payload binary"
-
-    b1 = spark.createDataFrame(
-        [(1, bytearray(blob)), (2, bytearray(blob))], schema
-    )
-    out1 = {
-        r["doc_id"]: r
-        for r in incremental_payload_dedup(spark, b1, store).collect()
-    }
-    # doc 1 is all-novel, doc 2 (exact clone) is all-dup
-    assert out1[1]["dup_chunks"] == 0 and out1[1]["dup_bytes"] == 0
-    assert out1[2]["dup_chunks"] == out1[2]["n_chunks"]
-    assert out1[2]["dup_bytes"] == out1[2]["n_bytes"] == 400
-
-    # batch 2: same content again dedups fully against the STORE; a
-    # fresh blob is novel
-    b2 = spark.createDataFrame(
-        [(3, bytearray(blob)), (4, bytearray(other))], schema
-    )
-    out2 = {
-        r["doc_id"]: r
-        for r in incremental_payload_dedup(spark, b2, store).collect()
-    }
-    assert out2[3]["dup_bytes"] == 400
-    assert out2[4]["dup_chunks"] == 0
-
-    # replay of batch 2 appends nothing and reproduces the accounting
-    n_store = spark.read.parquet(store).count()
-    out2b = {
-        r["doc_id"]: r
-        for r in incremental_payload_dedup(spark, b2, store).collect()
-    }
-    assert spark.read.parquet(store).count() == n_store
-    assert out2b[3]["dup_bytes"] == 400 and out2b[4]["dup_chunks"] == 0
-
-    # parameter mismatch fails loudly
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="params"):
-        incremental_payload_dedup(spark, b2, store, mask_bits=6)
-
-
 def test_keep_best_near_dup_short_groups_stay_singletons(spark):
     # ADVICE r4: clone groups too short to shingle (empty / < n
     # tokens / null) must NOT collapse to one survivor — the Jaccard
@@ -2602,10 +2544,8 @@ def test_decode_audio_stereo_resample(spark):
 def test_streaming_ivf_maintenance(spark, tmp_path):
     # streaming edition of the IVF store (fold_into_ivf_index under
     # run_fold_stream): first trigger trains, later triggers append
-    # idempotently; the final index holds every vector exactly once
-    import os
-    import time
-
+    # idempotently; the final index holds every vector exactly once.
+    # The feed is ordered, so slice 0 always trains.
     from pyspark.sql import functions as F
 
     from mongo_es_spark.operators.similarity import (
@@ -2613,23 +2553,19 @@ def test_streaming_ivf_maintenance(spark, tmp_path):
         fold_into_ivf_index,
     )
     from mongo_es_spark.sources.tables import load_table
-    from mongo_es_spark.streaming.fold import run_fold_stream
+    from mongo_es_spark.streaming.fold import (
+        run_fold_stream,
+        write_ordered_feed,
+    )
 
     emb = load_table(
         spark, "/root/testdata/sf0.001", "embeddings"
     ).select("vec_id", "embedding")
     n = emb.count()
     feed = str(tmp_path / "feed")
-    for i in range(3):
-        emb.filter(F.pmod("vec_id", F.lit(3)) == i).coalesce(
-            1
-        ).write.mode("append").parquet(feed)
-    files = sorted(
-        f for f in os.listdir(feed) if f.endswith(".parquet")
+    write_ordered_feed(
+        feed, [emb.filter(F.pmod("vec_id", F.lit(3)) == i) for i in range(3)]
     )
-    t = time.time()
-    for k, f in enumerate(files):
-        os.utime(os.path.join(feed, f), (t + k, t + k))
     stream = (
         spark.readStream.schema(spark.read.parquet(feed).schema)
         .option("maxFilesPerTrigger", 1)
@@ -3211,24 +3147,20 @@ def test_incremental_profile_merge_and_replay(spark, tmp_path):
 
 
 def test_streaming_profile_drain(spark, tmp_path):
-    import os as _os
-
     from mongo_es_spark.operators.profile import (
         incremental_profile,
         profile_over_store,
     )
-    from mongo_es_spark.streaming.fold import run_fold_stream
+    from mongo_es_spark.streaming.fold import (
+        run_fold_stream,
+        write_ordered_feed,
+    )
 
     feed = tmp_path / "feed"
-    feed.mkdir()
-    import json as _json
-
-    for ix in range(3):
-        f = feed / f"b{ix}.json"
-        with open(f, "w") as fh:
-            for k in range(ix * 10, ix * 10 + 10):
-                fh.write(_json.dumps({"id": k, "s": f"v{k % 7}"}) + "\n")
-        _os.utime(f, (1_700_000_000 + ix * 60,) * 2)
+    write_ordered_feed(str(feed), [
+        [{"id": k, "s": f"v{k % 7}"} for k in range(ix * 10, ix * 10 + 10)]
+        for ix in range(3)
+    ])
     stream = spark.readStream.schema("id long, s string").option(
         "maxFilesPerTrigger", 1
     ).json(str(feed))
@@ -3248,16 +3180,13 @@ def test_streaming_profile_drain(spark, tmp_path):
 
 
 def test_streaming_funnel_cross_batch_and_late(spark, tmp_path):
-    import json as _json
-    import os as _os
-
+    from mongo_es_spark.streaming.fold import write_ordered_feed
     from mongo_es_spark.streaming.funnel import (
         funnel_snapshot,
         run_streaming_funnel,
     )
 
     feed = tmp_path / "ffeed"
-    feed.mkdir()
     # user 1 converts across batches; user 2's purchase precedes its
     # click (never converts); user 3's batch-2 signup is LATE (behind
     # its own high-water mark) and must be dropped, not spliced
@@ -3270,14 +3199,11 @@ def test_streaming_funnel_cross_batch_and_late(spark, tmp_path):
         (3, 202, 1000, "signup"),          # late for user 3
         (1, 203, 3000, "purchase"),
     ]
-    for ix, rows in enumerate([b0, b1]):
-        f = feed / f"b{ix}.json"
-        with open(f, "w") as fh:
-            for u, e, t, ty in rows:
-                fh.write(_json.dumps(
-                    {"user_id": u, "event_id": e, "ts_ms": t,
-                     "event_type": ty}) + "\n")
-        _os.utime(f, (1_700_000_000 + ix * 60,) * 2)
+    write_ordered_feed(str(feed), [
+        [{"user_id": u, "event_id": e, "ts_ms": t, "event_type": ty}
+         for u, e, t, ty in rows]
+        for rows in (b0, b1)
+    ])
     stream = spark.readStream.schema(
         "user_id long, event_id long, ts_ms long, event_type string"
     ).option("maxFilesPerTrigger", 1).json(str(feed))
@@ -3917,8 +3843,10 @@ def test_streaming_embedding_pairs_equals_sequential_batches(spark, tmp_path):
     from mongo_es_spark.operators.similarity import (
         incremental_embedding_pairs,
     )
-    from mongo_es_spark.queries import _write_ordered_feed
-    from mongo_es_spark.streaming.fold import run_fold_stream
+    from mongo_es_spark.streaming.fold import (
+        run_fold_stream,
+        write_ordered_feed,
+    )
 
     emb = (
         spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -3941,7 +3869,7 @@ def test_streaming_embedding_pairs_equals_sequential_batches(spark, tmp_path):
         }
 
     feed = str(tmp_path / "feed")
-    _write_ordered_feed(feed, slices)
+    write_ordered_feed(feed, slices)
     stream = (
         spark.readStream.schema(spark.read.parquet(feed).schema)
         .option("maxFilesPerTrigger", 1)

@@ -9,11 +9,14 @@ import os
 import pytest
 
 from mongo_es_spark.streaming import fold
-from mongo_es_spark.streaming.fold import drain, run_fold_stream
+from mongo_es_spark.streaming.fold import (
+    drain,
+    run_fold_stream,
+    write_ordered_feed,
+)
 
 
 def test_write_ordered_feed_drains_frames_in_order(spark, tmp_path):
-    from mongo_es_spark.queries import _write_ordered_feed
 
     feed = str(tmp_path / "feed")
     os.makedirs(feed)
@@ -22,7 +25,7 @@ def test_write_ordered_feed_drains_frames_in_order(spark, tmp_path):
     os.utime(marker, (1_234_567_890, 1_234_567_890))
     # frame order deliberately differs from id order
     groups = [list(range(20, 30)), list(range(0, 10)), list(range(10, 20))]
-    _write_ordered_feed(
+    write_ordered_feed(
         feed,
         [spark.createDataFrame([(i,) for i in g], "id long") for g in groups],
     )
@@ -93,7 +96,6 @@ def test_fold_stream_replayed_batch_is_exactly_once(spark, tmp_path):
     appends nothing and the ``__batch_id`` output is rewritten, not
     duplicated."""
     from mongo_es_spark.operators.text import incremental_line_dedup
-    from mongo_es_spark.queries import _write_ordered_feed
 
     docs = [
         (0, "a b c d e f g h"),
@@ -107,7 +109,7 @@ def test_fold_stream_replayed_batch_is_exactly_once(spark, tmp_path):
     store = str(tmp_path / "store")
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
-    _write_ordered_feed(
+    write_ordered_feed(
         feed,
         [
             spark.createDataFrame(docs[k:k + 2], "doc_id long, text string")
@@ -156,3 +158,25 @@ def test_fold_stream_replayed_batch_is_exactly_once(spark, tmp_path):
     assert len(set(out_again)) == len(out_again)
     assert out_again == out_rows
     assert store_again == store_rows
+
+
+def test_foreach_batch_only_in_fold_and_tail():
+    """One fold-stream runtime: the library starts ``foreachBatch``
+    queries only in ``streaming/fold.py`` (every incremental store)
+    and ``streaming/tail.py`` (the CDC tail)."""
+    import ast
+    import pathlib
+
+    import mongo_es_spark
+
+    root = pathlib.Path(mongo_es_spark.__file__).parent
+    sites = set()
+    for path in root.rglob("*.py"):
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr == "foreachBatch"
+            ):
+                sites.add(path.relative_to(root).as_posix())
+    assert sites == {"streaming/fold.py", "streaming/tail.py"}

@@ -5,25 +5,20 @@ feed."""
 
 from __future__ import annotations
 
-import json
-import os
 from collections import Counter
 
 from pyspark.sql import functions as F
-from mongo_es_spark.streaming.fold import drain
+from mongo_es_spark.streaming.fold import drain, write_ordered_feed
 
 
 SCHEMA = "doc_id long, text string"
 
 
 def _write_feed(feed, batches):
-    feed.mkdir()
-    for ix, rows in enumerate(batches):
-        fname = feed / f"b{ix}.json"
-        with open(fname, "w") as fh:
-            for d, t in rows:
-                fh.write(json.dumps({"doc_id": d, "text": t}) + "\n")
-        os.utime(fname, (1_700_000_000 + ix * 60,) * 2)
+    write_ordered_feed(
+        str(feed),
+        [[{"doc_id": d, "text": t} for d, t in rows] for rows in batches],
+    )
 
 
 def test_streaming_heavy_hitters_cross_batch(spark, tmp_path):

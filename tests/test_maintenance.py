@@ -249,7 +249,7 @@ def test_indexed_sink_runs_policy_per_fold(spark, tmp_path):
     store = str(tmp_path / "bm25")
     incremental_bm25_index(spark, docs0, store).count()
     sink = SearchIndexedSink(
-        ParquetIndexSink(str(tmp_path / "sink"), mode="merge"),
+        ParquetIndexSink(str(tmp_path / "sink")),
         store,
         text_field="text",
         maintain=dict(max_dead_ratio=0.3, max_files_per_cpu=None,

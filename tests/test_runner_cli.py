@@ -61,10 +61,10 @@ def test_two_tasks_isolated_sinks_and_checkpoints(spark, tmp_path):
 
 
 def test_runner_merge_sink_mode(spark, tmp_path):
-    """parquetSinkMode=merge routes the CLI runner onto the
-    merge-on-read sink: scan-then-tail produce the same observable
-    state as rewrite mode (insert via scan, insert + delete via
-    tail), with the append log in place of versioned rewrites."""
+    """With no ES host the runner loads into the merge-on-read
+    parquet sink, with no setting: the scan's rows (stamped batch -1)
+    and the tail's insert + delete (batch ids from the persistent
+    checkpoint) resolve latest-wins in write order."""
     root = tmp_path / "mongo"
     (root / "oplog").mkdir(parents=True)
     spark.createDataFrame(
@@ -82,7 +82,6 @@ def test_runner_merge_sink_mode(spark, tmp_path):
     cfg = Config(json.dumps({
         "mongodb": {"url": f"file://{root}"},
         "elasticsearch": {"options": {}},
-        "controls": {"parquetSinkMode": "merge"},
         "tasks": [{
             "from": {"phase": "scan"},
             "extract": {"db": "db", "collection": "a"},
@@ -95,13 +94,13 @@ def test_runner_merge_sink_mode(spark, tmp_path):
     run(cfg, spark=spark, work_dir=work, available_now=True)
 
     path = os.path.join(work, "index", "db.a___a.doc")
-    sink = ParquetIndexSink(path, mode="merge")
+    sink = ParquetIndexSink(path)
     got = {
         r["_id"]: r["data"]["name"]
         for r in sink.read_state(spark).collect()
     }
     assert got == {"A2": "y", "A3": "z"}
-    # merge mode appended a log, never wrote versioned dirs
+    # an append log, never versioned dirs
     assert os.path.isdir(os.path.join(path, "log"))
     assert not os.path.exists(os.path.join(path, "_CURRENT"))
 

@@ -14,6 +14,7 @@ tail pipeline (run_tail -> SearchIndexedSink -> index maintenance).
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import shutil
@@ -21,7 +22,7 @@ import shutil
 import pytest
 
 from pyspark.sql import functions as F
-from mongo_es_spark.streaming.fold import drain
+from mongo_es_spark.streaming.fold import drain, write_ordered_feed
 
 
 
@@ -409,29 +410,22 @@ def test_tail_pipeline_maintains_search_index(spark, tmp_path):
         ],
     ]
     oplog_dir = tmp_path / "oplog"
-    oplog_dir.mkdir()
     from mongo_es_spark.core import make_ts
 
-    base = 1_700_000_000
-    seq = 0
-    for i, batch in enumerate(batches):
-        fname = oplog_dir / f"b{i}.json"
-        with open(fname, "w") as fh:
-            for ev in batch:
-                seq += 1
-                fh.write(
-                    json.dumps(
-                        {
-                            "ts": make_ts(seq),
-                            "ns": "lib.docs",
-                            "op": ev["op"],
-                            "id": ev["id"],
-                            "doc": json.dumps(ev["doc"]),
-                        }
-                    )
-                    + "\n"
-                )
-        os.utime(fname, (base + i * 60, base + i * 60))
+    seq = itertools.count(1)
+    write_ordered_feed(str(oplog_dir), [
+        [
+            {
+                "ts": make_ts(next(seq)),
+                "ns": "lib.docs",
+                "op": ev["op"],
+                "id": ev["id"],
+                "doc": json.dumps(ev["doc"]),
+            }
+            for ev in batch
+        ]
+        for batch in batches
+    ])
 
     store = str(tmp_path / "search")
     sink = SearchIndexedSink(
@@ -694,26 +688,20 @@ def test_tail_pipeline_maintains_dense_index(spark, tmp_path):
         [("d", 5, {}), ("u", 3, {"v": final[3]})],  # redelivery of 3
     ]
     feed = tmp_path / "feed"
-    feed.mkdir()
-    seq = 0
-    for i, batch in enumerate(batches):
-        p = feed / f"b{i}.json"
-        with open(p, "w") as fh:
-            for op, vid, doc in batch:
-                seq += 1
-                fh.write(
-                    json.dumps(
-                        {
-                            "ts": make_ts(seq),
-                            "ns": "lib.vecs",
-                            "op": op,
-                            "id": str(vid),
-                            "doc": json.dumps(doc),
-                        }
-                    )
-                    + "\n"
-                )
-        os.utime(p, (1_600_000_000 + i * 60,) * 2)
+    seq = itertools.count(1)
+    write_ordered_feed(str(feed), [
+        [
+            {
+                "ts": make_ts(next(seq)),
+                "ns": "lib.vecs",
+                "op": op,
+                "id": str(vid),
+                "doc": json.dumps(doc),
+            }
+            for op, vid, doc in batch
+        ]
+        for batch in batches
+    ])
     task = Task(
         {
             "from": {"phase": "tail"},

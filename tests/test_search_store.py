@@ -1070,11 +1070,13 @@ def test_boosting_demotes_without_excluding(spark, tmp_path):
 
 
 def test_dis_max_tie_breaker(spark, tmp_path):
+    """The executor's dis_max: a doc's best leg plus tie_breaker times
+    the rest, pinned to per-leg bm25_over_store scores."""
     import pytest
 
+    from mongo_es_spark.operators.searchapi import search
     from mongo_es_spark.operators.text import (
         bm25_over_store,
-        dis_max_over_store,
         incremental_bm25_index,
     )
 
@@ -1087,38 +1089,38 @@ def test_dis_max_tie_breaker(spark, tmp_path):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     store = str(tmp_path / "bm")
     incremental_bm25_index(spark, docs, store).count()
-    legs = [["cat"], ["dog"]]
     s1 = {
         r["doc"]: r["score"]
-        for r in bm25_over_store(spark, store, legs[0]).collect()
+        for r in bm25_over_store(spark, store, ["cat"]).collect()
     }
     s2 = {
         r["doc"]: r["score"]
-        for r in bm25_over_store(spark, store, legs[1]).collect()
+        for r in bm25_over_store(spark, store, ["dog"]).collect()
     }
-    got = {
-        r["doc"]: r["score"]
-        for r in dis_max_over_store(
-            spark, store, legs, tie_breaker=0.4
-        ).collect()
-    }
+
+    def dis_max(tie_breaker, queries=("cat", "dog")):
+        body = {"query": {"dis_max": {
+            "queries": [{"match": {"text": q}} for q in queries],
+            "tie_breaker": tie_breaker,
+        }}}
+        return {
+            r["doc"]: r["score"]
+            for r in search(spark, store, body).collect()
+        }
+
+    got = dis_max(0.4)
     assert set(got) == {1, 2, 3}
     both = sorted([s1[1], s2[1]])
-    assert abs(got[1] - round(both[1] + 0.4 * both[0], 6)) < 2e-6
-    assert got[2] == s1[2]  # single-leg docs: their own leg score
-    assert got[3] == s2[3]
+    assert abs(got[1] - (both[1] + 0.4 * both[0])) < 2e-6
+    # single-leg docs: their own leg score
+    assert abs(got[2] - s1[2]) < 2e-6
+    assert abs(got[3] - s2[3]) < 2e-6
     # tie_breaker=0 is strictly the max
-    got0 = {
-        r["doc"]: r["score"]
-        for r in dis_max_over_store(
-            spark, store, legs, tie_breaker=0.0
-        ).collect()
-    }
-    assert got0[1] == max(s1[1], s2[1])
+    assert abs(dis_max(0.0)[1] - max(s1[1], s2[1])) < 2e-6
     with pytest.raises(ValueError, match="tie_breaker"):
-        dis_max_over_store(spark, store, legs, tie_breaker=1.5)
-    with pytest.raises(ValueError, match="subquery"):
-        dis_max_over_store(spark, store, [])
+        dis_max(1.5)
+    with pytest.raises(ValueError, match="sub-query"):
+        dis_max(0.0, queries=())
 
 
 def test_rescore_window_semantics(spark, tmp_path):

@@ -473,13 +473,29 @@ def test_executor_matches_standalone_bool_search(spark, api_store):
     assert a == b
 
 
+def _best_fields(legs, tie_breaker=0.0):
+    """Reference combination of per-field scores: best field plus
+    tie_breaker times the rest, per doc."""
+    per: dict = {}
+    for leg in legs:
+        for d, sc in leg.items():
+            per.setdefault(d, []).append(sc)
+    return {
+        d: max(v) + tie_breaker * (sum(v) - max(v)) for d, v in per.items()
+    }
+
+
+def _leg(spark, store, terms, boost=1.0):
+    return {
+        r["doc"]: r["score"] * boost
+        for r in bm25_over_store(spark, store, terms, top_k=100).collect()
+    }
+
+
 def test_multi_match_types(spark, api_store, tmp_path):
     """best_fields = dis_max over per-field stores; most_fields sums;
-    boosts multiply the field's BM25."""
-    from mongo_es_spark.operators.text import (
-        multi_match_over_stores,
-    )
-
+    boosts multiply the field's BM25 — pinned to per-field
+    bm25_over_store scores."""
     # second field: first token only
     title = str(tmp_path / "title")
     rows = [("d1", "spark"), ("d2", "spark"), ("d3", "flink"),
@@ -491,26 +507,36 @@ def test_multi_match_types(spark, api_store, tmp_path):
     ).count()
     fields = {"title": title, "body": api_store}
 
-    def scores(**kw):
+    def scores(mtype, names=("title^3", "body")):
         return {
             r["doc"]: r["score"]
-            for r in multi_match_over_stores(
-                spark, fields, ["streaming"], **kw
-            ).collect()
+            for r in search(spark, api_store, {
+                "query": {"multi_match": {
+                    "query": "streaming", "fields": list(names),
+                    "type": mtype,
+                }},
+                "size": 10,
+            }, field_stores=fields).collect()
         }
 
-    body_only = scores(boosts={"title": 0.0})  # kill the title leg
-    best = scores(match_type="best_fields")
-    most = scores(match_type="most_fields")
+    t = _leg(spark, title, ["streaming"], boost=3.0)
+    bd = _leg(spark, api_store, ["streaming"])
+    best = scores("best_fields")
+    most = scores("most_fields")
+    want_best = _best_fields([t, bd])
+    want_most = _best_fields([t, bd], tie_breaker=1.0)
+    assert set(best) == set(most) == set(want_best)
+    for d in want_best:
+        assert abs(best[d] - want_best[d]) < 2e-6
+        assert abs(most[d] - want_most[d]) < 2e-6
     # d6 matches in BOTH fields: most_fields > best_fields there
     assert most["d6"] > best["d6"]
     # docs matching only the body keep their body score everywhere
+    body_only = scores("best_fields", names=("body",))
     for d in ("d1", "d3", "d4"):
         assert best[d] == most[d] == body_only[d]
-    with pytest.raises(ValueError, match="match_type"):
-        multi_match_over_stores(
-            spark, fields, ["x"], match_type="nope"
-        )
+    with pytest.raises(ValueError, match="type"):
+        scores("nope")
 
 
 def test_ids_query(spark, api_store):
@@ -606,9 +632,8 @@ def test_rescore_window(spark, api_store):
 
 def test_multi_match_in_body(spark, api_store, tmp_path):
     """multi_match as an executor leaf over per-field stores — pinned
-    to the standalone multi_match_over_stores on the same stores."""
-    from mongo_es_spark.operators.text import multi_match_over_stores
-
+    to per-field bm25_over_store scores combined best_fields with a
+    title^2 boost and tie_breaker 0.3."""
     title = str(tmp_path / "title")
     tdf = spark.createDataFrame(
         [("d1", "spark intro"), ("d2", "batch guide"),
@@ -630,15 +655,16 @@ def test_multi_match_in_body(spark, api_store, tmp_path):
     got = search(
         spark, api_store, body, field_stores={"title": title}
     ).collect()
-    want = multi_match_over_stores(
-        spark, {"title": title, "body": api_store},
-        ["spark", "streaming"],
-        boosts={"title": 2.0}, match_type="best_fields",
-        tie_breaker=0.3, top_k=10,
-    ).collect()
-    assert [(r["doc"], r["score"]) for r in got] == [
-        (r["doc"], r["score"]) for r in want
-    ]
+    terms = ["spark", "streaming"]
+    want = _best_fields(
+        [_leg(spark, title, terms, boost=2.0), _leg(spark, api_store, terms)],
+        tie_breaker=0.3,
+    )
+    assert [r["doc"] for r in got] == sorted(
+        want, key=lambda d: (-round(want[d], 6), d)
+    )[:10]
+    for r in got:
+        assert abs(r["score"] - want[r["doc"]]) < 2e-6
     # most_fields sums; composes under bool must_not
     got2 = search(spark, api_store, {
         "query": {"bool": {

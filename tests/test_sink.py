@@ -1,6 +1,7 @@
 """L1 sink contracts: bulk-body format (reference:
 src/processor.ts:229-256) and the idempotent overwrite-by-key semantics
-that make at-least-once delivery safe (SURVEY §7 hard part (c))."""
+of the merge-on-read parquet log that make at-least-once delivery safe
+(SURVEY §7 hard part (c))."""
 
 from __future__ import annotations
 
@@ -44,39 +45,15 @@ def _state(spark, sink):
     } if state is not None else {}
 
 
+_BATCH2 = [
+    ("upsert", "A", None, ("a2",), 2),   # overwrite by key
+    ("delete", "B", None, None, 2),
+    ("upsert", "C", None, ("c1",), 2),
+]
+
+
 def test_parquet_sink_upsert_delete_and_idempotent_replay(spark, tmp_path):
     sink = ParquetIndexSink(str(tmp_path / "idx"))
-    batch1 = [
-        ("upsert", "A", None, ("a1",), 1),
-        ("upsert", "B", None, ("b1",), 1),
-    ]
-    _apply(spark, sink, batch1, 0)
-    assert _state(spark, sink) == {"A": "a1", "B": "b1"}
-
-    batch2 = [
-        ("upsert", "A", None, ("a2",), 2),   # overwrite by key
-        ("delete", "B", None, None, 2),
-        ("upsert", "C", None, ("c1",), 2),
-    ]
-    _apply(spark, sink, batch2, 1)
-    assert _state(spark, sink) == {"A": "a2", "C": "c1"}
-
-    # at-least-once: replaying the same batch (same id) must converge
-    # to the same state, not duplicate or resurrect anything
-    _apply(spark, sink, batch2, 1)
-    assert _state(spark, sink) == {"A": "a2", "C": "c1"}
-
-
-def test_merge_sink_matches_rewrite_semantics(spark, tmp_path):
-    """Merge-on-read mode: same observable state as the rewrite mode
-    through upserts, deletes, key-pruned lookups, replay, and
-    compaction — only the write shape differs (append ∝ batch, never
-    a state-sized rewrite)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    sink = ParquetIndexSink(str(tmp_path / "idx"), mode="merge")
     assert sink.read_state(spark) is None
     _apply(
         spark,
@@ -86,17 +63,34 @@ def test_merge_sink_matches_rewrite_semantics(spark, tmp_path):
     )
     assert _state(spark, sink) == {"A": "a1", "B": "b1"}
 
-    batch2 = [
-        ("upsert", "A", None, ("a2",), 2),
-        ("delete", "B", None, None, 2),
-        ("upsert", "C", None, ("c1",), 2),
-    ]
-    _apply(spark, sink, batch2, 1)
+    _apply(spark, sink, _BATCH2, 1)
     assert _state(spark, sink) == {"A": "a2", "C": "c1"}
 
-    # replay: appends identical rows at the same batch id; latest-wins
-    # resolution is indifferent to which copy it picks
-    _apply(spark, sink, batch2, 1)
+    # at-least-once: replaying the same batch (same id) appends
+    # identical rows; latest-wins resolution is indifferent to which
+    # copy it picks, so nothing duplicates or resurrects
+    _apply(spark, sink, _BATCH2, 1)
+    assert _state(spark, sink) == {"A": "a2", "C": "c1"}
+
+
+def test_merge_sink_matches_rewrite_semantics(spark, tmp_path):
+    """The merge-on-read log gives the observable state a full rewrite
+    of the state would: key-pruned lookups see the latest live row,
+    each apply appends batch-sized rows and never rewrites the log,
+    and compaction reclaims tombstones without changing the state."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    sink = ParquetIndexSink(str(tmp_path / "idx"))
+    _apply(
+        spark,
+        sink,
+        [("upsert", "A", None, ("a1",), 1), ("upsert", "B", None, ("b1",), 1)],
+        0,
+    )
+    _apply(spark, sink, _BATCH2, 1)
+    _apply(spark, sink, _BATCH2, 1)
     assert _state(spark, sink) == {"A": "a2", "C": "c1"}
 
     # key-pruned lookup (the point-lookup shape run_tail uses)
@@ -126,8 +120,26 @@ def test_merge_sink_matches_rewrite_semantics(spark, tmp_path):
     assert not os.path.exists(str(tmp_path / "idx" / "_CURRENT"))
 
 
+def test_parquet_sink_refuses_other_layouts(tmp_path):
+    """One layout: any other mode is rejected, and a directory in the
+    retired versioned layout (``_CURRENT`` pointer, no ``log/``) raises
+    instead of reading as an empty log whose lookups silently miss."""
+    import pytest
+
+    with pytest.raises(ValueError, match="mode"):
+        ParquetIndexSink(str(tmp_path / "a"), mode="rewrite")
+    old = tmp_path / "old"
+    (old / "v0").mkdir(parents=True)
+    (old / "_CURRENT").write_text("v0")
+    with pytest.raises(ValueError, match="_CURRENT"):
+        ParquetIndexSink(str(old))
+    # a log next to a stray pointer is the current layout
+    (old / "log").mkdir()
+    assert ParquetIndexSink(str(old)).path == str(old)
+
+
 def test_merge_sink_policy_compacts_at_ratio(spark, tmp_path):
-    sink = ParquetIndexSink(str(tmp_path / "idx"), mode="merge")
+    sink = ParquetIndexSink(str(tmp_path / "idx"))
     _apply(spark, sink, [("upsert", "A", None, ("a1",), 1)], 0)
     assert sink.maintain_if_needed(spark)["action"] == "none"
     # churn the same key: 5 log rows / 1 live key > 3.0 -> compacts
@@ -148,7 +160,7 @@ def test_merge_policy_cheap_gate_skips_window(spark, tmp_path):
     the exact confirm re-arms the marker — and a churned log still
     compacts (r10 ADVICE: live_keys ran the full latest-wins window
     every trigger)."""
-    sink = ParquetIndexSink(str(tmp_path / "idx"), mode="merge")
+    sink = ParquetIndexSink(str(tmp_path / "idx"))
     # 8 distinct keys across batches, zero churn
     for b in range(8):
         _apply(spark, sink, [("upsert", f"K{b}", None, (f"v{b}",), 1)], b)
@@ -169,18 +181,16 @@ def test_merge_policy_cheap_gate_skips_window(spark, tmp_path):
     assert sink._last_compact_rows() == 8
 
 
-def test_rewrite_and_merge_share_string_id_contract(spark, tmp_path):
-    """Both sink modes expose _id as STRING (one state schema), even
-    when the IR id arrives typed (r10 ADVICE: rewrite preserved the
-    native type while merge canonicalized)."""
-    for mode in ("rewrite", "merge"):
-        sink = ParquetIndexSink(str(tmp_path / f"idx_{mode}"), mode=mode)
-        irs = spark.createDataFrame(
-            [("upsert", 7, None, ("x",), 1)],
-            "action string, id long, parent string, "
-            "data struct<v:string>, ts long",
-        )
-        sink.apply(spark, irs, 0)
-        state = sink.read_state(spark)
-        assert dict(state.dtypes)["_id"] == "string", mode
-        assert [r["_id"] for r in state.collect()] == ["7"], mode
+def test_parquet_sink_string_id_contract(spark, tmp_path):
+    """The sink state exposes _id as STRING (one state schema), even
+    when the IR id arrives typed."""
+    sink = ParquetIndexSink(str(tmp_path / "idx"))
+    irs = spark.createDataFrame(
+        [("upsert", 7, None, ("x",), 1)],
+        "action string, id long, parent string, "
+        "data struct<v:string>, ts long",
+    )
+    sink.apply(spark, irs, 0)
+    state = sink.read_state(spark)
+    assert dict(state.dtypes)["_id"] == "string"
+    assert [r["_id"] for r in state.collect()] == ["7"]

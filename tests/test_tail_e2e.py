@@ -9,7 +9,6 @@ dispatch_oplog) — the rebuild's analog of the reference's e2e test
 from __future__ import annotations
 
 import json
-import os
 
 import pytest
 
@@ -18,7 +17,7 @@ from mongo_es_spark.core import dispatch_oplog, make_ts, merge_oplogs, transform
 from mongo_es_spark.sources.cdc import file_oplog_stream
 from mongo_es_spark.streaming.sink import ParquetIndexSink
 from mongo_es_spark.streaming.tail import run_scan, run_tail
-from mongo_es_spark.streaming.fold import drain
+from mongo_es_spark.streaming.fold import drain, write_ordered_feed
 
 
 HINTS = {"name": "string", "shareCount.all": "long", "deleted": "boolean"}
@@ -163,7 +162,6 @@ def test_scan_then_tail_matches_oracle(spark, tmp_path):
     task = banner_task()
     source_path = str(tmp_path / "source")
     oplog_dir = tmp_path / "oplog"
-    oplog_dir.mkdir()
     sink = ParquetIndexSink(str(tmp_path / "sink"))
 
     src_rows = [
@@ -181,16 +179,12 @@ def test_scan_then_tail_matches_oracle(spark, tmp_path):
     run_scan(spark, task, source_df, sink)
     assert task.from_.phase == "tail"
 
-    # EP2 — tail phase over the file feed, one file per micro-batch
-    base = 1_700_000_000
-    for i, batch in enumerate(OPLOG_BATCHES):
-        fname = oplog_dir / f"batch{i}.json"
-        with open(fname, "w") as fh:
-            for ev in batch:
-                fh.write(json.dumps({**ev, "doc": json.dumps(ev["doc"])}) + "\n")
-        # the file source orders by modification time; pin strictly
-        # increasing mtimes so batch boundaries match the oracle replay
-        os.utime(fname, (base + i * 60, base + i * 60))
+    # EP2 — tail phase over the file feed, one file per micro-batch;
+    # the ordered feed makes batch boundaries match the oracle replay
+    write_ordered_feed(str(oplog_dir), [
+        [{**ev, "doc": json.dumps(ev["doc"])} for ev in batch]
+        for batch in OPLOG_BATCHES
+    ])
     stream = file_oplog_stream(
         spark, str(oplog_dir), task, max_files_per_trigger=1
     )

@@ -5,32 +5,23 @@ events counted (not spliced) when they are not."""
 
 from __future__ import annotations
 
-import json
-import os
-from mongo_es_spark.streaming.fold import drain
+from mongo_es_spark.streaming.fold import drain, write_ordered_feed
 
 
 SCHEMA = "user_id long, event_id long, ts_ms long, event_type string"
 
 
 def _write_feed(feed, batches):
-    feed.mkdir()
-    for ix, rows in enumerate(batches):
-        fname = feed / f"b{ix}.json"
-        with open(fname, "w") as fh:
-            for u, e, ts, et in rows:
-                fh.write(
-                    json.dumps(
-                        {
-                            "user_id": u,
-                            "event_id": e,
-                            "ts_ms": ts,
-                            "event_type": et,
-                        }
-                    )
-                    + "\n"
-                )
-        os.utime(fname, (1_700_000_000 + ix * 60,) * 2)
+    write_ordered_feed(
+        str(feed),
+        [
+            [
+                {"user_id": u, "event_id": e, "ts_ms": ts, "event_type": et}
+                for u, e, ts, et in rows
+            ]
+            for rows in batches
+        ],
+    )
 
 
 def _drain(spark, feed, sink, ckpt):

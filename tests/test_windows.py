@@ -3,39 +3,34 @@ watermark passes it; late-but-tolerated rows count, too-late rows drop."""
 
 from __future__ import annotations
 
-import json
-import os
-
 from mongo_es_spark.core import make_ts
 from mongo_es_spark.sources.cdc import OPLOG_SCHEMA
 from mongo_es_spark.streaming.windows import windowed_op_counts
-from mongo_es_spark.streaming.fold import drain
+from mongo_es_spark.streaming.fold import drain, write_ordered_feed
 
 
-
-def _write_batch(feed, ix, events):
-    fname = feed / f"b{ix}.json"
-    with open(fname, "w") as fh:
-        for t, op in events:
-            fh.write(json.dumps({
-                "ts": make_ts(t), "ns": "db.c", "op": op, "id": f"x{t}",
-                "doc": "{}",
-            }) + "\n")
-    os.utime(fname, (1_700_000_000 + ix * 60, 1_700_000_000 + ix * 60))
+def _oplog(events):
+    return [
+        {"ts": make_ts(t), "ns": "db.c", "op": op, "id": f"x{t}",
+         "doc": "{}"}
+        for t, op in events
+    ]
 
 
 def test_windowed_counts_with_watermark(spark, tmp_path):
     feed = tmp_path / "feed"
-    feed.mkdir()
-    # batch 0: three events in window [100,110), one in [130,140)
-    _write_batch(feed, 0, [(100, "i"), (104, "u"), (106, "i"), (130, "i")])
-    # batch 1: a LATE event for [100,110) — 46 s behind the max seen so
-    # far but within no watermark yet (watermark after batch 0 is
-    # 130-30=100), so it still counts; plus an advancer at 150
-    _write_batch(feed, 1, [(104, "i"), (150, "i")])
-    # batch 2: a TOO-LATE event (80 < watermark 120 after batch 1) that
-    # must be dropped, plus an advancer
-    _write_batch(feed, 2, [(80, "i"), (160, "i")])
+    write_ordered_feed(str(feed), [
+        # batch 0: three events in window [100,110), one in [130,140)
+        _oplog([(100, "i"), (104, "u"), (106, "i"), (130, "i")]),
+        # batch 1: a LATE event for [100,110) — 46 s behind the max
+        # seen so far but within no watermark yet (watermark after
+        # batch 0 is 130-30=100), so it still counts; plus an advancer
+        # at 150
+        _oplog([(104, "i"), (150, "i")]),
+        # batch 2: a TOO-LATE event (80 < watermark 120 after batch 1)
+        # that must be dropped, plus an advancer
+        _oplog([(80, "i"), (160, "i")]),
+    ])
 
     stream = (
         spark.readStream.schema(OPLOG_SCHEMA)
@@ -79,7 +74,6 @@ def test_windowed_anomaly_monitor_flags_spike(spark, tmp_path):
     from mongo_es_spark.streaming.windows import windowed_anomalies
 
     feed = tmp_path / "feed"
-    feed.mkdir()
     # steady traffic: 2 inserts per 10s window for windows 100..250;
     # one spike window at 200 with 14 inserts
     events = []
@@ -87,8 +81,10 @@ def test_windowed_anomaly_monitor_flags_spike(spark, tmp_path):
         events.append((w, "i"))
         events.append((w + 5, "i"))
     events += [(200 + k % 10, "i") for k in range(12)]
-    _write_batch(feed, 0, sorted(events))
-    _write_batch(feed, 1, [(400, "i")])  # watermark advancer
+    write_ordered_feed(str(feed), [
+        _oplog(sorted(events)),
+        _oplog([(400, "i")]),  # watermark advancer
+    ])
 
     stream = (
         spark.readStream.schema(OPLOG_SCHEMA)
