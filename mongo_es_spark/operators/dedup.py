@@ -34,6 +34,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..sparkutil import checkpoint_with
+
 
 # ------------------------------------------------------------------ #
 # shingling
@@ -1737,17 +1739,16 @@ def _components_union_find(edges: DataFrame) -> DataFrame:
 def _components_propagation(
     pairs: DataFrame, i_col: str, j_col: str, max_iters: int
 ) -> DataFrame:
-    from ..sparkutil import sever_count
-
-    edges, n_edges = sever_count(
+    edges, m = checkpoint_with(
         pairs.select(F.col(i_col).alias("a"), F.col(j_col).alias("b"))
         .union(pairs.select(F.col(j_col).alias("a"), F.col(i_col).alias("b")))
-        .distinct()
+        .distinct(),
         # materialize once: every propagation round joins edges, and
         # without this the full pair-generation pipeline would re-run
         # per round (and per convergence check)
+        n=F.count("*"),
     )
-    if 0 < n_edges <= _DRIVER_CC_CUTOFF:
+    if 0 < m["n"] <= _DRIVER_CC_CUTOFF:
         return _components_union_find(edges)
     labels = (
         edges.select(F.col("a").alias("doc"))
@@ -1791,13 +1792,13 @@ def _components_propagation(
 def _components_star(
     pairs: DataFrame, i_col: str, j_col: str, max_iters: int
 ) -> DataFrame:
-    from ..sparkutil import sever_count
-
-    edges, n_edges = sever_count(
+    edges, m = checkpoint_with(
         pairs.select(F.col(i_col).alias("a"), F.col(j_col).alias("b"))
         .filter(F.col("a") != F.col("b"))
-        .distinct()  # severed: detach the pair-generation plan
+        .distinct(),  # severed: detach the pair-generation plan
+        n=F.count("*"),
     )
+    n_edges = m["n"]
     for _ in range(max_iters):
         # large-star: for each u, m = min(N(u) ∪ {u}); larger
         # neighbors v > u re-attach as (v, m)
@@ -1820,13 +1821,15 @@ def _components_star(
             F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v")
         )
         mins2 = sm.groupBy("u").agg(F.min("v").alias("mn"))
-        new_edges, n_new_edges = sever_count(
+        new_edges, m = checkpoint_with(
             sm.join(mins2, "u")
             .filter(F.col("v") != F.col("mn"))
             .select(F.col("v").alias("a"), F.col("mn").alias("b"))
             .union(mins2.select(F.col("u").alias("a"), F.col("mn").alias("b")))
-            .distinct()
+            .distinct(),
+            n=F.count("*"),
         )
+        n_new_edges = m["n"]
         # counts ride the severing jobs (no per-round re-count); the
         # subtract probe only runs when the counts agree
         converged = (
@@ -2442,14 +2445,15 @@ def embedding_dup_pairs(
         "rep",
         F.min("doc").over(Window.partitionBy(F.xxhash64(F.col("v")), F.col("v"))),
     )
-    reps = (
-        vm.filter(F.col("doc") == F.col("rep"))
-        .select(F.col("rep").alias("doc"), "v")
-        # the grid replicates this frame n_blocks times and the member
-        # expansion reads it again — materialize the collapse once
-        .localCheckpoint(eager=True)
+    # the grid replicates this frame n_blocks times and the member
+    # expansion reads it again — materialize the collapse once
+    reps, m = checkpoint_with(
+        vm.filter(F.col("doc") == F.col("rep")).select(
+            F.col("rep").alias("doc"), "v"
+        ),
+        n=F.count("*"),
     )
-    n = n_rows if n_rows is not None else reps.count()
+    n = n_rows if n_rows is not None else m["n"]
     n_blocks = max(1, math.ceil(n / block_rows))
     n_pairs = n_blocks * (n_blocks + 1) // 2
     vecs = reps.select(

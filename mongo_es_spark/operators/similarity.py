@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..sparkutil import checkpoint_with
 from ..storeio import read_store
 
 from .dedup import (
@@ -642,16 +643,16 @@ def append_to_ivf_index(
     assign = pandas_udf(
         _assign_residual_kernel(C), "struct<cell:int,residual:double>"
     )
-    from ..sparkutil import sever_count
-
-    staged, n = sever_count(
+    staged, m = checkpoint_with(
         fresh.withColumn("__ar", assign(F.col("v"))).select(
             F.col(id_col),
             "v",
             F.col("__ar.cell").alias("cell"),
             F.col("__ar.residual").alias("__res"),
-        )
+        ),
+        n=F.count("*"),
     )
+    n = m["n"]
     if n:
         # cellstats BEFORE the vectors append: replay detection
         # anti-joins on the vectors id set, so a crash between the two
@@ -798,11 +799,9 @@ def apply_cdc_to_ivf_index(
             & F.col("__live_v").eqNullSafe(F.col("v"))
         )
     )
-    st = st.localCheckpoint(eager=True)
-    arow = st.agg(
-        F.sum(applies.cast("long")).alias("n"),
-        F.max("__dup").alias("maxdup"),
-    ).head()
+    st, arow = checkpoint_with(
+        st, n=F.sum(applies.cast("long")), maxdup=F.max("__dup")
+    )
     if arow["maxdup"] is not None and int(arow["maxdup"]) > 1:
         raise ValueError(
             "apply_cdc_to_ivf_index: duplicate ids in the batch — "
@@ -827,18 +826,17 @@ def apply_cdc_to_ivf_index(
     assign = pandas_udf(
         _assign_residual_kernel(C), "struct<cell:int,residual:double>"
     )
-    from ..sparkutil import sever_count
-
-    staged, n_staged = sever_count(
+    staged, m = checkpoint_with(
         ups.withColumn("__ar", assign(F.col("v"))).select(
             F.col(id_col),
             "v",
             F.col("__ar.cell").alias("cell"),
             F.col("__ar.residual").alias("__res"),
-        )
+        ),
+        n=F.count("*"),
     )
     # 2. cellstats (over-covering on retry — conservative)
-    if n_staged > 0:
+    if m["n"] > 0:
         _write_cellstats(staged, f"{path}/cellstats", mode="append")
     # 3. dead watermarks: deletes, and updates superseding a live row
     watermarks = (
@@ -2186,15 +2184,11 @@ def incremental_seed_distance(
         )
 
     def _sever(df: DataFrame) -> tuple[DataFrame, bool]:
-        """Round boundary: lazy local checkpoint + JVM RDD count —
-        ONE job materializes the frontier (lineage truncation, see
-        the persist note above) and returns whether it is empty.
-        Eager-checkpoint-then-isEmpty paid two jobs, and a DataFrame
-        ``count()`` is itself two under AQE (sparkutil.sever_count)."""
-        from ..sparkutil import sever_count
-
-        df, n = sever_count(df)
-        return df, n == 0
+        """Round boundary: ONE materialization of the frontier
+        (lineage truncation, see the persist note above) that also
+        says whether it is empty (sparkutil.checkpoint_with)."""
+        df, m = checkpoint_with(df, n=F.count("*"))
+        return df, m["n"] == 0
 
     frontier, empty = _sever(_improvements(cands, None, bnd=probe0))
     initial_empty = empty
@@ -3208,11 +3202,10 @@ def kcenter_coreset(
         # (documented), rather than crash the Arrow kernel mid-round
         # or let an inf-__mind null row win the farthest-point argmax
     ).filter(F.col("v").isNotNull())
-    from ..sparkutil import sever_count
-
-    state, n = sever_count(
-        base.withColumn("__mind", F.lit(float("inf")))
+    state, m = checkpoint_with(
+        base.withColumn("__mind", F.lit(float("inf"))), n=F.count("*")
     )
+    n = m["n"]
     if n == 0:
         # empty in, empty out — not a None-radius crash
         return df.sparkSession.createDataFrame(
@@ -3259,11 +3252,14 @@ def kcenter_coreset(
             out_rows.append((prev_id, r - 1, float(row["__mind"])))
         prev_id = int(row["doc"])
         dist = dist_kernel_for(row["v"])
-        state = state.withColumn(
-            "__mind", F.least(F.col("__mind"), dist(F.col("v")))
-        ).localCheckpoint(eager=True)
-    radius = state.agg(F.max("__mind").alias("m")).head()["m"]
-    out_rows.append((prev_id, k - 1, float(radius)))
+        # the last round's max is the final cover radius
+        state, m = checkpoint_with(
+            state.withColumn(
+                "__mind", F.least(F.col("__mind"), dist(F.col("v")))
+            ),
+            radius=F.max("__mind"),
+        )
+    out_rows.append((prev_id, k - 1, float(m["radius"])))
 
     spark = df.sparkSession
     centers = spark.createDataFrame(

@@ -16,6 +16,8 @@ from typing import Mapping, NamedTuple, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sparkutil import checkpoint_with, release_checkpoint
+
 STOPWORDS = ("the", "a", "of", "to", "in", "and", "is", "on")
 
 FINGERPRINT_MOD = 1_000_000_007
@@ -981,11 +983,9 @@ def incremental_bm25_index(
     ).sortWithinPartitions("token", "doc").write.mode("append").parquet(
         _bm_postings_path(store_path)
     )
-    # one job materializes docstats AND yields the tokenstats doc
-    # count (was an eager checkpoint + a separate count job)
-    from ..sparkutil import sever_count
-
-    dl_rows, n_new = sever_count(dl_rows)
+    # one job materializes docstats AND yields the tokenstats doc count
+    dl_rows, m = checkpoint_with(dl_rows, n=F.count("*"))
+    n_new = m["n"]
     dl_rows.write.mode("append").parquet(_bm_docstats_path(store_path))
     # df-rollup delta LAST (docstats is the commit point — a crash
     # before this line leaves the rollup short, which readers detect
@@ -1132,10 +1132,6 @@ def apply_cdc_to_bm25_index(
         )
         for f in fields:
             b = b.withColumn(f"__cur_fld_{f}", F.col(f))
-    # ONE batch-proportional job materializes the probe: batch rows +
-    # their latest stored state (+ the dup count when unordered); every
-    # check below reads the checkpointed blocks, not the store
-    probe = b.localCheckpoint(eager=True)
     # replay filter: an upsert applies unless the LIVE row carries the
     # same digest; a delete applies only to a live row; a TOMBSTONING
     # upsert (null text — the only input that tokenizes to nothing,
@@ -1165,11 +1161,12 @@ def apply_cdc_to_bm25_index(
             )
         )
     )
-    applied_full = probe.filter(applies)
-    # ONE batch-sized aggregate serves the emptiness check, the
-    # dead-row increment for the params counter AND (when unordered)
-    # the duplicate-id guard — previously a second collect job per
-    # trigger: each applied row kills its doc's previous latest LIVE
+    # ONE batch-proportional job materializes the probe (batch rows +
+    # their latest stored state + the dup count when unordered) and
+    # observes the emptiness check, the dead-row increment for the
+    # params counter AND (when unordered) the duplicate-id guard;
+    # every check below reads the checkpointed blocks, not the store.
+    # Dead rows: each applied row kills its doc's previous latest LIVE
     # row (a superseded tombstone was already counted dead when IT was
     # written — counting it again on resurrection would drift the
     # counter +1 per delete→reinsert cycle), and a tombstone row is
@@ -1181,19 +1178,17 @@ def apply_cdc_to_bm25_index(
     # (conditional sums), not the applied subset — a duplicated id
     # must raise even when every copy is a replay.
     is_tomb = (F.col("__op") == "d") | F.col("__t").isNull()
-    arow = probe.agg(
-        F.sum(applies.cast("long")).alias("n"),
-        F.sum(
+    probe, arow = checkpoint_with(
+        b,
+        n=F.sum(applies.cast("long")),
+        prior=F.sum(
             (applies & F.col("__cur_del").eqNullSafe(F.lit(False)))
             .cast("long")
-        ).alias("prior"),
-        F.sum((applies & is_tomb).cast("long")).alias("tombs"),
-        *(
-            []
-            if seq_col
-            else [F.max(F.col("__dup")).alias("maxdup")]
         ),
-    ).head()
+        tombs=F.sum((applies & is_tomb).cast("long")),
+        **({} if seq_col else {"maxdup": F.max(F.col("__dup"))}),
+    )
+    applied_full = probe.filter(applies)
     if not seq_col:
         if arow["maxdup"] is not None and int(arow["maxdup"]) > 1:
             # error path only: one extra scan of the materialized
@@ -1490,10 +1485,10 @@ def repair_bm25_tokenstats(spark, store_path: str) -> dict:
     live_ids = ds.select("doc")
     if docs.join(live_ids, "doc", "left_anti").limit(1).count() > 0:
         return full()  # counted docs no longer live — sidecar stale
-    missing = live_ids.join(docs, "doc", "left_anti").localCheckpoint(
-        eager=True
+    missing, m = checkpoint_with(
+        live_ids.join(docs, "doc", "left_anti"), n=F.count("*")
     )
-    n_missing = missing.count()
+    n_missing = m["n"]
     if n_missing == 0:
         return full()  # desynced yet nothing identifiable — torn pair
     post = read_parquet_if_exists(
@@ -1596,8 +1591,6 @@ _SNAPSHOT_LOCK = threading.Lock()
 
 
 def _drop_snapshot(spark, ent) -> None:
-    from ..sparkutil import release_checkpoint
-
     if ent[0][0] == spark.sparkContext.applicationId:
         release_checkpoint(ent[1])
 
@@ -1605,8 +1598,8 @@ def _drop_snapshot(spark, ent) -> None:
 def _live_snapshot(spark, store_path: str, docstats: DataFrame):
     """``(live docstats with gen, n_docs, avgdl)`` of a mutated store,
     resolved once per store generation: the live window runs once into
-    a local checkpoint and the corpus statistics are aggregated from
-    it; requests then semi-join the postings against the checkpointed
+    a local checkpoint whose job also yields the corpus statistics;
+    requests then semi-join the postings against the checkpointed
     ``(doc, gen)`` set.  A store whose listing cannot be read is
     resolved per call (``n_docs`` None)."""
     listing = _listing_key(
@@ -1623,14 +1616,11 @@ def _live_snapshot(spark, store_path: str, docstats: DataFrame):
             return ent[1:]
         if ent is not None:
             _drop_snapshot(spark, ent)
-        live = (
-            _bm_live_docstats(docstats)
-            .drop("sig", "deleted")
-            .localCheckpoint(eager=True)
+        live, row = checkpoint_with(
+            _bm_live_docstats(docstats).drop("sig", "deleted"),
+            n_docs=F.count("*"),
+            avgdl=F.avg("dl"),
         )
-        row = live.agg(
-            F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl")
-        ).head()
         ent = (key, live, int(row["n_docs"]), row["avgdl"])
         _SNAPSHOTS[path] = ent
         while len(_SNAPSHOTS) > _SNAPSHOT_MAX:

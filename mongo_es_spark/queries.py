@@ -8274,6 +8274,7 @@ def pipeline_text_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .operators.text import hash_embed
     from .operators.similarity import ann_ivf_topk
+    from .sparkutil import checkpoint_with
 
     docs = load_table(spark, sf_dir, "documents")
     reps = (
@@ -8289,8 +8290,8 @@ def pipeline_text_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one eager materialization: the IVF trainer, the cell assigner,
     # and the exact-check scan would each otherwise recompute the
     # explode + histogram lineage
-    emb = emb.localCheckpoint(eager=True)
-    qid = int(emb.agg(F.min("vec_id")).head()[0])
+    emb, m = checkpoint_with(emb, qid=F.min("vec_id"))
+    qid = int(m["qid"])
     ann = ann_ivf_topk(
         emb, "vec_id", "embedding", query_id=qid, k=10, n_probe=8
     )

@@ -32,14 +32,10 @@ def get_spark(app_name: str = "mongo-es-spark", shuffle_partitions: int | None =
         # to shuffled-hash when every post-shuffle partition is small.
         # Both are scale-safe: SMJ remains the fallback whenever the
         # build side could not fit, and the AQE threshold is sized in
-        # bytes (env-overridable for cluster tuning).
+        # bytes.
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP_MAX", "128m"),
+            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "128m"
         )
         # guide §2: AQE coalescing targets max(totalBytes/parallelism,
         # minPartitionSize).  The 1m default floor serializes stages
@@ -49,8 +45,7 @@ def get_spark(app_name: str = "mongo-es-spark", shuffle_partitions: int | None =
         # tasks; at corpus scale totalBytes/parallelism dominates and
         # the floor never binds, so this is not a local[32] tweak.
         .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k"),
+            "spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k"
         )
         # AQE applies to shuffles under persist()ed plans too (default
         # false keeps a cached plan's output partitioning stable for
@@ -58,17 +53,13 @@ def get_spark(app_name: str = "mongo-es-spark", shuffle_partitions: int | None =
         # and without it every cached aggregate pins the full
         # shuffle-partition fan-out regardless of bytes)
         .config(
-            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-            os.environ.get("SPARK_GRAFT_AQE_ON_CACHED_PLANS", "true"),
+            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
         )
         # guide §6/§9: parquet codec for everything this engine WRITES
         # (stores, sinks, checkpointed state).  zstd ~= snappy read
         # speed at a markedly better ratio — smaller store files are
-        # fewer bytes on every fold re-read.  Env-overridable for A/B.
-        .config(
-            "spark.sql.parquet.compression.codec",
-            os.environ.get("SPARK_GRAFT_PARQUET_CODEC", "zstd"),
-        )
+        # fewer bytes on every fold re-read.
+        .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")

@@ -53,11 +53,11 @@ OPLOG_SCHEMA = StructType(
 
 def ms_to_bson_ts(epoch_ms: int) -> int:
     """Epoch milliseconds -> BSON-Timestamp-style long
-    ((seconds << 32) | inc, inc = 0).  Checkpoints store wall-clock ms
-    (streaming/tail.py saves ``now - 10 s``); the oplog ``ts`` column
-    is BSON-encoded, so the resume comparison must convert first —
-    the reference does the same via ``new Timestamp(0, seconds)``
-    (src/mongodb.ts:49)."""
+    ((seconds << 32) | inc, inc = 0).  Checkpoints store epoch ms
+    (streaming/tail.py saves the last loaded event's time minus 10 s);
+    the oplog ``ts`` column is BSON-encoded, so the resume comparison
+    must convert first — the reference does the same via
+    ``new Timestamp(0, seconds)`` (src/mongodb.ts:49)."""
     return (epoch_ms // 1000) << 32
 
 

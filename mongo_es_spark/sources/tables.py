@@ -55,8 +55,7 @@ def prepare_session(spark: SparkSession) -> SparkSession:
 # warm session — measured; ~29 ms with the schema pinned), and the
 # fixtures are read once or twice by nearly every registry query.  The
 # key carries the path's (mtime_ns, size), so a fixture overwritten in
-# place (test-local tmp dirs) re-infers; ``SPARK_GRAFT_FIXTURE_SCHEMA_
-# CACHE=0`` disables.  Inference runs under ``prepare_session``'s
+# place (test-local tmp dirs) re-infers.  Inference runs under ``prepare_session``'s
 # nanosAsLong/UTC settings, which every caller of this module applies,
 # so a cached schema is what a fresh inference would produce.
 _SCHEMA_CACHE: dict = {}
@@ -75,21 +74,17 @@ def load_table(
 ) -> DataFrame:
     prepare_session(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    df = None
-    if os.environ.get("SPARK_GRAFT_FIXTURE_SCHEMA_CACHE", "1") != "0":
-        try:
-            key = (os.path.abspath(path), _table_stat(path))
-        except OSError:
-            key = None
-        if key is not None:
-            schema = _SCHEMA_CACHE.get(key)
-            if schema is None:
-                df = spark.read.parquet(path)
-                _SCHEMA_CACHE[key] = df.schema
-            else:
-                df = spark.read.schema(schema).parquet(path)
-    if df is None:
+    try:
+        key = (os.path.abspath(path), _table_stat(path))
+    except OSError:
+        key = None
+    schema = _SCHEMA_CACHE.get(key) if key is not None else None
+    if schema is None:
         df = spark.read.parquet(path)
+        if key is not None:
+            _SCHEMA_CACHE[key] = df.schema
+    else:
+        df = spark.read.schema(schema).parquet(path)
     if name == "events":
         if max_event_ts_ns is not None:
             df = _filter_raw_event_ts(df, max_event_ts_ns)

@@ -1,52 +1,47 @@
-"""One-job materialization helpers for iterative operators.
+"""One materialize-and-measure primitive for iterative operators.
 
 Every fold in this engine alternates "sever the plan" (localCheckpoint
 — lineage truncation keeps Catalyst's per-round planning cost bounded)
-with "how big was it?" (count / isEmpty drives early exit and
-observability counters).  Done naively that is TWO scheduler round
-trips per round:
-
-* ``localCheckpoint(eager=True)`` runs one job (an internal
-  ``RDD.count()`` — no AQE, single stage), then
-* ``df.count()`` / ``df.isEmpty()`` runs a second — and a DataFrame
-  ``count()`` is itself a partial+final aggregate that AQE executes as
-  TWO jobs (shuffle-map stage + result stage).
+with "what did it hold?" (a count, an emptiness flag, a max: they drive
+early exit, params counters and resume points).  Done naively that is
+a checkpoint job plus a separate probe, and a DataFrame aggregate is
+itself a partial+final pair that AQE executes as two jobs.
 
 At the scale this engine benches (wave-sized frames, hundreds of
 micro-jobs per query) the per-job fixed cost — scheduler latency plus
 the driver's inter-job think time — dominates, so the job count IS the
-cost model.  ``sever_count`` fuses the pair: mark the plan for a lazy
-local checkpoint, then count the BACKING RDD in the JVM.  The RDD
-count is one single-stage job with no AQE re-planning; computing every
-partition materializes the checkpoint (Spark truncates lineage at job
-end), and the count comes back for free.
+cost model.  ``checkpoint_with`` asks the checkpoint's own job for the
+aggregates: Spark's observed metrics (``Dataset.observe``) are computed
+while the plan runs and delivered when the action that ran it ends.
+An eager ``localCheckpoint`` is such an action, so the frame and its
+measurements come from one materialization: one job on a narrow
+frame, the plan's own shuffle stages on a wider one, never a probe job.
 """
 
 from __future__ import annotations
 
-from py4j.protocol import Py4JError
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 
-__all__ = ["release_checkpoint", "sever_count"]
+__all__ = ["checkpoint_with", "release_checkpoint"]
 
 
-def sever_count(df: DataFrame) -> tuple[DataFrame, int]:
-    """Local-checkpoint ``df`` and return ``(severed_df, row_count)``
-    in ONE Spark job (vs three for eager-checkpoint + DataFrame
-    count).  Falls back to the public two-job path only when the
-    internal RDD handle is unavailable (e.g. Spark Connect: no
-    ``_jdf``, or a JVM without the method); an error raised while the
-    count runs propagates instead of re-running the plan."""
-    out = df.localCheckpoint(eager=False)
-    try:
-        rdd = out._jdf.queryExecution().toRdd()
-    except (AttributeError, Py4JError):
-        out = df.localCheckpoint(eager=True)
-        return out, int(out.count())
-    # JVM-side count over the checkpoint-marked internal RDD: single
-    # stage, no Python row traffic, materializes the checkpoint as a
-    # side effect.
-    return out, int(rdd.count())
+def checkpoint_with(
+    df: DataFrame, **aggs: Column
+) -> tuple[DataFrame, dict]:
+    """Eagerly local-checkpoint ``df`` and return ``(checkpointed_df,
+    metrics)``, where ``metrics`` maps each keyword to its aggregate
+    over the rows the checkpoint materialized, e.g.
+    ``checkpoint_with(df, n=F.count("*"), top=F.max("ts"))``.  On an
+    empty frame ``count`` is 0 and the other aggregates are None, as
+    with ``df.agg(...).head()``.  An error raised while the plan runs
+    propagates from that one action."""
+    obs = Observation()
+    out = df.observe(
+        obs, *(col.alias(name) for name, col in aggs.items())
+    ).localCheckpoint(eager=True)
+    # read only after the action returned: ``get`` blocks until the
+    # observed action finishes, and forever if it failed
+    return out, obs.get
 
 
 def release_checkpoint(df: DataFrame) -> None:

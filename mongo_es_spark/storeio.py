@@ -45,13 +45,10 @@ _MISSING = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
 # recycle the sentinel (parquet part names carry UUIDs), and in-place
 # compactions that delete old files drop the sentinel.  Non-stat-able
 # paths (object-store URIs) skip the cache entirely.
-# ``SPARK_GRAFT_SCHEMA_CACHE=0`` disables.
 _SCHEMA_CACHE: dict = {}
 
 
 def _schema_cache_key(path: str):
-    if os.environ.get("SPARK_GRAFT_SCHEMA_CACHE", "1") == "0":
-        return None
     try:
         return (path, os.stat(path).st_ino)
     except OSError:
@@ -78,7 +75,14 @@ def read_parquet_if_exists(
     not exist or holds no data files yet (e.g. only ``_``-prefixed
     sidecars from a partially-completed first write).  Repeat reads of
     an unchanged-layout store reuse the first read's schema (see
-    ``_SCHEMA_CACHE``), skipping the per-open schema-inference job."""
+    ``_SCHEMA_CACHE``), skipping the per-open schema-inference job.
+
+    A missing local path returns ``None`` without asking Spark: a read
+    that fails analysis is re-analysed, and logged as an ERROR, by the
+    session's observed-metrics listener (``sparkutil.checkpoint_with``
+    registers it)."""
+    if "://" not in path and not os.path.exists(path):
+        return None
     key = _schema_cache_key(path)
     cached = None
     if key is not None:

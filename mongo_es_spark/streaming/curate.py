@@ -56,6 +56,7 @@ from ..operators.text import (
     pack_sequences,
     temperature_sample,
 )
+from ..sparkutil import checkpoint_with
 
 __all__ = ["curate_batch", "rebalance"]
 
@@ -165,11 +166,10 @@ def curate_batch(
         )
     # materialize: `first` feeds three consumers and must be fixed
     # before this batch appends to the stores it was derived from.
-    # sever_count fuses the checkpoint with the n_fresh counter into
-    # one job (guide §1.2 — the fold's cost here is job count).
-    from ..sparkutil import sever_count
-
-    fresh, n_fresh = sever_count(first)
+    # The same job yields the n_fresh counter (guide §1.2 — the fold's
+    # cost here is job count).
+    fresh, m = checkpoint_with(first, n=F.count("*"))
+    n_fresh = m["n"]
     n_quality = passed.count()
 
     # 3. near dedup vs the signature store.  ALL fresh docs enter the
@@ -208,11 +208,13 @@ def curate_batch(
         )
         .distinct()
     )
-    kept, n_kept = sever_count(
+    kept, m = checkpoint_with(
         fresh.join(
             drops.withColumnRenamed("doc", id_col), id_col, "left_anti"
-        )
+        ),
+        n=F.count("*"),
     )
+    n_kept = m["n"]
     passed.unpersist()
 
     # 4. idempotent appends

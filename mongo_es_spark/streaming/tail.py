@@ -27,7 +27,6 @@ is the only other shuffle.  Nothing in the plan is driver-side.
 
 from __future__ import annotations
 
-import time
 from typing import Mapping, Optional
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -38,6 +37,7 @@ from ..operators.oplog_compaction import compact_oplog_docs
 from ..plans.cdc_schema import oplog_value_schema, sink_data_schema
 from ..functions.columns import nest_target_paths
 from ..ratelimit import throttle
+from ..sparkutil import checkpoint_with
 
 
 def _nested(prefix: str, path: str) -> Column:
@@ -203,7 +203,6 @@ def run_tail(
     hints: Optional[Mapping[str, object]] = None,
     checkpoint_dir: str = "/tmp/mongo-es-spark-ckpt",
     available_now: bool = False,
-    suppress_redelivery_ttl: Optional[int] = None,
 ):
     """Start the tail streaming query (C6 steady state).
 
@@ -216,50 +215,39 @@ def run_tail(
     batch, with its deliberate 10 s overlap
     (reference: src/processor.ts:384-390).
 
-    ``suppress_redelivery_ttl``: optional stateful cross-batch dedup
-    (streaming/dedup_state.py) dropping events replayed by the
-    at-least-once resume window before they cost lookup joins and
-    sink writes.  Off by default — idempotent sinks already absorb
-    replays; turn it on when replay volume is worth the state store.
+    The saved resume point comes from the data: the batch's largest
+    oplog ``ts`` (in epoch ms) minus the 10 s overlap, so a tail that
+    lags the oplog never saves a point past events it has not loaded.
+    A batch with no surviving event saves the previous point again.
+    Replays after a restart are absorbed by the idempotent sinks.
     """
-    if suppress_redelivery_ttl is not None:
-        from .dedup_state import suppress_redelivered
-
-        oplog_stream = suppress_redelivered(
-            oplog_stream, ttl_seconds=suppress_redelivery_ttl
-        )
+    resume_ms = task.from_.time
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        nonlocal resume_ms
         # C1: pace the oplog read (reference src/processor.ts:31-49);
         # no-op unless mongodbReadCapacity is a finite number
         batch_df = throttle(batch_df, controls.mongodb_read_capacity)
-        compacted = compact_oplog_docs(batch_df, task)
+        # ONE materialization of the compaction fold serves the state
+        # probe, the lookup's id set, the dispatch pass and the resume
+        # point.  Only patch-updates and parent-routed deletes ever
+        # CONSULT sink state in dispatch_ir_frame — inserts,
+        # full-replace updates and parentless deletes produce identical
+        # IR with state=None (patched/__sink_* branches are
+        # unreachable, and the delete keep-rule is `true | in_sink`).
+        # So an insert-only / full-replace tail never scans the sink's
+        # merge log (or issues _mget calls) at all — per-trigger state
+        # cost ∝ 0 instead of ∝ log size on the dominant CDC shape.
+        consults = (F.col("op") == "u") & ~F.col("has_plain")
+        if task.transform.parent:
+            consults = consults | (F.col("op") == "d")
+        compacted, seen = checkpoint_with(
+            compact_oplog_docs(batch_df, task),
+            consults_state=F.max(consults.cast("int")),
+            max_ts=F.max("ts"),
+        )
         state = None
-        need_state = hasattr(sink, "read_state")
-        if need_state and not task.transform.parent:
-            # Only patch-updates (and parent-routed deletes, excluded
-            # above) ever CONSULT sink state in dispatch_ir_frame —
-            # inserts, full-replace updates and parentless deletes
-            # produce identical IR with state=None (patched/__sink_*
-            # branches are unreachable, and the delete keep-rule is
-            # `true | in_sink`).  One batch-sized probe decides, so an
-            # insert-only / full-replace tail never scans the sink's
-            # merge log (or issues _mget calls) at all — per-trigger
-            # state cost ∝ 0 instead of ∝ log size on the dominant
-            # CDC shape.  The checkpoint makes the probe, the lookup's
-            # id broadcast and the dispatch pass share ONE
-            # materialization of the compaction fold (it previously
-            # re-ran lazily per consumer).
-            compacted = compacted.localCheckpoint(eager=True)
-            has_patch = compacted.agg(
-                F.max(
-                    (
-                        (F.col("op") == "u") & ~F.col("has_plain")
-                    ).cast("int")
-                )
-            ).head()[0]
-            need_state = bool(has_patch)
-        if need_state:
+        if hasattr(sink, "read_state") and seen["consults_state"]:
             # J1/J2: the batch's distinct keys drive the lookup —
             # ParquetIndexSink semi-joins its log to them before the
             # latest-wins window, EsBulkSink turns them into
@@ -280,11 +268,11 @@ def run_tail(
                 )
         irs = dispatch_ir_frame(compacted, task, state, source_df, hints)
         sink.apply(spark, irs, batch_id)
+        if seen["max_ts"] is not None:
+            # BSON-style ts: seconds in the high 32 bits
+            resume_ms = (seen["max_ts"] >> 32) * 1000 - 10_000
         Task.save_checkpoint(
-            task.name(),
-            CheckPoint(
-                phase="tail", time=int(time.time() * 1000) - 10_000
-            ),
+            task.name(), CheckPoint(phase="tail", time=resume_ms)
         )
 
     writer = (

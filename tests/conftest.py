@@ -98,7 +98,6 @@ _FILE_COST = {
     "test_windows.py": 12,
     "test_temporal.py": 11,
     "test_heavy_stream.py": 11,
-    "test_dedup_state.py": 10,
     "test_property.py": 5,
     "test_ratelimit.py": 5,
     "test_query_string.py": 4,
