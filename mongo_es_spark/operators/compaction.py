@@ -8,8 +8,8 @@ Re-expresses the reference's ``mergeOplogs`` store-fold
     d then u -> u (revives)                   d then i -> i
 
 The reference replays events per key through a mutable store.  The
-Spark-first insight: for a closed set of mapped payload fields, the
-fold's OUTCOME is a pure function of per-key window aggregates —
+Spark-first insight: for a closed set of projected fields, the fold's
+OUTCOME is a pure function of per-key window aggregates —
 
 * the survivor is always the LAST event (ts order) of the key, with
   - op upgraded ``u -> i`` when the store held an insert, and
@@ -17,16 +17,32 @@ fold's OUTCOME is a pure function of per-key window aggregates —
 * "the store held an insert" == the latest non-'u' event before the
   last one is an 'i' (an 'i' stays 'i' under any number of 'u's; any
   'd' either clears it or becomes the store entry);
-* each mapped payload field's value is last-writer-wins among events
-  that wrote it (insert doc / update $set), because both the i-patch
-  (applyUpdateMongoDoc, processor.ts:272) and the u-merge
-  (_.merge, processor.ts:275) apply later events over earlier ones.
+* each projected field is decided by ONE event: the last one of the
+  key's SEGMENT that writes it.  The segment starts at the key's last
+  'i'/'d' (else at its first event): those replace the store entry.
 
-That makes compaction ONE shuffle (window partitioned by key) with no
-UDFs, no state store, and no join — it scales to any number of keys.
-Contrast with a faithful-but-wrong port: ``applyInPandas`` replaying
-the fold per key would ship every event through Python for the same
-answer.
+:func:`compact_events` is the flat-row case (every event writes every
+column).  :func:`compact_oplog_docs` is the tail's document-shaped
+case; it folds exactly the projection ``dispatch_ir_frame`` reads
+(typed ``o.<mapped path>``, the literal ``o.$set.<mapped path>`` key,
+``unset_keys``, ``has_plain``, ``op``, ``ts``, ``id``).  In a segment
+that starts with an 'i', a path keeps the insert's value unless a later
+'u' writes it by a ``$set`` that ``paths.has`` finds (literal key
+first) or a truthy ``$unset`` (unset before set, as in
+``apply_update_mongo_doc``); a plain replace does not touch it.  In a
+segment of 'u's, ``paths.merge`` merges key by key, so plain values,
+literal ``$set`` keys and ``$unset`` truthiness are independent
+last-writer columns, where a JSON null — also at a prefix — is a write.
+Presence comes from the parsed variant, typed values from ``from_json``
+against ``oplog_value_schema`` (the dispatch's own conversions).  One
+shuffle, no UDF, no state store, no join.
+
+Typed contract, on which the fold equals ``core.merge_oplogs``
+(``test_doc_fold_matches_spec``): mapped paths none a prefix of
+another; values that fit the hints or JSON null at any level; bodies
+that nest their keys (a literal dotted key in a body is invisible to
+the typed read); ``$set``/``$unset`` objects or null; distinct ``ts``
+per key.  A malformed ``doc`` folds like an empty one.
 
 Skew note (why there is no salted two-stage variant): the fold is NOT
 associative under arbitrary splitting, so compact-per-(key,salt) then
@@ -49,10 +65,14 @@ sink's per-key ordering safe across partitions (SURVEY §4).
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Mapping, Optional, Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..config import Task
+from ..functions.columns import nest_target_paths
+from ..plans.cdc_schema import oplog_value_schema
 
 OP_INSERT = "i"
 OP_UPDATE = "u"
@@ -122,4 +142,191 @@ def compact_events(
         tail_cols.append(F.col(tiebreak_col))
     return last.filter(~annihilated).select(
         *[F.col(k) for k in key_cols], survivor_op, *payload, *tail_cols
+    )
+
+
+# The per-event columns are SQL text: built as Column objects, each of
+# their ~100 expressions costs py4j round trips (0.7 s per trigger).
+_KEY_WINDOW = (
+    "OVER (PARTITION BY ns, id ORDER BY ts DESC "
+    "ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)"
+)
+
+
+class _EventColumns:
+    """Per-event columns over the parsed document ``__v``, each named
+    (``__e<n>``) and computed once before the shuffle; later ones refer
+    to earlier ones by lateral alias."""
+
+    def __init__(self) -> None:
+        self._names: dict[str, str] = {}
+
+    def named(self, sql: str) -> str:
+        return self._names.setdefault(sql, f"__e{len(self._names)}")
+
+    def select_list(self) -> list[str]:
+        return [f"{sql} AS {name}" for sql, name in self._names.items()]
+
+    def node(self, *keys: str) -> str:
+        """The value at ``keys`` as a variant: SQL NULL when absent,
+        variant null for JSON null; a literal dotted key is one step."""
+        if not keys:
+            return "__v"
+        parent = self.node(*keys[:-1])
+        return self.named(
+            f"try_variant_get({parent}, \"$['{keys[-1]}']\", 'variant')"
+        )
+
+    def writes(self, *keys: str) -> str:
+        """Whether ``paths.merge`` of this document changes ``keys``:
+        the leaf is present, or a prefix holds a non-object."""
+        terms = [f"{self.node(*keys)} IS NOT NULL"]
+        for i in range(1, len(keys)):
+            prefix = self.node(*keys[:i])
+            terms.append(
+                self.named(
+                    f"{prefix} IS NOT NULL"
+                    f" AND try_variant_get({prefix}, '$', 'struct<>') IS NULL"
+                )
+            )
+        return self.named(" OR ".join(terms))
+
+    def truthy(self, *keys: str) -> str:
+        """Python truthiness of the value at ``keys``: absent, null,
+        false, 0, "", [] and {} are false."""
+        value = self.node(*keys)
+        text = self.named(f"to_json({value})")
+        return self.named(
+            f"coalesce(NOT is_variant_null({value})"
+            f" AND {text} NOT IN ('false', '\"\"', '[]', '{{}}')"
+            f" AND NOT coalesce(NOT startswith({text}, '\"')"
+            f" AND try_variant_get({value}, '$', 'double') = 0, false),"
+            " false)"
+        )
+
+
+def _typed(*keys: str) -> str:
+    return "__t." + ".".join(f"`{k}`" for k in keys)
+
+
+def compact_oplog_docs(
+    df: DataFrame,
+    task: Task,
+    hints: Optional[Mapping[str, object]] = None,
+) -> DataFrame:
+    """Compact oplog rows (sources/cdc.py schema) to at most one
+    survivor per ``(ns, id)``: ``ns, id, op, o, has_plain, unset_keys,
+    ts``, with ``o`` typed like ``oplog_value_schema(task, hints)``
+    (less its nested ``$set`` fields), ``has_plain`` the full-replace
+    marker (reference: src/processor.ts:186) and ``unset_keys`` the
+    mapped paths with a truthy ``$unset`` (src/processor.ts:97).  See
+    the module docstring for the rule and its typed contract."""
+    mapping = task.transform.mapping
+    ev = _EventColumns()
+    # per path: plain value and merge write; the $set value paths.has
+    # finds; literal $set key; $unset truthiness, literal (NULL when
+    # absent) and nested
+    per_path = []
+    for path in task.source_paths():
+        keys = path.split(".")
+        lit_set = ev.node("$set", path)
+        cols = {
+            "doc": ev.named(_typed(*keys)),
+            "w_doc": ev.writes(*keys),
+            "set": ev.named(
+                f"CASE WHEN {lit_set} IS NOT NULL THEN {_typed('$set', path)}"
+                f" ELSE {_typed('$set', *keys)} END"
+            ),
+            "has_set": ev.named(
+                f"{lit_set} IS NOT NULL"
+                f" OR {ev.node('$set', *keys)} IS NOT NULL"
+            ),
+            "lit_set": ev.named(_typed("$set", path)),
+            "w_lit_set": ev.writes("$set", path),
+        }
+        if path in mapping:
+            cols |= {
+                "lit_unset": ev.named(
+                    f"CASE WHEN {ev.node('$unset', path)} IS NOT NULL"
+                    f" THEN {ev.truthy('$unset', path)} END"
+                ),
+                "w_lit_unset": ev.writes("$unset", path),
+                "nest_unset": ev.truthy("$unset", *keys),
+                "w_nest_unset": ev.writes("$unset", *keys),
+            }
+        per_path.append((path, cols))
+
+    events = (
+        df.select(
+            "ns", "id", "ts", "op",
+            F.try_parse_json("doc").alias("__v"),
+            F.from_json("doc", oplog_value_schema(task, hints)).alias("__t"),
+            F.expr(
+                "exists(json_object_keys(doc),"
+                " k -> NOT startswith(k, '$') AND k != '_id') AS __plain"
+            ),
+        )
+        .selectExpr("ns", "id", "ts", "op", "__plain", *ev.select_list())
+        .withColumn(
+            # the segment start: the key's last 'i'/'d', NULL when none
+            "__seg",
+            F.expr(
+                "max_by(struct(ts, op), CASE WHEN op != 'u' THEN ts END)"
+                f" {_KEY_WINDOW}"
+            ),
+        )
+    )
+
+    def last(writes: str, value: str) -> str:
+        return f"max_by({value}, CASE WHEN {writes} THEN ts END) {_KEY_WINDOW}"
+
+    # the u events of the segment, and whether it opens with an insert
+    seg_u = "(op = 'u' AND (__seg IS NULL OR ts > __seg.ts))"
+    patches_insert = "__seg.op = 'i'"
+    values, set_keys, unset_keys = {}, [], []
+    for path, c in per_path:
+        # apply_update_mongo_doc patches mapped paths only
+        base = "(op = 'i' AND ts = __seg.ts)"
+        if path in mapping:
+            base += (
+                f" OR ({seg_u} AND ({c['has_set']}"
+                f" OR coalesce({c['lit_unset']}, {c['nest_unset']})))"
+            )
+        values[path] = F.expr(
+            last(
+                f"CASE WHEN {patches_insert} THEN {base}"
+                f" ELSE {seg_u} AND {c['w_doc']} END",
+                f"CASE WHEN {patches_insert} AND op = 'u'"
+                f" THEN CASE WHEN {c['has_set']} THEN {c['set']} END"
+                f" ELSE {c['doc']} END",
+            )
+        )
+        set_keys.append(
+            F.expr(last(f"{seg_u} AND {c['w_lit_set']}", c["lit_set"])).alias(
+                path
+            )
+        )
+        if path in mapping:
+            lit = last(f"{seg_u} AND {c['w_lit_unset']}", c["lit_unset"])
+            nested = last(f"{seg_u} AND {c['w_nest_unset']}", c["nest_unset"])
+            unset_keys.append(
+                F.expr(
+                    f"CASE WHEN coalesce({lit}, {nested}, false)"
+                    f" THEN '{path}' END"
+                )
+            )
+
+    folded = events.select(
+        "ns", "id", "ts", "op",
+        F.struct(
+            *nest_target_paths(values), F.struct(*set_keys).alias("$set")
+        ).alias("o"),
+        F.expr(
+            f"coalesce(max(CASE WHEN {seg_u} THEN __plain END) {_KEY_WINDOW},"
+            " false)"
+        ).alias("has_plain"),
+        F.array_compact(F.array(*unset_keys)).alias("unset_keys"),
+    )
+    return compact_events(
+        folded, ["ns", "id"], payload_cols=["o", "has_plain", "unset_keys"]
     )

@@ -142,20 +142,3 @@ def kafka_oplog_stream(
     )
     return parse_kafka_oplog(raw, task, checkpoint)
 
-
-def batch_oplog_frame(spark: SparkSession, rows: list[dict]) -> DataFrame:
-    """Oplog rows as a batch DataFrame (unit tests / replays)."""
-    return spark.createDataFrame(
-        [
-            (
-                r["ts"],
-                r["ns"],
-                r["op"],
-                r["id"],
-                r.get("doc"),
-                r.get("fromMigrate"),
-            )
-            for r in rows
-        ],
-        OPLOG_SCHEMA,
-    )

@@ -56,8 +56,11 @@ def _schema_cache_key(path: str):
 
 
 def _schema_sentinel(path: str):
-    """(relpath, size) of one data file under ``path``, or None."""
-    for root, _dirs, files in os.walk(path):
+    """(relpath, size) of one data file under ``path``, or None.
+    Skips ``_``/``.``-prefixed files and directories, as Spark's file
+    listing does (``_SUCCESS``, ``_params`` sidecars, ``.crc``)."""
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
         for f in sorted(files):
             if not f.startswith(("_", ".")):
                 p = os.path.join(root, f)
@@ -77,14 +80,15 @@ def read_parquet_if_exists(
     an unchanged-layout store reuse the first read's schema (see
     ``_SCHEMA_CACHE``), skipping the per-open schema-inference job.
 
-    A missing local path returns ``None`` without asking Spark: a read
-    that fails analysis is re-analysed, and logged as an ERROR, by the
-    session's observed-metrics listener (``sparkutil.checkpoint_with``
-    registers it)."""
+    A local path that is missing or holds no data file returns
+    ``None`` without asking Spark: a read that fails analysis is
+    re-analysed, and logged as an ERROR, by the session's
+    observed-metrics listener (``sparkutil.checkpoint_with`` registers
+    it)."""
     if "://" not in path and not os.path.exists(path):
         return None
     key = _schema_cache_key(path)
-    cached = None
+    cached = sent = None
     if key is not None:
         ent = _SCHEMA_CACHE.get(key)
         if ent is not None:
@@ -96,6 +100,10 @@ def read_parquet_if_exists(
                     del _SCHEMA_CACHE[key]
             except OSError:
                 del _SCHEMA_CACHE[key]
+        if cached is None:
+            sent = _schema_sentinel(path)
+            if sent is None and os.path.isdir(path):
+                return None
     reader = spark.read if cached is None else spark.read.schema(cached)
     try:
         df = reader.parquet(path)
@@ -113,10 +121,8 @@ def read_parquet_if_exists(
         if any(m in text for m in _MISSING):
             return None
         raise
-    if key is not None and cached is None:
-        sent = _schema_sentinel(path)
-        if sent is not None:
-            _SCHEMA_CACHE[key] = (df.schema, sent)
+    if sent is not None:
+        _SCHEMA_CACHE[key] = (df.schema, sent)
     return df
 
 

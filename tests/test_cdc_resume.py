@@ -12,8 +12,7 @@ import json
 from mongo_es_spark.config import CheckPoint, Controls, Task
 from mongo_es_spark.core import make_ts
 from mongo_es_spark.sources.cdc import (
-
-    batch_oplog_frame,
+    OPLOG_SCHEMA,
     file_oplog_stream,
     ms_to_bson_ts,
     oplog_filters,
@@ -41,14 +40,11 @@ def test_ms_to_bson_ts_matches_make_ts():
 
 def test_resume_filter_keeps_only_events_at_or_after_checkpoint(spark):
     rows = [
-        {"ts": make_ts(100), "ns": "jike.banners", "op": "i", "id": "A",
-         "doc": "{}"},
-        {"ts": make_ts(200), "ns": "jike.banners", "op": "i", "id": "B",
-         "doc": "{}"},
-        {"ts": make_ts(300), "ns": "jike.banners", "op": "i", "id": "C",
-         "doc": "{}"},
+        (make_ts(100), "jike.banners", "i", "A", "{}", None),
+        (make_ts(200), "jike.banners", "i", "B", "{}", None),
+        (make_ts(300), "jike.banners", "i", "C", "{}", None),
     ]
-    df = batch_oplog_frame(spark, rows)
+    df = spark.createDataFrame(rows, OPLOG_SCHEMA)
     since = ms_to_bson_ts(200_000)  # checkpoint at t=200 s in ms
     got = {
         r["id"]

@@ -207,3 +207,27 @@ def test_components_compaction(spark, tmp_path):
         for r in components_over_store(spark, store).collect()
     }
     assert after == {0: 0, 1: 0, 2: 0, 5: 0, 6: 0}
+
+
+def test_dataless_store_dir_reads_as_none_without_spark(tmp_path):
+    """A store directory that holds no data file yet — only a
+    ``_SUCCESS`` marker, a ``_params`` sidecar directory or ``.crc``
+    files, all of which Spark's listing skips — reads as ``None``
+    without asking Spark, whose failed schema inference would be logged
+    as an ERROR by the observed-metrics listener."""
+    from mongo_es_spark.storeio import read_parquet_if_exists
+
+    class NoRead:
+        @property
+        def read(self):
+            raise AssertionError("spark.read reached for a dataless dir")
+
+    marker = tmp_path / "marker"
+    marker.mkdir()
+    (marker / "_SUCCESS").write_bytes(b"")
+    (marker / ".part-0.parquet.crc").write_bytes(b"x")
+    sidecar = tmp_path / "sidecar"
+    (sidecar / "_params").mkdir(parents=True)
+    (sidecar / "_params" / "part-0.parquet").write_bytes(b"x")
+    for path in (marker, sidecar):
+        assert read_parquet_if_exists(NoRead(), str(path)) is None
