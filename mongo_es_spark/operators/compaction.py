@@ -33,16 +33,23 @@ first) or a truthy ``$unset`` (unset before set, as in
 segment of 'u's, ``paths.merge`` merges key by key, so plain values,
 literal ``$set`` keys and ``$unset`` truthiness are independent
 last-writer columns, where a JSON null — also at a prefix — is a write.
-Presence comes from the parsed variant, typed values from ``from_json``
-against ``oplog_value_schema`` (the dispatch's own conversions).  One
-shuffle, no UDF, no state store, no join.
+Each column's winner comes from one window aggregate over the key: the
+last event that writes the column or opens a segment, kept when it is a
+'u' (an insert-opened segment reads its own aggregate).  Presence and
+raw values come from JSON functions on the ``doc`` text
+(``json_object_keys``, ``from_json`` with string fields), ``$unset``
+truthiness from a variant of the one value, typed values from
+``from_json`` against ``oplog_value_schema`` (the dispatch's own
+conversions).  One shuffle and one window, no UDF, no state store, no
+join.
 
 Typed contract, on which the fold equals ``core.merge_oplogs``
 (``test_doc_fold_matches_spec``): mapped paths none a prefix of
-another; values that fit the hints or JSON null at any level; bodies
-that nest their keys (a literal dotted key in a body is invisible to
-the typed read); ``$set``/``$unset`` objects or null; distinct ``ts``
-per key.  A malformed ``doc`` folds like an empty one.
+another; values that fit the hints or JSON null at any level (a string
+at a prefix of a mapped path is read as its JSON content); bodies that
+nest their keys (a literal dotted key in a body is invisible to the
+typed read); ``$set``/``$unset`` objects or null; distinct ``ts`` per
+key.  A ``doc`` that is not a JSON object fails the batch.
 
 Skew note (why there is no salted two-stage variant): the fold is NOT
 associative under arbitrary splitting, so compact-per-(key,salt) then
@@ -67,7 +74,7 @@ from __future__ import annotations
 
 from typing import Mapping, Optional, Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..config import Task
@@ -99,114 +106,148 @@ def compact_events(
     (plus ``tiebreak_col`` when given — the survivor is a real event
     and keeps its identity).
     """
+    return _survivors(
+        df, key_cols, ts_col, op_col,
+        {c: F.col(c) for c in payload_cols}, tiebreak_col,
+    )
+
+
+def _survivors(
+    df: DataFrame,
+    key_cols: Sequence[str],
+    ts_col: str,
+    op_col: str,
+    payload: Mapping[str, Column],
+    tiebreak_col: Optional[str],
+) -> DataFrame:
+    """The survivor window: ``payload`` is evaluated on the key's last
+    event (a window aggregate over the key sees all of its events)."""
     order = [F.col(ts_col).desc()]
     if tiebreak_col:
         order.append(F.col(tiebreak_col).desc())
     w_ordered = Window.partitionBy(*key_cols).orderBy(*order)
-    w_all = (
-        Window.partitionBy(*key_cols)
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    w_all = w_ordered.rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
     )
 
     op = F.col(op_col)
-    rn = F.row_number().over(w_ordered)
-    df = df.withColumn("__rn", rn)
-
-    # latest non-'u' event EXCLUDING the last event == the store's
-    # op right before the final event lands (see module docstring)
-    non_u_prior = (F.col(op_col) != OP_UPDATE) & (F.col("__rn") > 1)
-    prev_nu_op = F.max_by(
-        F.when(non_u_prior, F.col(op_col)),
-        F.when(non_u_prior, -F.col("__rn")),
-    ).over(w_all)
-    df = df.withColumn("__prev_nu_op", prev_nu_op)
-
-    last = df.filter(F.col("__rn") == 1)
+    # on the last event: the latest non-'u' event before it == the
+    # store's op right before the last event lands (see module
+    # docstring) — the first non-'u' of the key when the last event is
+    # a 'u', else the second
+    non_u = F.when(op != OP_UPDATE, op)
+    prev_nu_op = F.when(
+        op == OP_UPDATE, F.nth_value(non_u, 1, True).over(w_all)
+    ).otherwise(F.nth_value(non_u, 2, True).over(w_all))
     # eqNullSafe: no prior non-'u' event (null) means the store did NOT
     # hold an insert — a plain == would null-poison the annihilation
     # filter and silently drop bare deletes
-    store_was_insert = F.col("__prev_nu_op").eqNullSafe(OP_INSERT)
-    survivor_op = (
-        F.when((op == OP_UPDATE) & store_was_insert, F.lit(OP_INSERT))
-        .otherwise(op)
-        .alias(op_col)
-    )
-    payload = [
-        F.when(op == OP_DELETE, F.lit(None)).otherwise(F.col(c)).alias(c)
-        for c in payload_cols
-    ]
-    annihilated = (op == OP_DELETE) & store_was_insert
-    tail_cols = [F.col(ts_col)]
-    if tiebreak_col:
-        tail_cols.append(F.col(tiebreak_col))
-    return last.filter(~annihilated).select(
-        *[F.col(k) for k in key_cols], survivor_op, *payload, *tail_cols
+    store_was_insert = prev_nu_op.eqNullSafe(OP_INSERT)
+    survivor_op = F.when(
+        (op == OP_UPDATE) & store_was_insert, F.lit(OP_INSERT)
+    ).otherwise(op)
+    tail_cols = [ts_col] + ([tiebreak_col] if tiebreak_col else [])
+    return (
+        df.select(
+            *key_cols,
+            survivor_op.alias(op_col),
+            *[
+                F.when(op == OP_DELETE, F.lit(None)).otherwise(v).alias(c)
+                for c, v in payload.items()
+            ],
+            *tail_cols,
+            F.row_number().over(w_ordered).alias("__rn"),
+            ((op == OP_DELETE) & store_was_insert).alias("__annihilated"),
+        )
+        .filter("__rn = 1 AND NOT __annihilated")
+        .drop("__rn", "__annihilated")
     )
 
 
-# The per-event columns are SQL text: built as Column objects, each of
-# their ~100 expressions costs py4j round trips (0.7 s per trigger).
+# The fold's terms are SQL text: built as Column objects, each of their
+# expressions costs py4j round trips.
 _KEY_WINDOW = (
     "OVER (PARTITION BY ns, id ORDER BY ts DESC "
     "ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)"
 )
 
 
-class _EventColumns:
-    """Per-event columns over the parsed document ``__v``, each named
-    (``__e<n>``) and computed once before the shuffle; later ones refer
-    to earlier ones by lateral alias."""
+def _sql_string(text: str) -> str:
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
-    def __init__(self) -> None:
-        self._names: dict[str, str] = {}
 
-    def named(self, sql: str) -> str:
-        return self._names.setdefault(sql, f"__e{len(self._names)}")
-
-    def select_list(self) -> list[str]:
-        return [f"{sql} AS {name}" for sql, name in self._names.items()]
-
-    def node(self, *keys: str) -> str:
-        """The value at ``keys`` as a variant: SQL NULL when absent,
-        variant null for JSON null; a literal dotted key is one step."""
-        if not keys:
-            return "__v"
-        parent = self.node(*keys[:-1])
-        return self.named(
-            f"try_variant_get({parent}, \"$['{keys[-1]}']\", 'variant')"
-        )
-
-    def writes(self, *keys: str) -> str:
-        """Whether ``paths.merge`` of this document changes ``keys``:
-        the leaf is present, or a prefix holds a non-object."""
-        terms = [f"{self.node(*keys)} IS NOT NULL"]
-        for i in range(1, len(keys)):
-            prefix = self.node(*keys[:i])
-            terms.append(
-                self.named(
-                    f"{prefix} IS NOT NULL"
-                    f" AND try_variant_get({prefix}, '$', 'struct<>') IS NULL"
-                )
-            )
-        return self.named(" OR ".join(terms))
-
-    def truthy(self, *keys: str) -> str:
-        """Python truthiness of the value at ``keys``: absent, null,
-        false, 0, "", [] and {} are false."""
-        value = self.node(*keys)
-        text = self.named(f"to_json({value})")
-        return self.named(
-            f"coalesce(NOT is_variant_null({value})"
-            f" AND {text} NOT IN ('false', '\"\"', '[]', '{{}}')"
-            f" AND NOT coalesce(NOT startswith({text}, '\"')"
-            f" AND try_variant_get({value}, '$', 'double') = 0, false),"
-            " false)"
-        )
+def _ident(key: str) -> str:
+    return "`" + key.replace("`", "``") + "`"
 
 
 def _typed(*keys: str) -> str:
-    return "__t." + ".".join(f"`{k}`" for k in keys)
+    return "__t." + ".".join(_ident(k) for k in keys)
+
+
+def _field(container: str, key: str, kind: str) -> str:
+    """Field ``key`` of the JSON object text ``container`` read as
+    ``kind``; a string field holds a value's raw JSON text (a string
+    value unquoted)."""
+    schema = _sql_string(f"struct<{_ident(key)}: {kind}>")
+    return f"from_json({container}, {schema}).{_ident(key)}"
+
+
+def _text(*keys: str) -> str:
+    """The raw JSON text at ``keys`` of the document; NULL when absent
+    or JSON null."""
+    if not keys:
+        return "doc"
+    return _field(_text(*keys[:-1]), keys[-1], "string")
+
+
+def _present(*keys: str) -> str:
+    """Whether the document holds ``keys`` (a JSON null counts)."""
+    return (
+        f"coalesce(array_contains(json_object_keys({_text(*keys[:-1])}),"
+        f" {_sql_string(keys[-1])}), false)"
+    )
+
+
+def _writes(*keys: str) -> str:
+    """Whether ``paths.merge`` of this document changes ``keys``: the
+    leaf is present, or a prefix holds a non-object."""
+    terms = [_present(*keys)]
+    for i in range(1, len(keys)):
+        terms.append(
+            f"{_present(*keys[:i])}"
+            f" AND json_object_keys({_text(*keys[:i])}) IS NULL"
+        )
+    return "(" + " OR ".join(f"({t})" for t in terms) + ")"
+
+
+def _truthy(*keys: str) -> str:
+    """Python truthiness of the value at ``keys``: absent, null, false,
+    0, "", [] and {} are false.  Read as a variant, which keeps the
+    JSON type, only where the key is present."""
+    value = _field(_text(*keys[:-1]), keys[-1], "variant")
+    text = f"to_json({value})"
+    return (
+        f"CASE WHEN {_present(*keys)} THEN coalesce("
+        f"NOT is_variant_null({value})"
+        f" AND {text} NOT IN ('false', '\"\"', '[]', '{{}}')"
+        f" AND NOT coalesce(NOT startswith({text}, '\"')"
+        f" AND try_variant_get({value}, '$', 'double') = 0, false),"
+        " false) ELSE false END"
+    )
+
+
+# the op of the key's last 'i'/'d': the event that opens its segment
+_SEGMENT_OP = f"max_by(op, CASE WHEN op != 'u' THEN ts END) {_KEY_WINDOW}"
+
+
+def _last(writes: str, value: str) -> str:
+    """``value`` at the last event of the key's segment that writes it,
+    NULL when none: among the events that write it or open a segment
+    (an 'i' or a 'd'), the last one, when that is a 'u'."""
+    return (
+        f"max_by(CASE WHEN op = 'u' THEN {value} END,"
+        f" CASE WHEN op != 'u' OR {writes} THEN ts END) {_KEY_WINDOW}"
+    )
 
 
 def compact_oplog_docs(
@@ -219,114 +260,92 @@ def compact_oplog_docs(
     ts``, with ``o`` typed like ``oplog_value_schema(task, hints)``
     (less its nested ``$set`` fields), ``has_plain`` the full-replace
     marker (reference: src/processor.ts:186) and ``unset_keys`` the
-    mapped paths with a truthy ``$unset`` (src/processor.ts:97).  See
-    the module docstring for the rule and its typed contract."""
+    mapped paths with a truthy ``$unset`` (src/processor.ts:97).  A
+    ``doc`` that is not a JSON object fails the batch.  See the module
+    docstring for the rule and its typed contract."""
     mapping = task.transform.mapping
-    ev = _EventColumns()
-    # per path: plain value and merge write; the $set value paths.has
-    # finds; literal $set key; $unset truthiness, literal (NULL when
-    # absent) and nested
-    per_path = []
+    # per-event terms over the document, each computed once before the
+    # shuffle under the name __e<n>
+    terms: dict[str, str] = {}
+
+    def term(sql: str) -> str:
+        return terms.setdefault(sql, f"__e{len(terms)}")
+
+    values, set_keys, unset_keys = {}, [], []
     for path in task.source_paths():
         keys = path.split(".")
-        lit_set = ev.node("$set", path)
-        cols = {
-            "doc": ev.named(_typed(*keys)),
-            "w_doc": ev.writes(*keys),
-            "set": ev.named(
-                f"CASE WHEN {lit_set} IS NOT NULL THEN {_typed('$set', path)}"
-                f" ELSE {_typed('$set', *keys)} END"
-            ),
-            "has_set": ev.named(
-                f"{lit_set} IS NOT NULL"
-                f" OR {ev.node('$set', *keys)} IS NOT NULL"
-            ),
-            "lit_set": ev.named(_typed("$set", path)),
-            "w_lit_set": ev.writes("$set", path),
-        }
-        if path in mapping:
-            cols |= {
-                "lit_unset": ev.named(
-                    f"CASE WHEN {ev.node('$unset', path)} IS NOT NULL"
-                    f" THEN {ev.truthy('$unset', path)} END"
-                ),
-                "w_lit_unset": ev.writes("$unset", path),
-                "nest_unset": ev.truthy("$unset", *keys),
-                "w_nest_unset": ev.writes("$unset", *keys),
-            }
-        per_path.append((path, cols))
-
-    events = (
-        df.select(
-            "ns", "id", "ts", "op",
-            F.try_parse_json("doc").alias("__v"),
-            F.from_json("doc", oplog_value_schema(task, hints)).alias("__t"),
-            F.expr(
-                "exists(json_object_keys(doc),"
-                " k -> NOT startswith(k, '$') AND k != '_id') AS __plain"
-            ),
-        )
-        .selectExpr("ns", "id", "ts", "op", "__plain", *ev.select_list())
-        .withColumn(
-            # the segment start: the key's last 'i'/'d', NULL when none
-            "__seg",
-            F.expr(
-                "max_by(struct(ts, op), CASE WHEN op != 'u' THEN ts END)"
-                f" {_KEY_WINDOW}"
-            ),
-        )
-    )
-
-    def last(writes: str, value: str) -> str:
-        return f"max_by({value}, CASE WHEN {writes} THEN ts END) {_KEY_WINDOW}"
-
-    # the u events of the segment, and whether it opens with an insert
-    seg_u = "(op = 'u' AND (__seg IS NULL OR ts > __seg.ts))"
-    patches_insert = "__seg.op = 'i'"
-    values, set_keys, unset_keys = {}, [], []
-    for path, c in per_path:
-        # apply_update_mongo_doc patches mapped paths only
-        base = "(op = 'i' AND ts = __seg.ts)"
-        if path in mapping:
-            base += (
-                f" OR ({seg_u} AND ({c['has_set']}"
-                f" OR coalesce({c['lit_unset']}, {c['nest_unset']})))"
+        nested = keys != [path]
+        doc = term(_typed(*keys))
+        # the $set value paths.has finds, literal key first
+        lit_set = term(_typed("$set", path))
+        has_set = term(_present("$set", path))
+        set_value = lit_set
+        if nested:
+            has_set = term(
+                f"{_present('$set', path)} OR {_present('$set', *keys)}"
             )
+            set_value = term(
+                f"CASE WHEN {_present('$set', path)}"
+                f" THEN {_typed('$set', path)} ELSE {_typed('$set', *keys)} END"
+            )
+        # $unset truthiness, literal key (NULL when absent) then nested
+        unset = []
+        if path in mapping:
+            if nested:
+                unset.append((
+                    term(_writes("$unset", path)),
+                    term(
+                        f"CASE WHEN {_present('$unset', path)}"
+                        f" THEN {_truthy('$unset', path)} END"
+                    ),
+                ))
+            unset.append(
+                (term(_writes("$unset", *keys)), term(_truthy("$unset", *keys)))
+            )
+        # a segment opened by an insert keeps its value unless a 'u'
+        # $sets the path or truthy-$unsets it (mapped paths only, as
+        # apply_update_mongo_doc); a 'u' segment merges plain values
+        patches = "false"
+        if unset:
+            flags = ", ".join(v for _, v in unset)
+            patches = f"{has_set} OR coalesce({flags}, false)"
+        from_insert = (
+            f"max_by(CASE op WHEN 'i' THEN {doc} WHEN 'u' THEN {set_value} END,"
+            f" CASE WHEN op != 'u' OR {patches} THEN ts END) {_KEY_WINDOW}"
+        )
         values[path] = F.expr(
-            last(
-                f"CASE WHEN {patches_insert} THEN {base}"
-                f" ELSE {seg_u} AND {c['w_doc']} END",
-                f"CASE WHEN {patches_insert} AND op = 'u'"
-                f" THEN CASE WHEN {c['has_set']} THEN {c['set']} END"
-                f" ELSE {c['doc']} END",
-            )
+            f"CASE WHEN {_SEGMENT_OP} = 'i' THEN {from_insert}"
+            f" ELSE {_last(term(_writes(*keys)), doc)} END"
         )
         set_keys.append(
-            F.expr(last(f"{seg_u} AND {c['w_lit_set']}", c["lit_set"])).alias(
-                path
-            )
+            F.expr(_last(term(_writes("$set", path)), lit_set)).alias(path)
         )
-        if path in mapping:
-            lit = last(f"{seg_u} AND {c['w_lit_unset']}", c["lit_unset"])
-            nested = last(f"{seg_u} AND {c['w_nest_unset']}", c["nest_unset"])
+        if unset:
+            lasts = ", ".join(_last(w, v) for w, v in unset)
             unset_keys.append(
                 F.expr(
-                    f"CASE WHEN coalesce({lit}, {nested}, false)"
-                    f" THEN '{path}' END"
+                    f"CASE WHEN coalesce({lasts}, false)"
+                    f" THEN {_sql_string(path)} END"
                 )
             )
 
-    folded = events.select(
+    events = df.select(
         "ns", "id", "ts", "op",
-        F.struct(
+        F.nullif("doc", F.lit("")).alias("doc"),
+        F.from_json("doc", oplog_value_schema(task, hints)).alias("__t"),
+    ).selectExpr(
+        "ns", "id", "ts", "op",
+        "CASE WHEN json_object_keys(doc) IS NULL AND doc IS NOT NULL"
+        " THEN raise_error('oplog doc is not a JSON object')"
+        " ELSE exists(json_object_keys(doc),"
+        " k -> NOT startswith(k, '$') AND k != '_id') END AS __plain",
+        *(f"{sql} AS {name}" for sql, name in terms.items()),
+    )
+    payload = {
+        "o": F.struct(
             *nest_target_paths(values), F.struct(*set_keys).alias("$set")
-        ).alias("o"),
-        F.expr(
-            f"coalesce(max(CASE WHEN {seg_u} THEN __plain END) {_KEY_WINDOW},"
-            " false)"
-        ).alias("has_plain"),
-        F.array_compact(F.array(*unset_keys)).alias("unset_keys"),
-    )
-    return compact_events(
-        folded, ["ns", "id"], payload_cols=["o", "has_plain", "unset_keys"]
-    )
+        ),
+        "has_plain": F.expr(f"coalesce({_last('__plain', 'true')}, false)"),
+        "unset_keys": F.array_compact(F.array(*unset_keys)),
+    }
+    return _survivors(events, ["ns", "id"], "ts", "op", payload, None)

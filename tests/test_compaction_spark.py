@@ -205,6 +205,19 @@ def test_doc_compaction_patches_insert_not_by_plain_update(spark):
     assert by_id["d1"] == ("i", 9, 1)
 
 
+def test_doc_compaction_fails_on_malformed_doc(spark):
+    """A ``doc`` that is not a JSON object is outside input: it fails
+    the batch instead of folding like an empty document."""
+    task = Task({**_DOC_TASK, "transform": {"mapping": {"a": "a"}}})
+    for bad in ['{"a": ', "[1]"]:
+        df = spark.createDataFrame(
+            [(1, "db.c", "i", "d1", bad), (2, "db.c", "u", "d2", "{}")],
+            "ts long, ns string, op string, id string, doc string",
+        )
+        with pytest.raises(Exception, match="not a JSON object"):
+            compact_oplog_docs(df, task).collect()
+
+
 def test_doc_compaction_null_id_rows_survive(spark):
     """Malformed feed rows with a null id must not vanish: null-keyed
     rows fold to one survivor, like any other key."""
@@ -230,14 +243,25 @@ def test_doc_compaction_null_id_rows_survive(spark):
 # collection, and must produce the same IR.
 # ---------------------------------------------------------------------------
 
-_POOL = ["a", "b.c", "b.d", "e.f.g", "h"]
-_TARGET = {"a": "alpha", "b.c": "b.c", "b.d": "bd", "e.f.g": "e.f.g", "h": "h"}
+# field names with quotes, brackets and backslashes are legal in Mongo
+_POOL = ["a", "b.c", "b.d", "e.f.g", "h", "it's", 'q"[\\].r\'s']
+_TARGET = {
+    "a": "alpha",
+    "b.c": "b.c",
+    "b.d": "bd",
+    "e.f.g": "e.f.g",
+    "h": "h",
+    "it's": "its",
+    'q"[\\].r\'s': "q.rs",
+}
 _HINTS = {
     "a": "long",
     "b.c": "string",
     "b.d": "double",
     "e.f.g": "boolean",
     "h": "string",
+    "it's": "long",
+    'q"[\\].r\'s': "string",
     "p": "string",
 }
 # every path a body may carry: the mapped pool, a parent and an
@@ -317,7 +341,7 @@ def _event(draw):
 @st.composite
 def _batch(draw):
     mapped = draw(
-        st.lists(st.sampled_from(_POOL), min_size=1, max_size=5, unique=True)
+        st.lists(st.sampled_from(_POOL), min_size=1, max_size=6, unique=True)
     )
     # the parent is a string (it is compared with the sink's _parent)
     parent = draw(
