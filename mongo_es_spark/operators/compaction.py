@@ -8,8 +8,8 @@ Re-expresses the reference's ``mergeOplogs`` store-fold
     d then u -> u (revives)                   d then i -> i
 
 The reference replays events per key through a mutable store.  The
-Spark-first insight: for a closed set of projected fields, the fold's
-OUTCOME is a pure function of per-key window aggregates —
+Spark-first insight: for a closed set of mapped payload fields, the
+fold's OUTCOME is a pure function of per-key window aggregates —
 
 * the survivor is always the LAST event (ts order) of the key, with
   - op upgraded ``u -> i`` when the store held an insert, and
@@ -17,39 +17,16 @@ OUTCOME is a pure function of per-key window aggregates —
 * "the store held an insert" == the latest non-'u' event before the
   last one is an 'i' (an 'i' stays 'i' under any number of 'u's; any
   'd' either clears it or becomes the store entry);
-* each projected field is decided by ONE event: the last one of the
-  key's SEGMENT that writes it.  The segment starts at the key's last
-  'i'/'d' (else at its first event): those replace the store entry.
+* each mapped payload field's value is last-writer-wins among events
+  that wrote it (insert doc / update $set), because both the i-patch
+  (applyUpdateMongoDoc, processor.ts:272) and the u-merge
+  (_.merge, processor.ts:275) apply later events over earlier ones.
 
-:func:`compact_events` is the flat-row case (every event writes every
-column).  :func:`compact_oplog_docs` is the tail's document-shaped
-case; it folds exactly the projection ``dispatch_ir_frame`` reads
-(typed ``o.<mapped path>``, the literal ``o.$set.<mapped path>`` key,
-``unset_keys``, ``has_plain``, ``op``, ``ts``, ``id``).  In a segment
-that starts with an 'i', a path keeps the insert's value unless a later
-'u' writes it by a ``$set`` that ``paths.has`` finds (literal key
-first) or a truthy ``$unset`` (unset before set, as in
-``apply_update_mongo_doc``); a plain replace does not touch it.  In a
-segment of 'u's, ``paths.merge`` merges key by key, so plain values,
-literal ``$set`` keys and ``$unset`` truthiness are independent
-last-writer columns, where a JSON null — also at a prefix — is a write.
-Each column's winner comes from one window aggregate over the key: the
-last event that writes the column or opens a segment, kept when it is a
-'u' (an insert-opened segment reads its own aggregate).  Presence and
-raw values come from JSON functions on the ``doc`` text
-(``json_object_keys``, ``from_json`` with string fields), ``$unset``
-truthiness from a variant of the one value, typed values from
-``from_json`` against ``oplog_value_schema`` (the dispatch's own
-conversions).  One shuffle and one window, no UDF, no state store, no
-join.
-
-Typed contract, on which the fold equals ``core.merge_oplogs``
-(``test_doc_fold_matches_spec``): mapped paths none a prefix of
-another; values that fit the hints or JSON null at any level (a string
-at a prefix of a mapped path is read as its JSON content); bodies that
-nest their keys (a literal dotted key in a body is invisible to the
-typed read); ``$set``/``$unset`` objects or null; distinct ``ts`` per
-key.  A ``doc`` that is not a JSON object fails the batch.
+That makes compaction ONE shuffle (window partitioned by key) with no
+UDFs, no state store, and no join — it scales to any number of keys.
+Document-shaped tail events (nested docs, sparse ``$set``/``$unset``)
+are folded by ``operators/oplog_compaction.py``, which runs the spec in
+Python: see there for why.
 
 Skew note (why there is no salted two-stage variant): the fold is NOT
 associative under arbitrary splitting, so compact-per-(key,salt) then
@@ -72,14 +49,10 @@ sink's per-key ordering safe across partitions (SURVEY §4).
 
 from __future__ import annotations
 
-from typing import Mapping, Optional, Sequence
+from typing import Optional, Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from ..config import Task
-from ..functions.columns import nest_target_paths
-from ..plans.cdc_schema import oplog_value_schema
 
 OP_INSERT = "i"
 OP_UPDATE = "u"
@@ -106,246 +79,47 @@ def compact_events(
     (plus ``tiebreak_col`` when given — the survivor is a real event
     and keeps its identity).
     """
-    return _survivors(
-        df, key_cols, ts_col, op_col,
-        {c: F.col(c) for c in payload_cols}, tiebreak_col,
-    )
-
-
-def _survivors(
-    df: DataFrame,
-    key_cols: Sequence[str],
-    ts_col: str,
-    op_col: str,
-    payload: Mapping[str, Column],
-    tiebreak_col: Optional[str],
-) -> DataFrame:
-    """The survivor window: ``payload`` is evaluated on the key's last
-    event (a window aggregate over the key sees all of its events)."""
     order = [F.col(ts_col).desc()]
     if tiebreak_col:
         order.append(F.col(tiebreak_col).desc())
     w_ordered = Window.partitionBy(*key_cols).orderBy(*order)
-    w_all = w_ordered.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
+    w_all = (
+        Window.partitionBy(*key_cols)
+        .orderBy(*order)
+        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     )
 
     op = F.col(op_col)
-    # on the last event: the latest non-'u' event before it == the
-    # store's op right before the last event lands (see module
-    # docstring) — the first non-'u' of the key when the last event is
-    # a 'u', else the second
-    non_u = F.when(op != OP_UPDATE, op)
-    prev_nu_op = F.when(
-        op == OP_UPDATE, F.nth_value(non_u, 1, True).over(w_all)
-    ).otherwise(F.nth_value(non_u, 2, True).over(w_all))
+    rn = F.row_number().over(w_ordered)
+    df = df.withColumn("__rn", rn)
+
+    # latest non-'u' event EXCLUDING the last event == the store's
+    # op right before the final event lands (see module docstring)
+    non_u_prior = (F.col(op_col) != OP_UPDATE) & (F.col("__rn") > 1)
+    prev_nu_op = F.max_by(
+        F.when(non_u_prior, F.col(op_col)),
+        F.when(non_u_prior, -F.col("__rn")),
+    ).over(w_all)
+    df = df.withColumn("__prev_nu_op", prev_nu_op)
+
+    last = df.filter(F.col("__rn") == 1)
     # eqNullSafe: no prior non-'u' event (null) means the store did NOT
     # hold an insert — a plain == would null-poison the annihilation
     # filter and silently drop bare deletes
-    store_was_insert = prev_nu_op.eqNullSafe(OP_INSERT)
-    survivor_op = F.when(
-        (op == OP_UPDATE) & store_was_insert, F.lit(OP_INSERT)
-    ).otherwise(op)
-    tail_cols = [ts_col] + ([tiebreak_col] if tiebreak_col else [])
-    return (
-        df.select(
-            *key_cols,
-            survivor_op.alias(op_col),
-            *[
-                F.when(op == OP_DELETE, F.lit(None)).otherwise(v).alias(c)
-                for c, v in payload.items()
-            ],
-            *tail_cols,
-            F.row_number().over(w_ordered).alias("__rn"),
-            ((op == OP_DELETE) & store_was_insert).alias("__annihilated"),
-        )
-        .filter("__rn = 1 AND NOT __annihilated")
-        .drop("__rn", "__annihilated")
+    store_was_insert = F.col("__prev_nu_op").eqNullSafe(OP_INSERT)
+    survivor_op = (
+        F.when((op == OP_UPDATE) & store_was_insert, F.lit(OP_INSERT))
+        .otherwise(op)
+        .alias(op_col)
     )
-
-
-# The fold's terms are SQL text: built as Column objects, each of their
-# expressions costs py4j round trips.
-_KEY_WINDOW = (
-    "OVER (PARTITION BY ns, id ORDER BY ts DESC "
-    "ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)"
-)
-
-
-def _sql_string(text: str) -> str:
-    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-def _ident(key: str) -> str:
-    return "`" + key.replace("`", "``") + "`"
-
-
-def _typed(*keys: str) -> str:
-    return "__t." + ".".join(_ident(k) for k in keys)
-
-
-def _field(container: str, key: str, kind: str) -> str:
-    """Field ``key`` of the JSON object text ``container`` read as
-    ``kind``; a string field holds a value's raw JSON text (a string
-    value unquoted)."""
-    schema = _sql_string(f"struct<{_ident(key)}: {kind}>")
-    return f"from_json({container}, {schema}).{_ident(key)}"
-
-
-def _text(*keys: str) -> str:
-    """The raw JSON text at ``keys`` of the document; NULL when absent
-    or JSON null."""
-    if not keys:
-        return "doc"
-    return _field(_text(*keys[:-1]), keys[-1], "string")
-
-
-def _present(*keys: str) -> str:
-    """Whether the document holds ``keys`` (a JSON null counts)."""
-    return (
-        f"coalesce(array_contains(json_object_keys({_text(*keys[:-1])}),"
-        f" {_sql_string(keys[-1])}), false)"
+    payload = [
+        F.when(op == OP_DELETE, F.lit(None)).otherwise(F.col(c)).alias(c)
+        for c in payload_cols
+    ]
+    annihilated = (op == OP_DELETE) & store_was_insert
+    tail_cols = [F.col(ts_col)]
+    if tiebreak_col:
+        tail_cols.append(F.col(tiebreak_col))
+    return last.filter(~annihilated).select(
+        *[F.col(k) for k in key_cols], survivor_op, *payload, *tail_cols
     )
-
-
-def _writes(*keys: str) -> str:
-    """Whether ``paths.merge`` of this document changes ``keys``: the
-    leaf is present, or a prefix holds a non-object."""
-    terms = [_present(*keys)]
-    for i in range(1, len(keys)):
-        terms.append(
-            f"{_present(*keys[:i])}"
-            f" AND json_object_keys({_text(*keys[:i])}) IS NULL"
-        )
-    return "(" + " OR ".join(f"({t})" for t in terms) + ")"
-
-
-def _truthy(*keys: str) -> str:
-    """Python truthiness of the value at ``keys``: absent, null, false,
-    0, "", [] and {} are false.  Read as a variant, which keeps the
-    JSON type, only where the key is present."""
-    value = _field(_text(*keys[:-1]), keys[-1], "variant")
-    text = f"to_json({value})"
-    return (
-        f"CASE WHEN {_present(*keys)} THEN coalesce("
-        f"NOT is_variant_null({value})"
-        f" AND {text} NOT IN ('false', '\"\"', '[]', '{{}}')"
-        f" AND NOT coalesce(NOT startswith({text}, '\"')"
-        f" AND try_variant_get({value}, '$', 'double') = 0, false),"
-        " false) ELSE false END"
-    )
-
-
-# the op of the key's last 'i'/'d': the event that opens its segment
-_SEGMENT_OP = f"max_by(op, CASE WHEN op != 'u' THEN ts END) {_KEY_WINDOW}"
-
-
-def _last(writes: str, value: str) -> str:
-    """``value`` at the last event of the key's segment that writes it,
-    NULL when none: among the events that write it or open a segment
-    (an 'i' or a 'd'), the last one, when that is a 'u'."""
-    return (
-        f"max_by(CASE WHEN op = 'u' THEN {value} END,"
-        f" CASE WHEN op != 'u' OR {writes} THEN ts END) {_KEY_WINDOW}"
-    )
-
-
-def compact_oplog_docs(
-    df: DataFrame,
-    task: Task,
-    hints: Optional[Mapping[str, object]] = None,
-) -> DataFrame:
-    """Compact oplog rows (sources/cdc.py schema) to at most one
-    survivor per ``(ns, id)``: ``ns, id, op, o, has_plain, unset_keys,
-    ts``, with ``o`` typed like ``oplog_value_schema(task, hints)``
-    (less its nested ``$set`` fields), ``has_plain`` the full-replace
-    marker (reference: src/processor.ts:186) and ``unset_keys`` the
-    mapped paths with a truthy ``$unset`` (src/processor.ts:97).  A
-    ``doc`` that is not a JSON object fails the batch.  See the module
-    docstring for the rule and its typed contract."""
-    mapping = task.transform.mapping
-    # per-event terms over the document, each computed once before the
-    # shuffle under the name __e<n>
-    terms: dict[str, str] = {}
-
-    def term(sql: str) -> str:
-        return terms.setdefault(sql, f"__e{len(terms)}")
-
-    values, set_keys, unset_keys = {}, [], []
-    for path in task.source_paths():
-        keys = path.split(".")
-        nested = keys != [path]
-        doc = term(_typed(*keys))
-        # the $set value paths.has finds, literal key first
-        lit_set = term(_typed("$set", path))
-        has_set = term(_present("$set", path))
-        set_value = lit_set
-        if nested:
-            has_set = term(
-                f"{_present('$set', path)} OR {_present('$set', *keys)}"
-            )
-            set_value = term(
-                f"CASE WHEN {_present('$set', path)}"
-                f" THEN {_typed('$set', path)} ELSE {_typed('$set', *keys)} END"
-            )
-        # $unset truthiness, literal key (NULL when absent) then nested
-        unset = []
-        if path in mapping:
-            if nested:
-                unset.append((
-                    term(_writes("$unset", path)),
-                    term(
-                        f"CASE WHEN {_present('$unset', path)}"
-                        f" THEN {_truthy('$unset', path)} END"
-                    ),
-                ))
-            unset.append(
-                (term(_writes("$unset", *keys)), term(_truthy("$unset", *keys)))
-            )
-        # a segment opened by an insert keeps its value unless a 'u'
-        # $sets the path or truthy-$unsets it (mapped paths only, as
-        # apply_update_mongo_doc); a 'u' segment merges plain values
-        patches = "false"
-        if unset:
-            flags = ", ".join(v for _, v in unset)
-            patches = f"{has_set} OR coalesce({flags}, false)"
-        from_insert = (
-            f"max_by(CASE op WHEN 'i' THEN {doc} WHEN 'u' THEN {set_value} END,"
-            f" CASE WHEN op != 'u' OR {patches} THEN ts END) {_KEY_WINDOW}"
-        )
-        values[path] = F.expr(
-            f"CASE WHEN {_SEGMENT_OP} = 'i' THEN {from_insert}"
-            f" ELSE {_last(term(_writes(*keys)), doc)} END"
-        )
-        set_keys.append(
-            F.expr(_last(term(_writes("$set", path)), lit_set)).alias(path)
-        )
-        if unset:
-            lasts = ", ".join(_last(w, v) for w, v in unset)
-            unset_keys.append(
-                F.expr(
-                    f"CASE WHEN coalesce({lasts}, false)"
-                    f" THEN {_sql_string(path)} END"
-                )
-            )
-
-    events = df.select(
-        "ns", "id", "ts", "op",
-        F.nullif("doc", F.lit("")).alias("doc"),
-        F.from_json("doc", oplog_value_schema(task, hints)).alias("__t"),
-    ).selectExpr(
-        "ns", "id", "ts", "op",
-        "CASE WHEN json_object_keys(doc) IS NULL AND doc IS NOT NULL"
-        " THEN raise_error('oplog doc is not a JSON object')"
-        " ELSE exists(json_object_keys(doc),"
-        " k -> NOT startswith(k, '$') AND k != '_id') END AS __plain",
-        *(f"{sql} AS {name}" for sql, name in terms.items()),
-    )
-    payload = {
-        "o": F.struct(
-            *nest_target_paths(values), F.struct(*set_keys).alias("$set")
-        ),
-        "has_plain": F.expr(f"coalesce({_last('__plain', 'true')}, false)"),
-        "unset_keys": F.array_compact(F.array(*unset_keys)),
-    }
-    return _survivors(events, ["ns", "id"], "ts", "op", payload, None)

@@ -1,4 +1,4 @@
-"""Exact document-level oplog compaction via ``applyInPandas``.
+"""Exact document-level oplog compaction via ``mapInPandas``.
 
 Two compaction implementations exist, picked by payload shape:
 
@@ -8,17 +8,19 @@ Two compaction implementations exist, picked by payload shape:
 * this module — exact reference semantics for *document-shaped* events
   (nested docs, sparse ``$set``/``$unset``, the deep-merge quirks of
   ``_.merge`` at reference src/processor.ts:275), by running the
-  golden-tested pure fold (core.merge_oplogs) inside
-  ``groupBy(ns,id).applyInPandas``.
+  golden-tested pure fold (core.merge_oplogs) over ``(ns, id)`` groups
+  in ``mapInPandas``.
 
-Why applyInPandas is legitimate here (and only here): the u-after-u
-deep merge over arbitrary nested JSON is order-dependent per key and
-not expressible as a fixed-width column computation when the document
-schema is open.  The shuffle is the same single ``(ns, id)`` exchange
-as the declarative path; groups are tiny (events per key per batch);
-transfer is Arrow-batched.  At 100 TB the cost is the shuffle, which
-is unavoidable for per-key compaction, not the Python fold.
-"""
+Why a Python fold here: the fold IS expressible declaratively for the
+closed projection ``dispatch_ir_frame`` reads (per-key window
+aggregates over per-event presence terms; it matched this spec on
+generated batches), but that plan grows with the mapping — about nine
+per-event terms and four or five window aggregates per mapped path —
+and measured slower than this one Python hop: +29% CPU per trigger on
+a four-path patch-heavy tail, 2x at 32 mapped paths (ROADMAP item 3).
+The shuffle is the same single ``(ns, id)`` exchange as the
+declarative path; groups are tiny (events per key per batch); transfer
+is Arrow-batched."""
 
 from __future__ import annotations
 

@@ -11,7 +11,7 @@ examples/config.json:60-80).
 The oplog ``o`` payload parses with ONE schema covering all shapes:
 nested doc fields (insert / full-replace) plus a ``$set`` struct whose
 fields are the *literal dotted* mapped paths (Mongo ``$set`` payloads
-use literal dotted keys — SURVEY §1.2), and the same paths nested.
+use literal dotted keys — SURVEY §1.2).
 """
 
 from __future__ import annotations
@@ -74,14 +74,12 @@ def oplog_value_schema(
     task: Task, hints: Optional[Mapping[str, object]] = None
 ) -> StructType:
     """Schema for the oplog ``doc`` JSON payload: mapped doc fields
-    (nested) + ``$set`` with each path both literal and nested.
-    ``$unset`` is read at compaction time (unset_keys), not typed."""
-    doc = doc_struct(task.source_paths(), hints)
-    set_ = set_struct(task.source_paths(), hints)
-    nested = [f for f in doc.fields if f.name not in set_.fieldNames()]
-    return StructType(
-        [*doc.fields, StructField("$set", StructType([*set_.fields, *nested]))]
-    )
+    (nested) + ``$set`` (literal dotted).  ``$unset`` is extracted at
+    compaction time (unset_keys), not parsed here."""
+    source_paths = task.source_paths()
+    fields = list(doc_struct(source_paths, hints).fields)
+    fields.append(StructField("$set", set_struct(source_paths, hints)))
+    return StructType(fields)
 
 
 def sink_data_schema(

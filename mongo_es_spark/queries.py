@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import Task
-from .operators.compaction import compact_events, compact_oplog_docs
+from .operators.compaction import compact_events
 from .plans.scan import scan_mapped_frame
 from .sources.tables import load_table
 
@@ -5552,6 +5552,7 @@ def cdc_full_replace(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same code the streaming tail executes per micro-batch
     (reference: src/processor.ts:186 replace detect, :202 lookup
     fallback)."""
+    from .operators.oplog_compaction import compact_oplog_docs
     from .streaming.tail import dispatch_ir_frame
 
     task = Task(
@@ -5595,14 +5596,18 @@ def cdc_full_replace(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id").cast("string").alias("id"),
         doc.alias("doc"),
     )
-    compacted = compact_oplog_docs(frame, task, hints={"value": "double"})
+    compacted = compact_oplog_docs(frame, task)
     source_df = ev.select(
         F.col("event_id").alias("_id"),
         F.lit(-1.0).alias("value"),
         F.lit("src").alias("name"),
     )
     irs = dispatch_ir_frame(
-        compacted, task, sink_state=None, source_df=source_df
+        compacted,
+        task,
+        sink_state=None,
+        source_df=source_df,
+        hints={"value": "double"},
     )
     return irs.select(
         "action",

@@ -4,7 +4,7 @@ Re-expresses the reference's event loop (C5 dispatch at
 src/processor.ts:171-223, driven from _processOplogSafe at :373-396) as
 a declarative per-batch DataFrame plan:
 
-    compact (per-key window fold, operators/compaction.py)
+    compact (exact per-key fold, operators/oplog_compaction.py)
       -> relevance filter (F4, ignoreUpdate)
       -> LEFT JOIN sink state by id   (J1/J2 — replaces the mget/terms
                                        promise batcher wholesale)
@@ -18,10 +18,6 @@ src/elasticsearch.ts:30-148).  Spark's set-oriented execution subsumes
 that: the per-batch equi-join IS the batched lookup, done properly —
 partitioned, spillable, AQE-sized.  Micro-batch serialization (A3) is
 Structured Streaming's native execution model.
-
-Compaction (A1) folds each key's events with window aggregates into
-the typed columns the dispatch reads (operators/compaction.py): no
-event crosses into Python and nothing is re-parsed.
 
 Scale notes: both joins key on ``id``; the sink-state join is a
 shuffle join whose build side is bounded by the batch's key count
@@ -37,8 +33,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import CheckPoint, Controls, Task
-from ..operators.compaction import compact_oplog_docs
-from ..plans.cdc_schema import sink_data_schema
+from ..operators.oplog_compaction import compact_oplog_docs
+from ..plans.cdc_schema import oplog_value_schema, sink_data_schema
 from ..functions.columns import nest_target_paths
 from ..ratelimit import throttle
 from ..sparkutil import checkpoint_with
@@ -58,11 +54,12 @@ def dispatch_ir_frame(
     task: Task,
     sink_state: Optional[DataFrame],
     source_df: Optional[DataFrame] = None,
+    hints: Optional[Mapping[str, object]] = None,
 ) -> DataFrame:
-    """Compacted survivors (``compact_oplog_docs``) -> IR rows (action,
-    id, parent, data, timestamp).  Pure column expressions over two
-    left joins."""
-    df = compacted
+    """Compacted survivors -> IR rows (action, id, parent, data,
+    timestamp).  Pure column expressions over two left joins."""
+    o_schema = oplog_value_schema(task, hints)
+    df = compacted.withColumn("o", F.from_json("doc", o_schema))
 
     mapping = task.transform.mapping
     op = F.col("op")
@@ -130,10 +127,10 @@ def dispatch_ir_frame(
         # precedence mirrors applyUpdateESDoc (processor.ts:107-121):
         # unset applies first, then a present $set overwrites — so when
         # both touch a field, $set wins.  Divergence (documented): the
-        # typed o.$set column can't distinguish an explicit $set null
+        # typed from_json path can't distinguish an explicit $set null
         # from an absent key, so a $set of literal null falls through
         # to unset/sink state where the reference would write null —
-        # detecting it would need a presence column from the fold.
+        # detecting it would need a JSON-map sidecar per batch.
         patched = (
             F.when(set_val.isNotNull(), set_val)
             .when(unset_flag, F.lit(None))
@@ -245,7 +242,7 @@ def run_tail(
         if task.transform.parent:
             consults = consults | (F.col("op") == "d")
         compacted, seen = checkpoint_with(
-            compact_oplog_docs(batch_df, task, hints),
+            compact_oplog_docs(batch_df, task),
             consults_state=F.max(consults.cast("int")),
             max_ts=F.max("ts"),
         )
@@ -269,7 +266,7 @@ def run_tail(
                         "data_json", sink_data_schema(task, hints)
                     ).alias("data"),
                 )
-        irs = dispatch_ir_frame(compacted, task, state, source_df)
+        irs = dispatch_ir_frame(compacted, task, state, source_df, hints)
         sink.apply(spark, irs, batch_id)
         if seen["max_ts"] is not None:
             # BSON-style ts: seconds in the high 32 bits

@@ -5,21 +5,13 @@ Spark-first redesign."""
 
 from __future__ import annotations
 
-import json
 import random
 
 import pytest
-from hypothesis import given, settings
-from hypothesis import strategies as st
-from pyspark.sql.types import StringType
 
-from mongo_es_spark import paths
 from mongo_es_spark.config import Task
 from mongo_es_spark.core import make_ts, merge_oplogs
-from mongo_es_spark.operators.compaction import (
-    compact_events,
-    compact_oplog_docs,
-)
+from mongo_es_spark.operators.compaction import compact_events
 
 TASK = Task({"transform": {"mapping": {"value": "value"}}})
 
@@ -170,20 +162,26 @@ def test_checkpoint_replay_associativity_randomized(spark):
         assert got == full, f"trial {trial} split {split_ts}"
 
 
-_DOC_TASK = {
-    "extract": {"db": "db", "collection": "c"},
-    "load": {"index": "c", "type": "doc"},
-}
+def test_doc_compaction_groups_straddling_arrow_batches(spark):
+    """The mapInPandas fold carries a group split across Arrow batch
+    boundaries: with a 3-row batch cap, multi-event groups must still
+    fold to exactly the same survivors as the unconstrained run."""
+    import json
 
+    from mongo_es_spark.config import Task
+    from mongo_es_spark.operators.oplog_compaction import (
+        compact_oplog_docs,
+    )
 
-def test_doc_compaction_patches_insert_not_by_plain_update(spark):
-    """i∘u folds the update's $set into the insert; a PLAIN update has
-    no $set, so the reference merge leaves the insert unchanged
-    (full-replace handling is dispatch-time, for standalone updates —
-    processor.ts:186; merge only consumes operator-shaped docs)."""
-    task = Task({**_DOC_TASK, "transform": {"mapping": {"a": "a", "b": "b"}}})
+    task = Task(
+        {
+            "extract": {"db": "db", "collection": "c"},
+            "transform": {"mapping": {"a": "a", "b": "b"}},
+            "load": {"index": "c", "type": "doc"},
+        }
+    )
     rows = []
-    # 6 ids x 3-4 events each: i, $set patch, $set patch, plain replace
+    # 6 ids x 4 events each: i, $set patch, $set patch, plain replace
     for i in range(6):
         rid = f"d{i}"
         rows += [
@@ -198,30 +196,53 @@ def test_doc_compaction_patches_insert_not_by_plain_update(spark):
     df = spark.createDataFrame(
         rows, "ts long, ns string, op string, id string, doc string"
     )
-    out = compact_oplog_docs(df, task, {"a": "long", "b": "long"}).collect()
-    assert len(out) == 6  # one survivor per id
-    by_id = {r["id"]: (r["op"], r["o"]["a"], r["o"]["b"]) for r in out}
-    assert by_id["d0"] == ("i", 9, 0)
-    assert by_id["d1"] == ("i", 9, 1)
 
-
-def test_doc_compaction_fails_on_malformed_doc(spark):
-    """A ``doc`` that is not a JSON object is outside input: it fails
-    the batch instead of folding like an empty document."""
-    task = Task({**_DOC_TASK, "transform": {"mapping": {"a": "a"}}})
-    for bad in ['{"a": ', "[1]"]:
-        df = spark.createDataFrame(
-            [(1, "db.c", "i", "d1", bad), (2, "db.c", "u", "d2", "{}")],
-            "ts long, ns string, op string, id string, doc string",
+    def run():
+        out = compact_oplog_docs(df, task).collect()
+        return sorted(
+            (r["id"], r["op"], json.loads(r["doc"]), r["has_plain"])
+            for r in out
         )
-        with pytest.raises(Exception, match="not a JSON object"):
-            compact_oplog_docs(df, task).collect()
+
+    base = run()
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "3")
+    try:
+        tiny = run()
+    finally:
+        spark.conf.set(
+            "spark.sql.execution.arrow.maxRecordsPerBatch", old
+        )
+    assert tiny == base
+    assert len(base) == 6  # one survivor per id
+    # i∘u folds the update's $set into the insert; a PLAIN update has
+    # no $set, so the reference merge leaves the insert unchanged
+    # (full-replace handling is dispatch-time, for standalone updates
+    # — processor.ts:186; merge only consumes operator-shaped docs)
+    by_id = {i: (op, doc) for i, op, doc, _ in base}
+    assert by_id["d0"] == ("i", {"a": 9, "b": 0})
+    assert by_id["d1"] == ("i", {"a": 9, "b": 1})
 
 
 def test_doc_compaction_null_id_rows_survive(spark):
-    """Malformed feed rows with a null id must not vanish: null-keyed
-    rows fold to one survivor, like any other key."""
-    task = Task({**_DOC_TASK, "transform": {"mapping": {"a": "a"}}})
+    """Malformed feed rows with a null id must neither vanish
+    (pandas groupby dropna) nor crash the tail-split when a batch
+    ends on a null-keyed row — they come through as null-id
+    survivors."""
+    import json
+
+    from mongo_es_spark.config import Task
+    from mongo_es_spark.operators.oplog_compaction import (
+        compact_oplog_docs,
+    )
+
+    task = Task(
+        {
+            "extract": {"db": "db", "collection": "c"},
+            "transform": {"mapping": {"a": "a"}},
+            "load": {"index": "c", "type": "doc"},
+        }
+    )
     rows = [
         (1, "db.c", "i", "d1", json.dumps({"a": 1})),
         (2, "db.c", "i", None, json.dumps({"a": 2})),
@@ -235,232 +256,25 @@ def test_doc_compaction_null_id_rows_survive(spark):
     assert ids == ["d1", None]  # null-id rows compact to one survivor
 
 
-# ---------------------------------------------------------------------------
-# Document-shaped fold vs the spec.  The reference side replays
-# core.merge_oplogs per key on the driver and parses each survivor with
-# the typed schema; the subject is the window fold.  Both go through
-# dispatch_ir_frame against the same generated sink state and source
-# collection, and must produce the same IR.
-# ---------------------------------------------------------------------------
-
-# field names with quotes, brackets and backslashes are legal in Mongo
-_POOL = ["a", "b.c", "b.d", "e.f.g", "h", "it's", 'q"[\\].r\'s']
-_TARGET = {
-    "a": "alpha",
-    "b.c": "b.c",
-    "b.d": "bd",
-    "e.f.g": "e.f.g",
-    "h": "h",
-    "it's": "its",
-    'q"[\\].r\'s': "q.rs",
-}
-_HINTS = {
-    "a": "long",
-    "b.c": "string",
-    "b.d": "double",
-    "e.f.g": "boolean",
-    "h": "string",
-    "it's": "long",
-    'q"[\\].r\'s': "string",
-    "p": "string",
-}
-# every path a body may carry: the mapped pool, a parent and an
-# unmapped field
-_BODY_PATHS = _POOL + ["p", "z"]
-_LEAF = {
-    "long": st.integers(-2, 2),
-    "string": st.sampled_from(["", "x", "yz"]),
-    "double": st.sampled_from([0.0, 1.5, -2.25]),
-    "boolean": st.booleans(),
-}
-_UNSET_VALUE = st.sampled_from([1, True, "x", "0", 0, 0.0, False, "", None])
-
-
-def _value(path):
-    return st.one_of(st.none(), _LEAF[_HINTS.get(path, "string")])
-
-
-def _prefix(path, draw):
-    keys = path.split(".")
-    return ".".join(keys[: draw(st.integers(1, len(keys)))])
-
-
-@st.composite
-def _body(draw):
-    """A nested document: per path absent, a value (JSON null
-    included), or a null at some prefix."""
-    doc: dict = {}
-    for path in _BODY_PATHS:
-        mode = draw(st.sampled_from(["absent", "value", "value", "null"]))
-        if mode == "value":
-            paths.set_(doc, path, draw(_value(path)))
-        elif mode == "null":
-            paths.set_(doc, _prefix(path, draw), None)
-    return doc
-
-
-@st.composite
-def _container(draw, leaf):
-    """A $set / $unset object: per path absent, a literal dotted key, a
-    nested key (merged with siblings), or a null at a prefix; or the
-    whole container null."""
-    if draw(st.integers(0, 9)) == 0:
-        return None
-    out: dict = {}
-    for path in _BODY_PATHS:
-        mode = draw(
-            st.sampled_from(["absent", "absent", "literal", "nested", "null"])
-        )
-        if mode == "literal":
-            out[path] = draw(leaf(path))
-        elif mode == "nested":
-            paths.set_(out, path, draw(leaf(path)))
-        elif mode == "null":
-            paths.set_(out, _prefix(path, draw), None)
-    return out
-
-
-@st.composite
-def _event(draw):
-    op = draw(st.sampled_from("iuuuud"))
-    if op == "i":
-        return op, draw(_body())
-    if op == "d":
-        return op, {}
-    kind = draw(st.sampled_from(["set", "unset", "both", "plain"]))
-    if kind == "plain":
-        return op, draw(_body())
-    doc = {}
-    if kind in ("set", "both"):
-        doc["$set"] = draw(_container(_value))
-    if kind in ("unset", "both"):
-        doc["$unset"] = draw(_container(lambda _p: _UNSET_VALUE))
-    return op, doc
-
-
-@st.composite
-def _batch(draw):
-    mapped = draw(
-        st.lists(st.sampled_from(_POOL), min_size=1, max_size=6, unique=True)
-    )
-    # the parent is a string (it is compared with the sink's _parent)
-    parent = draw(
-        st.sampled_from([None, "p"] + [m for m in mapped if m in ("b.c", "h")])
-    )
-    transform = {"mapping": {p: _TARGET[p] for p in mapped}}
-    if parent:
-        transform["parent"] = parent
-    if draw(st.booleans()):
-        transform["static"] = {"kind": "k"}
-    task = Task({**_DOC_TASK, "transform": transform})
-    events, sink, source = [], [], []
-    ts = 100
-    for k in range(draw(st.integers(8, 24))):
-        key = f"k{k}"
-        for op, doc in draw(st.lists(_event(), min_size=1, max_size=5)):
-            ts += draw(st.integers(1, 3))  # distinct ts per key
-            events.append((make_ts(ts), "db.c", op, key, json.dumps(doc)))
-        if draw(st.booleans()):
-            data = dict.fromkeys(transform.get("static", {}), "k")
-            for src in mapped:
-                paths.set_(data, _TARGET[src], draw(_value(src)))
-            sink.append((key, draw(st.sampled_from([None, "P1"])), data))
-        if draw(st.booleans()):
-            row = {"_id": key}
-            for src in task.source_paths():
-                paths.set_(row, src, draw(_value(src)))
-            source.append(row)
-    return task, draw(st.permutations(events)), sink, source
-
-
-def _spec_rows(task, events):
-    """core.merge_oplogs per (ns, id) group, each survivor as
-    (ts, ns, op, id, doc, has_plain, unset_keys)."""
-    groups: dict = {}
-    for row in events:
-        groups.setdefault((row[1], row[3]), []).append(row)
-    out = []
-    for (ns, doc_id), rows in groups.items():
-        oplogs = []
-        for ts, _ns, op, _id, doc_json in sorted(rows):
-            o = json.loads(doc_json) if doc_json else {}
-            lg = {"ts": ts, "ns": ns, "op": op}
-            if op == "u":
-                lg["o"], lg["o2"] = o, {"_id": doc_id}
-            else:
-                o.setdefault("_id", doc_id)
-                lg["o"] = o
-            oplogs.append(lg)
-        for lg in merge_oplogs(task, oplogs):
-            raw_id = lg["o2"]["_id"] if lg["op"] == "u" else lg["o"].get("_id")
-            doc = {k: v for k, v in lg["o"].items() if k != "_id"}
-            unset = doc.get("$unset") or {}
-            out.append(
-                (
-                    lg["ts"],
-                    ns,
-                    lg["op"],
-                    None if raw_id is None else str(raw_id),
-                    json.dumps(doc),
-                    any(not k.startswith("$") for k in doc),
-                    [k for k in task.transform.mapping if paths.get(unset, k)],
-                )
-            )
-    return out
-
-
-@settings(max_examples=10, deadline=None)
-@given(batch=_batch())
-def test_doc_fold_matches_spec(spark, batch):
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StructField, StructType
-
-    from mongo_es_spark.plans.cdc_schema import (
-        doc_struct,
-        oplog_value_schema,
-        sink_data_schema,
-    )
-    from mongo_es_spark.streaming.tail import dispatch_ir_frame
-
-    task, events, sink, source = batch
-    spec = spark.createDataFrame(
-        _spec_rows(task, events),
-        "ts long, ns string, op string, id string, doc string, "
-        "has_plain boolean, unset_keys array<string>",
-    ).withColumn("o", F.from_json("doc", oplog_value_schema(task, _HINTS)))
-    folded = compact_oplog_docs(
-        spark.createDataFrame(
-            events, "ts long, ns string, op string, id string, doc string"
-        ),
-        task,
-        _HINTS,
-    )
-    state = spark.createDataFrame(
-        sink,
-        StructType(
-            [
-                StructField("_id", StringType()),
-                StructField("_parent", StringType()),
-                StructField("data", sink_data_schema(task, _HINTS)),
-            ]
-        ),
-    )
-    src = spark.createDataFrame(
-        source,
-        StructType(
-            [StructField("_id", StringType())]
-            + list(doc_struct(task.source_paths(), _HINTS).fields)
-        ),
+def test_doc_compaction_fails_on_malformed_doc(spark):
+    """A ``doc`` that is not JSON is outside input: it fails the batch
+    instead of folding like an empty document (which would overwrite
+    the sink document with an all-null insert)."""
+    from mongo_es_spark.config import Task
+    from mongo_es_spark.operators.oplog_compaction import (
+        compact_oplog_docs,
     )
 
-    def ir(compacted, side):
-        return dispatch_ir_frame(compacted, task, state, src).withColumn(
-            "side", F.lit(side)
-        )
-
-    rows = ir(spec, "spec").unionByName(ir(folded, "fold")).collect()
-    got = {"spec": [], "fold": []}
-    for r in rows:
-        d = r.asDict(recursive=True)
-        got[d.pop("side")].append(json.dumps(d, sort_keys=True))
-    assert sorted(got["fold"]) == sorted(got["spec"])
+    task = Task(
+        {
+            "extract": {"db": "db", "collection": "c"},
+            "transform": {"mapping": {"a": "a"}},
+            "load": {"index": "c", "type": "doc"},
+        }
+    )
+    df = spark.createDataFrame(
+        [(1, "db.c", "i", "d1", '{"a": '), (2, "db.c", "u", "d2", "{}")],
+        "ts long, ns string, op string, id string, doc string",
+    )
+    with pytest.raises(Exception, match="JSONDecodeError"):
+        compact_oplog_docs(df, task).collect()

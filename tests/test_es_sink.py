@@ -403,7 +403,7 @@ def test_parent_routed_delete_replay_is_noop(spark, stub_es):
 
     from mongo_es_spark.config import Task
     from mongo_es_spark.core import make_ts
-    from mongo_es_spark.operators.compaction import compact_oplog_docs
+    from mongo_es_spark.operators.oplog_compaction import compact_oplog_docs
     from mongo_es_spark.plans.cdc_schema import sink_data_schema
     from mongo_es_spark.streaming.tail import dispatch_ir_frame
 
@@ -426,7 +426,7 @@ def test_parent_routed_delete_replay_is_noop(spark, stub_es):
             "ts long, ns string, op string, id string, doc string, "
             "fromMigrate boolean",
         )
-        compacted = compact_oplog_docs(batch, task, hints)
+        compacted = compact_oplog_docs(batch, task)
         state = sink.read_state(
             spark, ids=compacted.select("id").distinct()
         )
@@ -441,9 +441,9 @@ def test_parent_routed_delete_replay_is_noop(spark, stub_es):
         # pin the IR before applying: the frame is lazy, and counting
         # it after apply would re-run the live-index lookup against
         # post-delete state
-        irs = dispatch_ir_frame(compacted, task, state).localCheckpoint(
-            eager=True
-        )
+        irs = dispatch_ir_frame(
+            compacted, task, state, None, hints
+        ).localCheckpoint(eager=True)
         n = irs.count()
         sink.apply(spark, irs, 0)
         return n

@@ -101,65 +101,6 @@ def test_compaction_is_one_exchange(spark):
     assert n_exchanges(plan) == 1
 
 
-def test_tail_batch_plan_is_jvm_only(spark):
-    """A tail batch's compaction and dispatch plan as one relational
-    plan: no Python worker node anywhere (throttling off), the fold is
-    the one (ns, id) shuffle, and the two id lookup joins add at most
-    one exchange per side — the fold's output is re-shuffled by id
-    once and feeds both joins."""
-    import json
-
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    from mongo_es_spark.config import Task
-    from mongo_es_spark.operators.compaction import compact_oplog_docs
-    from mongo_es_spark.plans.cdc_schema import sink_data_schema
-    from mongo_es_spark.sources.cdc import OPLOG_SCHEMA
-    from mongo_es_spark.streaming.tail import dispatch_ir_frame
-
-    task = Task(
-        {
-            "extract": {"db": "db", "collection": "c"},
-            "transform": {
-                "mapping": {"name": "name", "stats.views": "stats.views"},
-                "parent": "p",
-            },
-            "load": {"index": "c", "type": "doc"},
-        }
-    )
-    hints = {"stats.views": "long"}
-    batch = spark.createDataFrame(
-        [(1, "db.c", "u", "a", json.dumps({"$set": {"name": "x"}}), None)],
-        OPLOG_SCHEMA,
-    )
-    state = spark.createDataFrame(
-        [("a", None, {"name": "y", "stats": {"views": 1}})],
-        StructType(
-            [
-                StructField("_id", StringType()),
-                StructField("_parent", StringType()),
-                StructField("data", sink_data_schema(task, hints)),
-            ]
-        ),
-    )
-    source = spark.createDataFrame(
-        [("a", "n", (3,), "pp")],
-        "_id string, name string, stats struct<views: long>, p string",
-    )
-    compacted = compact_oplog_docs(batch, task, hints)
-    assert n_exchanges(plan_of(compacted)) == 1
-    plan = plan_of(dispatch_ir_frame(compacted, task, state, source))
-    for node in (
-        "MapInPandas",
-        "PythonUDF",
-        "ArrowEvalPython",
-        "BatchEvalPython",
-        "FlatMapGroupsInPandas",
-    ):
-        assert node not in plan
-    assert n_exchanges(plan) <= 4
-
-
 @pytest.mark.parametrize(
     "name",
     [
